@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.util.regex.Pattern
+
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
@@ -123,13 +125,21 @@ object Scalars {
   // ---------------------------------------------------------------------------
   final case class ParsedNote(role: String, company: String, matchedTag: String)
 
+  // the chain's patterns, compiled once: String.replaceAll and a
+  // multi-character String.split recompile their regex on every call
+  private val noteSymbols = Pattern.compile("""[!@#*$()\\\[\]]""")
+  private val noteEpisodes = Pattern.compile("""(\w+)\s(\bepisodes),?(\s\w+)?(-\w+)?""")
+  private val noteAlias = Pattern.compile("""\suncredited|\sas\s.*$""")
+  private val noteCompanyType = Pattern.compile("""(?:\sltd|\sinc)\.|(?:\sltd|\sinc)""")
+  private val noteUnitSep = Pattern.compile(" - ")
+
   def parseNotesRaw(notes: String, companyTag: String): ParsedNote = {
     if (notes == null) return ParsedNote("", "", "")
-    var filtered = notes.replaceAll("""[!@#*$()\\\[\]]""", "").toLowerCase
+    var filtered = noteSymbols.matcher(notes).replaceAll("").toLowerCase
     filtered = filtered.replace("\"", "'")
-    filtered = filtered.replaceAll("""(\w+)\s(\bepisodes),?(\s\w+)?(-\w+)?""", "")
-    filtered = filtered.replaceAll("""\suncredited|\sas\s.*$""", "")
-    filtered = filtered.replaceAll("""(?:\sltd|\sinc)\.|(?:\sltd|\sinc)""", "")
+    filtered = noteEpisodes.matcher(filtered).replaceAll("")
+    filtered = noteAlias.matcher(filtered).replaceAll("")
+    filtered = noteCompanyType.matcher(filtered).replaceAll("")
     filtered = filtered.trim
 
     val splitRole = filtered.split(":", -1)
@@ -139,7 +149,7 @@ object Scalars {
     if (splitRole.length > 1) {
       role = splitRole(0).trim
       comp = splitRole(1).trim
-      val splitComp = comp.split(" - ", -1)
+      val splitComp = noteUnitSep.split(comp, -1)
       if (companyTag.nonEmpty && comp.contains(companyTag)) matchedTag = companyTag
       val division = splitComp(0).split(",", -1)
       if (division.length > 1) {
@@ -231,11 +241,13 @@ object Scalars {
   private val monthNames = Array("", "january", "february", "march", "april", "may", "june",
     "july", "august", "september", "october", "november", "december")
 
+  private val dateTagOrPrefix = Pattern.compile("""\([^)]+\)|^[^::]*::""")
+
   def parseEarliestDateRaw(dates: Seq[String]): String = {
     if (dates == null) return ""
     dates.foreach { date =>
       if (date != null) {
-        val clean = date.replaceAll("""\([^)]+\)|^[^::]*::""", "").trim
+        val clean = dateTagOrPrefix.matcher(date).replaceAll("").trim
         val parts = clean.split(" ")
         if (parts.length == 3) {
           val monthIdx = monthNames.indexWhere(_.equalsIgnoreCase(parts(1)))

@@ -432,7 +432,7 @@ object Graph {
     val ndPlan = nodes.select(col("node"))
     val nd = (if (copartition) ndPlan.repartition(col("node")) else ndPlan)
       .ckpt()
-    val e0 = edges.select(col("src"), col("dst"), col("w"))
+    val e0 = hitsEdges(edges)
     val e = (if (copartition) e0.repartition(col("src")) else e0).persist()
     // derived from the PERSISTED e, not e0: building the dst copy from
     // the raw plan would re-run the whole upstream edge derivation
@@ -492,6 +492,14 @@ object Graph {
         coalesce(col("auth"), lit(0.0)).as("auth"))
   }
 
+  /** The HITS edge list without edges that lack an endpoint: the
+    * half-step rollup picks its L1 total out as the `node IS NULL` row,
+    * so a null `dst` (or `src`, in the hub direction) would add a second
+    * null-keyed row and duplicate every normalized vector row. */
+  private def hitsEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), col("w"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+
   /** The HITS half-step aggregate — pagerank's [[contribOf]] in both edge
     * directions (authority: sum over in-edges; hub: sum over out-edges),
     * as a ROLLUP so the L1 normalizer is the grouping-total row
@@ -514,7 +522,7 @@ object Graph {
     val ndPlan = nodes.select(col("node"))
     val nd = (if (copartition) ndPlan.repartition(col("node")) else ndPlan)
       .ckpt()
-    val e0 = edges.select(col("src"), col("dst"), col("w"))
+    val e0 = hitsEdges(edges)
     val e = (if (copartition) e0.repartition(col("src")) else e0).ckpt()
     val eDst = if (copartition) e.repartition(col("dst")).ckpt() else e
     def side(v: DataFrame): DataFrame =

@@ -112,13 +112,6 @@ object Dedup {
     df.join(keep, Seq(id), "left_semi")
   }
 
-  /** MinHash signature: for seed s, min over shingles of a 64-bit hash.
-    * Uses the native MinHashSignature Catalyst expression — the equivalent
-    * `array(array_min(transform(...)) * numHashes)` column composition is
-    * semantically identical but costs ~60s of Janino codegen per plan. */
-  def minhashSignature(sh: Column, numHashes: Int): Column =
-    graft.functions.MinHashSignature(sh, numHashes)
-
   /** Banded-LSH candidate pairs: signature split into `bands` bands of
     * `rows` hashes; docs sharing any (band, band-hash) bucket become a
     * candidate pair (id1 < id2, distinct). Only (bucket, id) tuples are
@@ -152,18 +145,41 @@ object Dedup {
     df.select(col(id).as("doc"), sig.as("sig")).ckpt()
   }
 
-  def minhashCandidatesFromSig(sig: DataFrame, bands: Int, rows: Int): DataFrame = {
-    val banded = sig.select(col("doc"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"), xxhash64(slice(col("sig"), b * rows + 1, rows)).as("bucket"))
-      }: _*)).as("bb"))
-      .select(col("doc"), col("bb.band"), col("bb.bucket"))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-              col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id1"), col("b.doc").as("id2"))
-      .distinct()
+  def minhashCandidatesFromSig(sig: DataFrame, bands: Int, rows: Int): DataFrame =
+    bucketPairs(sig, sigBands(bands, rows).map(xxhash64(_)))
+
+  /** The `bands` band keys of a `sig` column: `rows` consecutive
+    * signature entries each, raw (hash them for a compact bucket key). */
+  private[graft] def sigBands(bands: Int, rows: Int): Seq[Column] =
+    (0 until bands).map(b => slice(col("sig"), b * rows + 1, rows))
+
+  /** One row per (doc, band) of `df`: its `doc` and `carry` columns, the
+    * band index `band` and that band's bucket `key` (`keys(band)`). */
+  private def bucketRows(df: DataFrame, keys: Seq[Column],
+                         carry: Seq[String] = Nil): DataFrame = {
+    val kept = ("doc" +: carry).map(col)
+    df.select(kept :+ explode(array(keys.zipWithIndex.map { case (k, b) =>
+        struct(lit(b).as("band"), k.as("key"))
+      }: _*)).as("bb"): _*)
+      .select(kept :+ col("bb.band").as("band") :+ col("bb.key").as("key"): _*)
+  }
+
+  /** The bucket self-join behind every banded candidate stage: docs of
+    * `df` sharing any (band, key) bucket of [[bucketRows]] become
+    * distinct (id1 < id2) pairs. Only (bucket, doc) tuples shuffle. `pair`
+    * columns are computed over the joined sides `a`/`b` (which hold the
+    * `carry` columns), and `keep` filters the pairs BEFORE the distinct:
+    * a pair-determined filter gives the same distinct set, and the dedup
+    * shuffle then carries only kept pairs. */
+  private[graft] def bucketPairs(df: DataFrame, keys: Seq[Column],
+                                 carry: Seq[String] = Nil, pair: Seq[Column] = Nil,
+                                 keep: Option[Column] = None): DataFrame = {
+    val rows = bucketRows(df, keys, carry)
+    val pairs = rows.as("a").join(rows.as("b"),
+        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+          col("a.doc") < col("b.doc"))
+      .select(col("a.doc").as("id1") +: col("b.doc").as("id2") +: pair: _*)
+    keep.fold(pairs)(pairs.filter).distinct()
   }
 
   /** Verify candidates with true shingle Jaccard; keep pairs >= threshold.
@@ -583,28 +599,22 @@ object Dedup {
   /** Near-dup pairs by SimHash hamming distance <= maxDist, bucketed by the
     * 4 16-bit chunks (pigeonhole: any pair within distance 3 shares at least
     * one exact chunk) — again no all-pairs join. */
-  def simhashCandidates(df: DataFrame, id: String, text: String, maxDist: Int = 3): DataFrame = {
-    val fp = simhash(df, id, text)
-    val chunked = fp.select(col(id).as("doc"), col("simhash"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"), shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFFL).as("ckey"))
-      }: _*)).as("cc"))
-      .select(col("doc"), col("simhash"), col("cc.chunk"), col("cc.ckey"))
-    val a = chunked.as("a"); val b = chunked.as("b")
-    val hamming = {
-      val x = col("a.simhash").bitwiseXOR(col("b.simhash"))
-      bit_count(x)
-    }
-    a.join(b, col("a.chunk") === col("b.chunk") && col("a.ckey") === col("b.ckey") &&
-              col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id1"), col("b.doc").as("id2"),
-              bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("dist"))
-      // dist is a pure function of the pair, so filtering BEFORE the
-      // distinct is identical — and the dedup shuffle then carries only
-      // pairs inside the distance band, not every chunk collision
-      .filter(col("dist") <= maxDist)
-      .distinct()
-  }
+  def simhashCandidates(df: DataFrame, id: String, text: String, maxDist: Int = 3): DataFrame =
+    simhashPairs(simhash(df, id, text), id, 16, maxDist)
+
+  /** The 4 pigeonhole chunks of a `simhash` column, `bits` wide each: 16
+    * over the 64-bit xxhash64 fingerprint, 15 over the portable 60-bit one
+    * (mirrored by the portable oracles' `(simhash >> (c*15)) & 32767`). */
+  private def simhashChunks(bits: Int): Seq[Column] =
+    (0 until 4).map(c => shiftright(col("simhash"), c * bits).bitwiseAND((1L << bits) - 1))
+
+  /** Fingerprint pairs sharing any `bits`-wide chunk, with their Hamming
+    * distance, kept at `dist <= maxDist`. */
+  private def simhashPairs(fp: DataFrame, id: String, bits: Int, maxDist: Int): DataFrame =
+    bucketPairs(fp.select(col(id).as("doc"), col("simhash")), simhashChunks(bits),
+      carry = Seq("simhash"),
+      pair = Seq(bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("dist")),
+      keep = Some(col("dist") <= maxDist))
 
   /** [[simhashCandidates]] over the PORTABLE 60-bit fingerprint
     * ([[simhashPortable]]): 4 pigeonhole chunks of 15 bits, pairs sharing
@@ -615,34 +625,11 @@ object Dedup {
     * the fast path's: 4 chunks GUARANTEE any pair within distance 3 shares
     * a chunk; above that the chunk share is heuristic (same posture as
     * dd4's maxDist=10). */
-  /** The 4 × 15-bit pigeonhole chunks of the portable 60-bit fingerprint
-    * — ONE definition shared by [[simhashCandidatesPortable]] and
-    * [[simhashDiagnostics]] (and mirrored by their oracles' `(simhash >>
-    * (c*15)) & 32767`). */
-  private def simhashChunks15(fp: DataFrame, id: String): DataFrame =
-    fp.select(col(id).as("doc"), col("simhash"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("simhash"), c * 15).bitwiseAND(0x7FFFL).as("ckey"))
-      }: _*)).as("cc"))
-      .select(col("doc"), col("simhash"), col("cc.chunk"), col("cc.ckey"))
-
   def simhashCandidatesPortable(df: DataFrame, id: String, text: String,
-                                maxDist: Int = 10): DataFrame = {
+                                maxDist: Int = 10): DataFrame =
     // checkpointed: the chunk self-join otherwise rebuilds the md5
     // fingerprint aggregate once per join side
-    val fp = simhashPortable(df, id, text).ckpt()
-    val chunked = simhashChunks15(fp, id)
-    val a = chunked.as("a"); val b = chunked.as("b")
-    a.join(b, col("a.chunk") === col("b.chunk") && col("a.ckey") === col("b.ckey") &&
-              col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id1"), col("b.doc").as("id2"),
-              bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("dist"))
-      // filter-before-distinct: identical set (dist is pair-determined),
-      // but the dedup shuffle carries only in-band pairs
-      .filter(col("dist") <= maxDist)
-      .distinct()
-  }
+    simhashPairs(simhashPortable(df, id, text).ckpt(), id, 15, maxDist)
 
   /** DuckDB SQL producing [[simhashCandidatesPortable]]'s (id1, id2, dist)
     * set bit-for-bit (no ORDER BY — meant for CTE composition). */
@@ -681,8 +668,8 @@ object Dedup {
   def simhashDiagnostics(df: DataFrame, id: String, text: String,
                          pairBudgetPerDoc: Double = 100.0): DataFrame = {
     val fp = simhashPortable(df, id, text).ckpt()
-    val buckets = simhashChunks15(fp, id)
-      .groupBy("chunk", "ckey").agg(count(lit(1)).as("n"))
+    val buckets = bucketRows(fp.select(col(id).as("doc"), col("simhash")), simhashChunks(15))
+      .groupBy("band", "key").agg(count(lit(1)).as("n"))
     val fpAgg = fp.agg(count(lit(1)).as("n_docs"),
       countDistinct(col("simhash")).as("n_distinct_fp"))
     val bAgg = buckets.agg(
@@ -788,19 +775,41 @@ object Dedup {
        |FROM ranked WHERE rank <= $k ORDER BY $docAlias, rank""".stripMargin
   }
 
-  /** The distinct word-n-gram array over the let-bound token column
-    * `tk` — THE tokenize/gram definition shared by [[ngramJaccard]],
-    * [[containmentPairs]], and [[containmentEstimatePairs]] (and
-    * mirrored verbatim by their DuckDB oracles'
-    * `array_to_string(tk[i:i+n-1])` comprehension): one copy, so a
-    * tokenization fix can never desynchronize the operators from each
-    * other or from their twins. */
-  private def wordGramsOfTk(n: Int, hashGrams: Boolean): Column = {
-    val gram = (i: Column) => concat_ws(" ", slice(col("tk"), i, lit(n)))
+  /** The word tokens every word-gram operator reads: the lowercased text
+    * split on whitespace runs. */
+  private def wordTokens(text: Column): Column = split(lower(text), "\\s+")
+
+  /** The distinct word-n-gram array over the token array `tk` — THE gram
+    * definition of [[ngramJaccard]], the exact and estimate containment
+    * tiers and the decontamination screen, mirrored by
+    * [[wordGramsOracleSql]]: one copy, so a tokenization fix can never
+    * desynchronize the operators from each other or from their twins.
+    * `tk` must be a column or a lambda variable, never the split itself:
+    * every gram lambda would inline the regex tokenizer and re-run it
+    * once PER GRAM (O(tokens²) regex work). */
+  private def wordGramsOfTk(tk: Column, n: Int, hashGrams: Boolean): Column = {
+    val gram = (i: Column) => concat_ws(" ", slice(tk, i, lit(n)))
     array_distinct(transform(
-      sequence(lit(1), greatest(size(col("tk")) - (n - 1), lit(1))),
+      sequence(lit(1), greatest(size(tk) - (n - 1), lit(1))),
       i => if (hashGrams) xxhash64(gram(i)) else gram(i)))
   }
+
+  /** [[wordGramsOfTk]] of a text column, the token array let-bound via a
+    * one-element transform (a lambda variable is evaluated once per row),
+    * for callers with no exchange to materialize the tokens through. */
+  private def wordGrams(t: Column, n: Int, hashGrams: Boolean): Column =
+    element_at(transform(array(wordTokens(t)), tk => wordGramsOfTk(tk, n, hashGrams)), 1)
+
+  /** DuckDB twin of [[wordGrams]]: a SELECT of `cols` plus `out`, the
+    * distinct word-`n`-gram list of each row of `src`, a table or CTE
+    * with a `text` column. */
+  def wordGramsOracleSql(src: String, n: Int, out: String,
+                         cols: Seq[String] = Seq("doc_id"), text: String = "text"): String =
+    s"""SELECT ${cols.mkString(", ")},
+       |         list_distinct([array_to_string(tk[i:i+${n - 1}], ' ')
+       |                        FOR i IN generate_series(1, greatest(len(tk) - ${n - 1}, 1))]) AS $out
+       |  FROM (SELECT *, string_split_regex(lower($text), '\\s+') AS tk
+       |        FROM $src)""".stripMargin
 
   /** Word n-gram Jaccard similarity for a candidate pair set. Grams are
     * hashed to longs before the set ops (exact up to 64-bit collisions);
@@ -845,8 +854,6 @@ object Dedup {
     // small enough that AQE coalesces it to a single task. The repartition
     // breaks both: split runs once per doc, gram building fans across the
     // cluster.
-    val toks = split(lower(col(text)), "\\s+")
-    val grams = wordGramsOfTk(n, hashGrams)
     // Verify cost must scale with the CANDIDATE volume, not the corpus:
     // gram arrays are built only for docs that appear in a pair (semi-join
     // on the distinct candidate ids), then checkpointed ONCE so both join
@@ -860,9 +867,9 @@ object Dedup {
     val candIds = p.select(col("id1").as(id))
       .union(p.select(col("id2").as(id))).distinct()
     val gCp = df.join(candIds, id)
-      .select(col(id), toks.as("tk"))
+      .select(col(id), wordTokens(col(text)).as("tk"))
       .repartition(col(id))
-      .select(col(id), grams.as("g"))
+      .select(col(id), wordGramsOfTk(col("tk"), n, hashGrams).as("g"))
       .ckpt()
     val small = gCp.count() <= 20000
     val g = if (small) broadcast(gCp) else gCp
@@ -896,6 +903,153 @@ object Dedup {
         col("__iu.inter").cast("double") / col("__iu.union"))
       .select("id1", "id2", "jaccard")
     if (minJaccard > 0) out.filter(col("jaccard") >= minJaccard) else out
+  }
+
+  /** Funnel counts of a df-capped gram index's (gram, df) table: distinct
+    * grams, pairable grams, grams above the cap, and the largest df. */
+  private final case class DfCapCounts(total: Long, pairable: Long,
+                                       aboveCap: Long, maxDf: Long) {
+    /** "Saturated" means the CAP blinded the index: zero pairable grams
+      * AND at least one gram actually above the cap. A duplicate-free
+      * corpus (every df = 1) also has zero pairable grams, but no cap is
+      * involved and raising maxDf changes nothing -- correctly-empty, not
+      * saturated, so it must not trip the warning (ADVICE r13). */
+    def saturated: Boolean = total > 0 && pairable == 0 && aboveCap > 0
+  }
+
+  /** Loud guard for the sf1-scale finding (BENCH_sf1.json): on a
+    * gram-dense corpus the df-capped inverted index can SATURATE — every
+    * distinct gram lands above `maxDf` (boilerplate) or has nothing to
+    * pair with, the pairable set is EMPTY, and the exact tier returns
+    * zero pairs while real containment exists (measured at the 50k-doc
+    * scale twin: 29,791/29,791 grams above the cap, planted pairs still
+    * found by the df-free estimate tier). The blindness itself is the
+    * documented inverted-index recall posture; being SILENT about it is
+    * not acceptable for a production dedup pass — a 100 TB run would
+    * report "no contained duplicates" with no signal that the index
+    * never existed. One scalar aggregate over the already-checkpointed
+    * df table (gram-universe-sized scan, no extra corpus pass); returns
+    * the table's funnel counts, whose `saturated` is whether it fired. */
+  private def warnIfDfCapSaturated(dfTab: DataFrame, pairablePred: Column,
+                                   maxDf: Int, op: String): DfCapCounts = {
+    val r = dfTab.agg(count(lit(1)), count(when(pairablePred, 1)),
+      count(when(col("df") > maxDf, 1)), max(col("df"))).first()
+    val c = DfCapCounts(r.getLong(0), r.getLong(1), r.getLong(2),
+      if (r.isNullAt(3)) 0L else r.getLong(3))
+    if (c.saturated)
+      org.slf4j.LoggerFactory.getLogger("graft.llm.Dedup").warn(
+        s"$op: df-capped gram index is SATURATED -- 0 of ${c.total} distinct " +
+          s"grams are pairable at maxDf=$maxDf (${c.aboveCap} grams sit ABOVE " +
+          s"the cap), so the exact containment tier will report NO pairs " +
+          s"regardless of real overlap. Raise maxDf, or use the df-free " +
+          s"estimate tier " +
+          s"(containmentEstimatePairs / containmentEstimateIncremental).")
+    c
+  }
+
+  /** The exact containment tier's df-capped word-gram index, built once
+    * by [[gramIndex]] and read by [[containmentPairs]],
+    * [[containmentIncremental]] and [[containmentDiagnostics]]. `g` is
+    * the checkpointed (doc[, is_new], g) gram-array table, `dfTab` the
+    * checkpointed (gram, df) table over the indexed docs, `counts` its
+    * funnel counts. Grams with df in [minDf, maxDf] are pairable; grams
+    * above maxDf are boilerplate and generate no candidates. */
+  private final class GramIndex(val g: DataFrame, dfTab: DataFrame,
+                                val counts: DfCapCounts, minDf: Int, maxDf: Int) {
+    /** (`as`, gram) postings of `rows`, a filter of `g`. */
+    def postings(rows: DataFrame, as: String): DataFrame =
+      rows.select(col("doc").as(as), explode(col("g")).as("gram"))
+
+    def pairable: DataFrame =
+      dfTab.filter(col("df") >= minDf && col("df") <= maxDf).select("gram")
+
+    /** (doc, __n, __a) per doc of `rows`: its distinct gram count and how
+      * many of its grams sit above the cap (0 when none). */
+    def stats(rows: DataFrame): DataFrame =
+      rows.select(col("doc"), size(col("g")).as("__n"))
+        .join(postings(rows, "doc")
+                .join(dfTab.filter(col("df") > maxDf).select("gram"), "gram")
+                .groupBy("doc").agg(count(lit(1)).as("__a")),
+              Seq("doc"), "left")
+        .na.fill(0, Seq("__a"))
+
+    /** Batch form: (id1, id2, __c) for every doc pair sharing a pairable
+      * gram, __c = how many they share. Per-gram doc sets are ≤ maxDf
+      * rows — bounded aggregate state — and the in-bucket pair expansion
+      * is a bounded generator, never a gram self-join. */
+    def bucketCandidates: DataFrame =
+      postings(g, "doc").join(pairable, "gram")
+        .groupBy("gram").agg(sort_array(collect_set(col("doc"))).as("ds"))
+        // defensive re-check on DISTINCT docs: under a duplicate-id input
+        // the row-count df can be >= 2 with a single distinct doc, and a
+        // 1-element ds would drive sequence(0, -1) into illegal
+        // element_at(ds, 0) calls inside the pair generator
+        .filter(size(col("ds")) >= 2)
+        .select(explode(inBucketPairs).as("p"))
+        .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
+        .groupBy("id1", "id2").agg(count(lit(1)).as("__c"))
+
+    /** EXACT candidate prune (the r12 finding: the capped index still
+      * emitted 1.12M candidate pairs at sf0.1, ~9% of ALL doc pairs, and
+      * the exact verify on them was half the operator's cost). For a
+      * pair, shared <= C + min(a1, a2): a shared gram is either pairable
+      * (counted EXACTLY by C = `counted`'s __c, the posting matches that
+      * generated the pair) or above-cap (bounded by either doc's above-cap
+      * gram count a_i; a gram outside the index is in one doc only, or in
+      * no corpus doc, and can't be shared). So max(c1, c2) =
+      * shared/min(n1, n2) is bounded by (C + min(a1, a2))/min(n1, n2), and
+      * a pair whose BOUND misses the threshold can never verify —
+      * dropping it loses nothing. The doc-stats joins are dim-sized. */
+    def prune(counted: DataFrame, left: String, statsL: DataFrame,
+              right: String, statsR: DataFrame, minContainment: Double): DataFrame =
+      counted
+        .join(statsL.select(col("doc").as(left),
+          col("__n").as("__n1"), col("__a").as("__a1")), left)
+        .join(statsR.select(col("doc").as(right),
+          col("__n").as("__n2"), col("__a").as("__a2")), right)
+        .filter((col("__c") + least(col("__a1"), col("__a2"))).cast("double") /
+          least(col("__n1"), col("__n2")) >= minContainment)
+        .select(left, right)
+  }
+
+  /** Builds the [[GramIndex]]: the batch form (`isNew` absent) indexes
+    * every doc with pairable df in [2, maxDf] (a df=1 gram pairs nothing);
+    * the ingest form indexes the held corpus (`isNew` false) with floor 1,
+    * since a df=1 corpus gram still pairs with batch docs. Warns through
+    * [[warnIfDfCapSaturated]] as `op`. */
+  private def gramIndex(df: DataFrame, id: String, text: String, n: Int,
+                        hashGrams: Boolean, maxDf: Int, isNew: Option[Column],
+                        op: String): GramIndex = {
+    // tokens materialize through an exchange so the regex split runs once
+    // per doc (the ngramJaccard lesson); the gram table is read by the
+    // postings, the doc stats and both verify sides
+    val g = df.select(col(id).cast("long").as("doc") +: isNew.map(_.as("is_new")).toSeq :+
+        wordTokens(col(text)).as("tk"): _*)
+      .repartition(col("doc"))
+      .withColumn("g", wordGramsOfTk(col("tk"), n, hashGrams)).drop("tk")
+      .ckpt()
+    val corpus = if (isNew.isDefined) g.filter(!col("is_new")) else g
+    // (doc, gram) is distinct by construction (array_distinct per doc),
+    // so count(*) per gram IS the document frequency — constant state.
+    // The df table feeds TWO consumers (pairable grams + the per-doc
+    // above-cap counts of the prune), so it is checkpointed once.
+    // NOTE (r16): a fused [[CountCollectCapAgg]] build (df + posting list
+    // in one exchange, the estimate tier's r16 shape) was tried here and
+    // measured 1.15× SLOWER on the full-corpus hashed form (dd19b
+    // 3.73→4.29 s same-session A/B): a word-gram universe is dominated
+    // by df=1 singletons, where the codegen'd count aggregate is nearly
+    // free and only the few pairable grams ever reach the collect_set —
+    // object-aggregating a one-element list per singleton gram costs
+    // more than the second (pairable-only) shuffle it saves. The fused
+    // form stays where postings are DENSE per key (the (band, v) bucket
+    // indexes of containmentEstimatePairs/Incremental, 0.60-0.63×).
+    val dfTab = corpus.select(explode(col("g")).as("gram"))
+      .groupBy("gram").agg(count(lit(1)).as("df"))
+      .ckpt()
+    val minDf = if (isNew.isDefined) 1 else 2
+    val counts = warnIfDfCapSaturated(dfTab,
+      col("df") >= minDf && col("df") <= maxDf, maxDf, op)
+    new GramIndex(g, dfTab, counts, minDf, maxDf)
   }
 
   /** Directional CONTAINMENT near-dup pairs (Broder's containment — the
@@ -934,119 +1088,25 @@ object Dedup {
     * Precondition: `id` values are unique (the contract of every dedup
     * operator here — dedup exact copies first). Duplicate ids would make
     * the per-gram row count over-state document frequency; the bucket
-    * stage still guards itself (`size(ds) >= 2` below) so a duplicated
-    * id degrades to df-miscounting, never a crash. */
-  /** Loud guard for the sf1-scale finding (BENCH_sf1.json): on a
-    * gram-dense corpus the df-capped inverted index can SATURATE — every
-    * distinct gram lands above `maxDf` (boilerplate) or has nothing to
-    * pair with, the pairable set is EMPTY, and the exact tier returns
-    * zero pairs while real containment exists (measured at the 50k-doc
-    * scale twin: 29,791/29,791 grams above the cap, planted pairs still
-    * found by the df-free estimate tier). The blindness itself is the
-    * documented inverted-index recall posture; being SILENT about it is
-    * not acceptable for a production dedup pass — a 100 TB run would
-    * report "no contained duplicates" with no signal that the index
-    * never existed. One scalar aggregate over the already-checkpointed
-    * df table (gram-universe-sized scan, no extra corpus pass); returns
-    * whether it fired so the spec can pin the trigger exactly. */
-  private[graft] def warnIfDfCapSaturated(dfTab: DataFrame, pairablePred: Column,
-                                          maxDf: Int, op: String): Boolean = {
-    val r = dfTab.agg(count(lit(1)), count(when(pairablePred, 1)),
-      count(when(col("df") > maxDf, 1))).first()
-    val (total, pairableCnt, aboveCap) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    // "saturated" means the CAP blinded the index: zero pairable grams
-    // AND at least one gram actually above the cap. A duplicate-free
-    // corpus (every df = 1) also has zero pairable grams, but no cap is
-    // involved and raising maxDf changes nothing -- correctly-empty, not
-    // saturated, so it must not trip the warning (ADVICE r13).
-    val saturated = total > 0 && pairableCnt == 0 && aboveCap > 0
-    if (saturated)
-      org.slf4j.LoggerFactory.getLogger("graft.llm.Dedup").warn(
-        s"$op: df-capped gram index is SATURATED -- 0 of $total distinct " +
-          s"grams are pairable at maxDf=$maxDf ($aboveCap grams sit ABOVE " +
-          s"the cap), so the exact containment tier will report NO pairs " +
-          s"regardless of real overlap. Raise maxDf, or use the df-free " +
-          s"estimate tier " +
-          s"(containmentEstimatePairs / containmentEstimateIncremental).")
-    saturated
-  }
-
+    * stage still guards itself (`size(ds) >= 2`) so a duplicated id
+    * degrades to df-miscounting, never a crash. */
   def containmentPairs(df: DataFrame, id: String, text: String, n: Int,
                        minContainment: Double, maxDf: Int,
                        hashGrams: Boolean = true): DataFrame = {
-    val toks = split(lower(col(text)), "\\s+")
-    val grams = wordGramsOfTk(n, hashGrams)
-    // tokens materialize through an exchange so the regex split runs once
-    // per doc (the ngramJaccard lesson); the gram table is read three
-    // times below (inverted index + both verify sides)
-    val g = df.select(col(id).cast("long").as("doc"), toks.as("tk"))
-      .repartition(col("doc"))
-      .select(col("doc"), grams.as("g"))
-      .ckpt()
-    // (doc, gram) is distinct by construction (array_distinct per doc),
-    // so count(*) per gram IS the document frequency — constant state.
-    // The df table feeds TWO consumers (pairable grams + the per-doc
-    // above-cap counts for the prune below), so it is checkpointed once
-    // instead of re-running the explode+agg per consumer.
-    // NOTE (r16): a fused [[CountCollectCapAgg]] build (df + posting list
-    // in one exchange, the estimate tier's r16 shape) was tried here and
-    // measured 1.15× SLOWER on the full-corpus hashed form (dd19b
-    // 3.73→4.29 s same-session A/B): a word-gram universe is dominated
-    // by df=1 singletons, where the codegen'd count aggregate is nearly
-    // free and only the few pairable grams ever reach the collect_set —
-    // object-aggregating a one-element list per singleton gram costs
-    // more than the second (pairable-only) shuffle it saves. The fused
-    // form stays where postings are DENSE per key (the (band, v) bucket
-    // indexes of containmentEstimatePairs/Incremental, 0.60-0.63×).
-    val inv = g.select(col("doc"), explode(col("g")).as("gram"))
-    val dfTab = inv.groupBy("gram").agg(count(lit(1)).as("df"))
-      .ckpt()
-    warnIfDfCapSaturated(dfTab, col("df") >= 2 && col("df") <= maxDf,
-      maxDf, "containmentPairs")
-    val pairable = dfTab.filter(col("df") >= 2 && col("df") <= maxDf)
-      .select("gram")
-    // per-gram doc sets are ≤ maxDf rows — bounded aggregate state; the
-    // in-bucket pair expansion is a bounded generator, never a self-join
-    val pairExpr = inBucketPairs
-    // EXACT candidate prune (the r12 finding: the capped index still
-    // emitted 1.12M candidate pairs at sf0.1, ~9% of ALL doc pairs, and
-    // the exact verify on them was half the operator's cost). For a pair,
-    // shared <= C + min(a1, a2): a shared gram is either pairable
-    // (df in [2, maxDf] — counted EXACTLY by C, the number of buckets
-    // that generated the pair) or above-cap (bounded by either doc's
-    // above-cap gram count a_i; df=1 grams are in one doc only and can't
-    // be shared). So max(c1, c2) = shared/min(n1, n2) is bounded by
-    // (C + min(a1, a2))/min(n1, n2), and a pair whose BOUND misses the
-    // threshold can never verify — dropping it loses nothing. The
-    // groupBy(id1, id2) count is the same shuffle the old distinct()
-    // paid, and the doc-stats join is dim-sized (one row per doc).
-    val aboveCap = dfTab.filter(col("df") > maxDf).select("gram")
-    val stats = g.select(col("doc"), size(col("g")).as("__n"))
-      .join(inv.join(aboveCap, "gram")
-              .groupBy("doc").agg(count(lit(1)).as("__a")),
-            Seq("doc"), "left")
-      .na.fill(0, Seq("__a"))
-    val cands = inv.join(pairable, "gram")
-      .groupBy("gram").agg(sort_array(collect_set(col("doc"))).as("ds"))
-      // defensive re-check on DISTINCT docs: under a duplicate-id input
-      // the row-count df can be >= 2 with a single distinct doc, and a
-      // 1-element ds would drive sequence(0, -1) into illegal
-      // element_at(ds, 0) calls inside the pair generator
-      .filter(size(col("ds")) >= 2)
-      .select(explode(pairExpr).as("p"))
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
-      .groupBy("id1", "id2").agg(count(lit(1)).as("__c"))
-      .join(stats.select(col("doc").as("id1"),
-        col("__n").as("__n1"), col("__a").as("__a1")), "id1")
-      .join(stats.select(col("doc").as("id2"),
-        col("__n").as("__n2"), col("__a").as("__a2")), "id2")
-      .filter((col("__c") + least(col("__a1"), col("__a2"))).cast("double") /
-        least(col("__n1"), col("__n2")) >= minContainment)
-      .select("id1", "id2")
-    verifyContainment(cands,
-      g.select(col("doc").as("id1"), col("g").as("__gl")),
-      g.select(col("doc").as("id2"), col("g").as("__gr")),
-      "id1", "id2", "n1", "n2", "c1", "c2", minContainment)
+    val ix = gramIndex(df, id, text, n, hashGrams, maxDf, None, "containmentPairs")
+    pruneAndVerify(ix, ix.bucketCandidates, minContainment)._2
+  }
+
+  /** The batch form's exact prune of counted candidates, and the exact
+    * verify of the survivors. */
+  private def pruneAndVerify(ix: GramIndex, counted: DataFrame,
+                             minContainment: Double): (DataFrame, DataFrame) = {
+    val stats = ix.stats(ix.g)
+    val pruned = ix.prune(counted, "id1", stats, "id2", stats, minContainment)
+    (pruned, verifyContainment(pruned,
+      ix.g.select(col("doc").as("id1"), col("g").as("__gl")),
+      ix.g.select(col("doc").as("id2"), col("g").as("__gr")),
+      "id1", "id2", "n1", "n2", "c1", "c2", minContainment))
   }
 
   /** Diagnostic companion to [[containmentPairs]]: a one-row summary of
@@ -1054,58 +1114,23 @@ object Dedup {
     * size, pairable/above-cap split (the saturation warning's
     * quantitative sibling), candidate pairs emitted by the bucketed
     * generator, candidates surviving the exact upper-bound prune, and
-    * pairs the exact verify confirms. Runs the operator's own stages
-    * (same `wordGramsOfTk` / `inBucketPairs` / prune algebra — built in
-    * this object precisely so the numbers cannot drift from what
-    * [[containmentPairs]] executes) and charges one extra aggregate per
-    * stage; a capacity-planning probe you run on a corpus SAMPLE before
+    * pairs the exact verify confirms. Reads the funnel off ONE
+    * [[gramIndex]] build — the operator's own stages, so the numbers
+    * cannot drift from what [[containmentPairs]] executes — with the
+    * counted candidates checkpointed for their two readers; a
+    * capacity-planning probe you run on a corpus SAMPLE before
     * committing a 100 TB pass to the exact tier, not a per-run tax. */
   def containmentDiagnostics(df: DataFrame, id: String, text: String, n: Int,
                              minContainment: Double, maxDf: Int,
                              hashGrams: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val toks = split(lower(col(text)), "\\s+")
-    val grams = wordGramsOfTk(n, hashGrams)
-    val g = df.select(col(id).cast("long").as("doc"), toks.as("tk"))
-      .repartition(col("doc"))
-      .select(col("doc"), grams.as("g"))
-      .ckpt()
-    val inv = g.select(col("doc"), explode(col("g")).as("gram"))
-    val dfTab = inv.groupBy("gram").agg(count(lit(1)).as("df")).ckpt()
-    val r = dfTab.agg(count(lit(1)),
-      count(when(col("df") >= 2 && col("df") <= maxDf, 1)),
-      count(when(col("df") > maxDf, 1)), max(col("df"))).first()
-    val (total, pairableCnt, aboveCap) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    val maxObservedDf = if (r.isNullAt(3)) 0L else r.getLong(3)
-    val pairable = dfTab.filter(col("df") >= 2 && col("df") <= maxDf).select("gram")
-    val aboveCapGrams = dfTab.filter(col("df") > maxDf).select("gram")
-    val stats = g.select(col("doc"), size(col("g")).as("__n"))
-      .join(inv.join(aboveCapGrams, "gram")
-              .groupBy("doc").agg(count(lit(1)).as("__a")),
-            Seq("doc"), "left")
-      .na.fill(0, Seq("__a"))
-    val candTab = inv.join(pairable, "gram")
-      .groupBy("gram").agg(sort_array(collect_set(col("doc"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-      .select(explode(inBucketPairs).as("p"))
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
-      .groupBy("id1", "id2").agg(count(lit(1)).as("__c"))
-      .ckpt()
-    val candidates = candTab.count()
-    val pruned = candTab
-      .join(stats.select(col("doc").as("id1"),
-        col("__n").as("__n1"), col("__a").as("__a1")), "id1")
-      .join(stats.select(col("doc").as("id2"),
-        col("__n").as("__n2"), col("__a").as("__a2")), "id2")
-      .filter((col("__c") + least(col("__a1"), col("__a2"))).cast("double") /
-        least(col("__n1"), col("__n2")) >= minContainment)
-      .count()
-    val verified = containmentPairs(df, id, text, n, minContainment, maxDf,
-      hashGrams).count()
-    Seq((total, pairableCnt, aboveCap, maxObservedDf,
-         total > 0 && pairableCnt == 0 && aboveCap > 0,
-         candidates, pruned, verified))
+    val ix = gramIndex(df, id, text, n, hashGrams, maxDf, None, "containmentDiagnostics")
+    val counted = ix.bucketCandidates.ckpt()
+    val (pruned, verified) = pruneAndVerify(ix, counted, minContainment)
+    val c = ix.counts
+    Seq((c.total, c.pairable, c.aboveCap, c.maxDf, c.saturated,
+         counted.count(), pruned.count(), verified.count()))
       .toDF("grams_total", "grams_pairable", "grams_above_cap", "max_df",
         "saturated", "candidate_pairs", "pruned_candidate_pairs",
         "verified_pairs")
@@ -1113,10 +1138,10 @@ object Dedup {
 
   /** The bounded in-bucket pair generator over a sorted doc-set column
     * `ds` — all (i, j) i<j pairs as structs, ≤ |ds|²/2 per row by
-    * construction, never a bucket self-join. ONE copy shared by every
-    * bucketed candidate stage ([[containmentPairs]],
-    * [[containmentEstimatePairs]]) so the generator's bounds can't
-    * drift. Callers must pre-filter `size(ds) >= 2`: a 1-element ds
+    * construction, never a bucket self-join. ONE copy shared by the
+    * bucketed candidate stages of the exact tier ([[GramIndex]]) and the
+    * estimate tier ([[containmentEstimatePairs]]) so the generator's
+    * bounds can't drift. Callers must pre-filter `size(ds) >= 2`: a 1-element ds
     * would drive sequence(0, -1) into illegal element_at(ds, 0). */
   private def inBucketPairs: Column = flatten(transform(
     sequence(lit(0), size(col("ds")) - 2),
@@ -1125,7 +1150,7 @@ object Dedup {
                   element_at(col("ds"), j + 1).as("id2")))))
 
   /** Exact containment verify + threshold + rounding — ONE copy shared
-    * by [[containmentPairs]] and [[containmentIncremental]] so the
+    * by the exact and estimate tiers, batch and ingest forms, so the
     * floor(x·10⁴+0.5)/10⁴ rule can never drift between them. NEVER
     * round(): Spark's round() rounds the decimal expansion HALF_UP
     * while DuckDB rounds the scaled double, so half-tie integer ratios
@@ -1180,59 +1205,24 @@ object Dedup {
   def containmentIncremental(df: DataFrame, id: String, text: String,
                              isNew: Column, n: Int, minContainment: Double,
                              maxDf: Int, hashGrams: Boolean = true): DataFrame = {
-    val toks = split(lower(col(text)), "\\s+")
-    val grams = wordGramsOfTk(n, hashGrams)
-    // one tokenize/gram pass, read three times (corpus index, batch
-    // index, both verify sides)
-    val g = df.select(col(id).cast("long").as("doc"), isNew.as("is_new"), toks.as("tk"))
-      .repartition(col("doc"))
-      .select(col("doc"), col("is_new"), grams.as("g"))
-      .ckpt()
-    val invC = g.filter(!col("is_new"))
-      .select(col("doc").as("corpus_id"), explode(col("g")).as("gram"))
-    // corpus-side df feeds pairable grams AND the above-cap counts for
-    // the exact prune — checkpointed once (containmentPairs' posture,
-    // including its r16 note: the fused CountCollectCapAgg build loses
-    // on sparse word-gram universes, so the count-first form stays)
-    val dfTab = invC.groupBy("gram").agg(count(lit(1)).as("df"))
-      .ckpt()
-    warnIfDfCapSaturated(dfTab, col("df") <= maxDf,
-      maxDf, "containmentIncremental")
-    val pairable = dfTab.filter(col("df") <= maxDf).select("gram")
-    val invB = g.filter(col("is_new"))
-      .select(col("doc").as("new_id"), explode(col("g")).as("gram"))
-    // the containmentPairs exact prune in the ingest shape: a shared
-    // gram is either in the capped corpus index (counted EXACTLY by C =
-    // the per-pair posting-match count) or above-cap in the corpus
-    // (bounded by either side's above-cap gram count; a batch gram
-    // absent from the corpus index is in no corpus doc and can't be
-    // shared), so shared <= C + min(a_new, a_corpus) and pairs whose
-    // bound misses the threshold skip the array verify with zero recall
-    // loss
-    val aboveCap = dfTab.filter(col("df") > maxDf).select("gram")
-    val aNew = invB.join(aboveCap, "gram")
-      .groupBy("new_id").agg(count(lit(1)).as("__a"))
-    val aCorpus = invC.join(aboveCap, "gram")
-      .groupBy("corpus_id").agg(count(lit(1)).as("__a"))
-    def stats(side: Column, idName: String, a: DataFrame) =
-      g.filter(side).select(col("doc").as(idName), size(col("g")).as("__n"))
-        .join(a, Seq(idName), "left").na.fill(0, Seq("__a"))
-    val cands = invB
-      .join(invC.join(pairable, "gram"), "gram")
+    val ix = gramIndex(df, id, text, n, hashGrams, maxDf, Some(isNew),
+      "containmentIncremental")
+    val batch = ix.g.filter(col("is_new"))
+    val corpus = ix.g.filter(!col("is_new"))
+    // batch postings probe the capped corpus index; a batch gram absent
+    // from the corpus index is in no corpus doc, so the prune's bound
+    // holds in the ingest shape too
+    val counted = ix.postings(batch, "new_id")
+      .join(ix.postings(corpus, "corpus_id").join(ix.pairable, "gram"), "gram")
       .groupBy("new_id", "corpus_id").agg(count(lit(1)).as("__c"))
-      .join(stats(col("is_new"), "new_id", aNew)
-        .select(col("new_id"), col("__n").as("__n1"), col("__a").as("__a1")), "new_id")
-      .join(stats(!col("is_new"), "corpus_id", aCorpus)
-        .select(col("corpus_id"), col("__n").as("__n2"), col("__a").as("__a2")), "corpus_id")
-      .filter((col("__c") + least(col("__a1"), col("__a2"))).cast("double") /
-        least(col("__n1"), col("__n2")) >= minContainment)
-      .select("new_id", "corpus_id")
     // split verify sides: batch arrays for new_id, corpus arrays for
     // corpus_id — an id present on BOTH sides (same-id re-fetch) joins
     // each candidate row exactly once, new text against held text
-    verifyContainment(cands,
-      g.filter(col("is_new")).select(col("doc").as("new_id"), col("g").as("__gl")),
-      g.filter(!col("is_new")).select(col("doc").as("corpus_id"), col("g").as("__gr")),
+    verifyContainment(
+      ix.prune(counted, "new_id", ix.stats(batch), "corpus_id", ix.stats(corpus),
+        minContainment),
+      batch.select(col("doc").as("new_id"), col("g").as("__gl")),
+      corpus.select(col("doc").as("corpus_id"), col("g").as("__gr")),
       "new_id", "corpus_id", "n_new", "n_corpus", "c_new", "c_corpus",
       minContainment)
   }
@@ -1326,27 +1316,24 @@ object Dedup {
       extra = Seq("c_est"))
   }
 
-  /** The gram-hash + size + portable-signature table shared by the
-    * estimate tier's batch and incremental forms: md5-28 gram hashes
-    * checkpointed FIRST (projection collapse would otherwise inline the
-    * hex/conv chain into every signature lambda — measured 5× the
-    * stage), then sizes + LCG minima materialized once for the many
-    * downstream readers. `pre` lets the incremental form thread its
-    * is_new flag through both checkpoints. */
-  /** The estimate tier's (doc, n, sig) signature table, exposed for the
-    * STREAMING containment gate's batch twin
-    * ([[graft.streaming.StreamContainment.flaggedBatch]]) so all four
-    * containment-estimate surfaces (dd21, dd22, st11 stream, st11 batch
-    * twin) share ONE gram/hash/minhash definition. */
+  /** The estimate tier's (doc, n, sig) signature table, read outside
+    * this object by the streaming containment gate's batch twin
+    * ([[graft.streaming.StreamContainment.flaggedBatch]]) and by
+    * e2e_llm_pipeline's near-dup stage, so they sketch exactly what
+    * dd21/dd22 sketch. */
   private[graft] def estimateSigTable(df: DataFrame, id: String, text: String,
       n: Int = 3, numHashes: Int = 32): DataFrame =
     estimateGramTable(df, id, text, n, numHashes, pre = Nil)
       .select(col("doc"), col("n"), col("sig"))
 
+  /** The (doc, pre…, h, n, sig) table of the estimate tier's batch and
+    * incremental forms: md5-28 hashes of the [[wordGramsOfTk]] string
+    * grams, their count and the portable LCG signature, checkpointed
+    * once for the many downstream readers. `pre` lets the incremental
+    * form thread its is_new flag through the checkpoint. */
   private def estimateGramTable(df: DataFrame, id: String, text: String,
       n: Int, numHashes: Int, pre: Seq[(String, Column)]): DataFrame = {
-    val toks = split(lower(col(text)), "\\s+")
-    val grams = wordGramsOfTk(n, hashGrams = false)
+    val grams = wordGramsOfTk(col("tk"), n, hashGrams = false)
     // native md5-prefix fold: ≡ conv(substring(md5(g), 1, 7), 16, 10)
     // .cast("long") with no hex-string / decimal-parse per gram
     // (Md5KernelSpec pins the equality; the DuckDB oracle is unchanged).
@@ -1369,7 +1356,7 @@ object Dedup {
     // stage). Bit identity of the fold vs that algebra is pinned in
     // MinHashExprSpec; the DuckDB oracle replays the same (a_i, b_i)/P
     // family unchanged.
-    df.select(col(id).cast("long").as("doc") +: preCols :+ toks.as("tk"): _*)
+    df.select(col(id).cast("long").as("doc") +: preCols :+ wordTokens(col(text)).as("tk"): _*)
       .repartition(col("doc"))
       .select(col("doc") +: preRefs :+ transform(grams, gramHash).as("h"): _*)
       .select(col("doc") +: preRefs :+ col("h") :+ size(col("h")).as("n") :+
@@ -1378,6 +1365,7 @@ object Dedup {
   }
 
   /** The J*-margin sketch filter + c_est shared by both estimate forms
+    * and the streaming gate's batch twin
     * (see [[containmentEstimatePairs]] for the derivation): keeps a
     * counted candidate pair iff its signature agreement clears the
     * exact-size Jaccard threshold minus 2.5σ and its size ratio is
@@ -1466,21 +1454,6 @@ object Dedup {
     * `hashGrams = true` (default) joins on 64-bit gram hashes (8 bytes a
     * gram through the explode); `false` keeps raw string grams,
     * reproducible by any engine (the oracle-green registry form). */
-  /** The distinct word-`n`-gram array of a text column. The token array
-    * is let-bound via a one-element transform: a lambda variable is
-    * evaluated once per row, whereas referencing the split expression
-    * directly from the gram lambda would inline (and re-run) the regex
-    * tokenizer once PER GRAM — O(tokens²) regex work. */
-  private def wordGrams(t: Column, n: Int, hashGrams: Boolean): Column = {
-    val mk = (tk: Column) => {
-      val g = (i: Column) => concat_ws(" ", slice(tk, i, lit(n)))
-      array_distinct(transform(
-        sequence(lit(1), greatest(size(tk) - (n - 1), lit(1))),
-        i => if (hashGrams) xxhash64(g(i)) else g(i)))
-    }
-    element_at(transform(array(split(lower(t), "\\s+")), mk), 1)
-  }
-
   def contaminatedIds(docs: DataFrame, id: String, text: String,
                       bench: DataFrame, btext: String,
                       n: Int = 8, hashGrams: Boolean = true): DataFrame = {

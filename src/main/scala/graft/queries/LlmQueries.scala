@@ -198,11 +198,7 @@ object LlmQueries {
     val bandRows = estBandRows("mins")
     val agreeSum = estAgreeSum
     s"""WITH grams AS (
-       |  SELECT doc_id,
-       |         list_distinct([array_to_string(tk[i:i+2], ' ')
-       |                        FOR i IN generate_series(1, greatest(len(tk) - 2, 1))]) AS gs
-       |  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS tk
-       |        FROM documents)),
+       |  ${Dedup.wordGramsOracleSql("documents", 3, "gs")}),
        |sh AS (
        |  SELECT doc_id,
        |         ('0x' || substr(md5(unnest(gs)), 1, 7))::BIGINT AS h
@@ -265,11 +261,8 @@ object LlmQueries {
   private val containmentEstimateIncrementalOracle: String = {
     val nh = estNh
     s"""WITH grams AS (
-       |  SELECT doc_id, (doc_id % 3 = 1) AS is_new,
-       |         list_distinct([array_to_string(tk[i:i+2], ' ')
-       |                        FOR i IN generate_series(1, greatest(len(tk) - 2, 1))]) AS gs
-       |  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS tk
-       |        FROM documents)),
+       |  ${Dedup.wordGramsOracleSql("documents", 3, "gs",
+              Seq("doc_id", "(doc_id % 3 = 1) AS is_new"))}),
        |sh AS (
        |  SELECT doc_id, is_new,
        |         ('0x' || substr(md5(unnest(gs)), 1, 7))::BIGINT AS h
@@ -403,11 +396,7 @@ object LlmQueries {
        |  SELECT * FROM quality
        |  WHERE doc_id IN (SELECT min(doc_id) FROM quality GROUP BY md5(text))),
        |vgrams AS (
-       |  SELECT doc_id,
-       |         list_distinct([array_to_string(tk[i:i+2], ' ')
-       |                        FOR i IN generate_series(1, greatest(len(tk) - 2, 1))]) AS g
-       |  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS tk
-       |        FROM exact2)),
+       |  ${Dedup.wordGramsOracleSql("exact2", 3, "g")}),
        |vsh AS (
        |  SELECT doc_id, ('0x' || substr(md5(unnest(g)), 1, 7))::BIGINT AS h
        |  FROM vgrams),
@@ -680,11 +669,7 @@ object LlmQueries {
         s"""WITH docs5 AS (SELECT * FROM documents WHERE doc_id % 5 = 0),
            |cands AS ($cands),
            |grams AS (
-           |  SELECT doc_id,
-           |         list_distinct([array_to_string(tk[i:i+2], ' ')
-           |                        FOR i IN generate_series(1, greatest(len(tk) - 2, 1))]) AS g
-           |  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS tk
-           |        FROM docs5))
+           |  ${Dedup.wordGramsOracleSql("docs5", 3, "g")})
            |SELECT c.id1, c.id2,
            |       round(len(list_intersect(a.g, b.g)) /
            |             len(list_distinct(list_concat(a.g, b.g))), 4) AS jaccard
@@ -714,13 +699,9 @@ object LlmQueries {
           "doc_id", "text", n = 3, minContainment = 0.5, maxDf = 20,
           hashGrams = false)
         .orderBy("id1", "id2"),
-      Some("""WITH docs_prefix AS (SELECT * FROM documents WHERE doc_id < 1000),
+      Some(s"""WITH docs_prefix AS (SELECT * FROM documents WHERE doc_id < 1000),
              |grams AS (
-             |  SELECT doc_id,
-             |         list_distinct([array_to_string(tk[i:i+2], ' ')
-             |                        FOR i IN generate_series(1, greatest(len(tk) - 2, 1))]) AS g
-             |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS tk
-             |        FROM docs_prefix)),
+             |  ${Dedup.wordGramsOracleSql("docs_prefix", 3, "g")}),
              |inv AS (SELECT doc_id, unnest(g) AS gram FROM grams),
              |pairable AS (
              |  SELECT gram FROM inv GROUP BY gram HAVING count(*) BETWEEN 2 AND 20),
@@ -754,15 +735,11 @@ object LlmQueries {
           "doc_id", "text", col("doc_id") % 3 === 1,
           n = 3, minContainment = 0.5, maxDf = 20, hashGrams = false)
         .orderBy("new_id", "corpus_id"),
-      Some("""WITH docs_prefix AS (
+      Some(s"""WITH docs_prefix AS (
              |  SELECT doc_id, (doc_id % 3 = 1) AS is_new, text
              |  FROM documents WHERE doc_id < 1000),
              |grams AS (
-             |  SELECT doc_id, is_new,
-             |         list_distinct([array_to_string(tk[i:i+2], ' ')
-             |                        FOR i IN generate_series(1, greatest(len(tk) - 2, 1))]) AS g
-             |  FROM (SELECT doc_id, is_new, string_split_regex(lower(text), '\s+') AS tk
-             |        FROM docs_prefix)),
+             |  ${Dedup.wordGramsOracleSql("docs_prefix", 3, "g", Seq("doc_id", "is_new"))}),
              |invc AS (SELECT doc_id AS corpus_id, unnest(g) AS gram
              |         FROM grams WHERE NOT is_new),
              |pairable AS (SELECT gram FROM invc GROUP BY gram HAVING count(*) <= 20),
@@ -822,13 +799,9 @@ object LlmQueries {
           t(s, d, "documents").filter(col("doc_id") < 1000),
           "doc_id", "text", n = 3, minContainment = 0.5, maxDf = 20,
           hashGrams = false),
-      Some("""WITH docs_prefix AS (SELECT * FROM documents WHERE doc_id < 1000),
+      Some(s"""WITH docs_prefix AS (SELECT * FROM documents WHERE doc_id < 1000),
              |grams AS (
-             |  SELECT doc_id,
-             |         list_distinct([array_to_string(tk[i:i+2], ' ')
-             |                        FOR i IN generate_series(1, greatest(len(tk) - 2, 1))]) AS g
-             |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS tk
-             |        FROM docs_prefix)),
+             |  ${Dedup.wordGramsOracleSql("docs_prefix", 3, "g")}),
              |inv AS (SELECT doc_id, unnest(g) AS gram FROM grams),
              |df AS (SELECT gram, count(*) AS df FROM inv GROUP BY gram),
              |stats AS (
@@ -2369,14 +2342,7 @@ object LlmQueries {
         //   (c) exact word-3-gram Jaccard >= 0.8 on the survivors.
         // Then connected components, keep the component minimum.
         val sig = Dedup.estimateSigTable(exact, "doc_id", "text", n = 3)
-        val banded = sig.select(col("doc"), explode(array((0 until 8).map(b =>
-            struct(lit(b).as("band"), slice(col("sig"), b * 4 + 1, 4).as("key"))): _*)).as("bb"))
-          .select(col("doc"), col("bb.band").as("band"), col("bb.key").as("key"))
-        val cands = banded.as("a").join(banded.as("b"),
-            col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-              col("a.doc") < col("b.doc"))
-          .select(col("a.doc").as("id1"), col("b.doc").as("id2"))
-          .distinct()
+        val cands = Dedup.bucketPairs(sig, Dedup.sigBands(8, 4))
         val agreeNeeded = 20 // ceil((0.8 - 2.5·sqrt(0.8·0.2/32)) · 32)
         val pruned = cands
           .join(sig.select(col("doc").as("id1"), col("sig").as("s1")), "id1")

@@ -253,11 +253,7 @@ object StreamContainment {
       .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
       .mkString(" + ")
     s"""WITH grams AS (
-       |  SELECT $id,
-       |         list_distinct([array_to_string(tk[i:i+${n - 1}], ' ')
-       |                        FOR i IN generate_series(1, greatest(len(tk) - ${n - 1}, 1))]) AS gs
-       |  FROM (SELECT $id, string_split_regex(lower($text), '\\s+') AS tk
-       |        FROM $table)),
+       |  ${Dedup.wordGramsOracleSql(table, n, "gs", Seq(id), text)}),
        |sh AS (
        |  SELECT $id,
        |         ('0x' || substr(md5(unnest(gs)), 1, 7))::BIGINT AS h

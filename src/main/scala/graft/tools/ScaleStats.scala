@@ -44,15 +44,7 @@ object ScaleStats {
     // ---- near-dup banding funnel, the e2e_llm_pipeline stage shapes ----
     val sig = Dedup.estimateSigTable(docs, "doc_id", "text", n = 3)
       .localCheckpoint()
-    val banded = sig.select(col("doc"), explode(array((0 until 8).map(b =>
-        struct(lit(b).as("band"), slice(col("sig"), b * 4 + 1, 4).as("key"))): _*)).as("bb"))
-      .select(col("doc"), col("bb.band").as("band"), col("bb.key").as("key"))
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id1"), col("b.doc").as("id2"))
-      .distinct()
-      .localCheckpoint()
+    val cands = Dedup.bucketPairs(sig, Dedup.sigBands(8, 4)).localCheckpoint()
     val nCands = cands.count()
     val agreeNeeded = 20 // ceil((0.8 - 2.5*sqrt(0.8*0.2/32)) * 32), e2e's prune
     val pruned = cands

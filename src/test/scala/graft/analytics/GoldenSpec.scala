@@ -29,6 +29,14 @@ class GoldenSpec extends SparkSpecBase {
   private val goldenPath = "/root/reference/serverScripts/src/public/js/jumps_(2).json"
   private val reducedPath = "/root/reference/serverScripts/src/public/js/jsonReduced.json"
 
+  /** `path`, or a one-line failure when the reference checkout holding
+    * it is absent: the golden tests must fail there, not be skipped. */
+  private def input(path: String): String = {
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+      fail(s"golden input absent: $path")
+    path
+  }
+
   /** Explicit people-only schemas: the golden `locations` map contains both
     * "London" and "london" keys, which schema inference (case-insensitive)
     * rejects as duplicate columns — and we only need `people` anyway. */
@@ -48,7 +56,7 @@ class GoldenSpec extends SparkSpecBase {
 
   /** Golden rels flattened: (id, name, pos, ...rel fields). */
   private lazy val goldenRels: DataFrame = {
-    val raw = spark.read.option("multiLine", true).schema(goldenSchema).json(goldenPath)
+    val raw = spark.read.option("multiLine", true).schema(goldenSchema).json(input(goldenPath))
     raw.select(explode(col("people")).as("p"))
       .select(col("p.id").as("id"), col("p.name").as("name"),
         posexplode(col("p.rels")).as(Seq("pos", "r")))
@@ -103,7 +111,7 @@ class GoldenSpec extends SparkSpecBase {
     // ground truth straight from the golden file's locations object
     import scala.jdk.CollectionConverters._
     val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(goldenPath)), java.nio.charset.StandardCharsets.UTF_8)
+      java.nio.file.Paths.get(input(goldenPath))), java.nio.charset.StandardCharsets.UTF_8)
     val start = txt.indexOf("\"locations\"")
     val obj = txt.substring(txt.indexOf('{', start), {
       var depth = 0; var i = txt.indexOf('{', start); var end = -1
@@ -141,7 +149,7 @@ class GoldenSpec extends SparkSpecBase {
     assert(dim.count() === 34L, "a company must map to exactly one location")
 
     val reducedSchema = peopleSchema(Seq(StructField("matchedCompanyName", StringType)))
-    val reduced = spark.read.option("multiLine", true).schema(reducedSchema).json(reducedPath)
+    val reduced = spark.read.option("multiLine", true).schema(reducedSchema).json(input(reducedPath))
       .select(explode(col("people")).as("p"))
       .select(col("p.id").as("id"), posexplode(col("p.rels")).as(Seq("pos", "r")))
       .select(col("id"), col("pos"), col("r.matchedCompanyName").as("matchedCompanyName"))

@@ -57,7 +57,11 @@ class ScalarsSpec extends SparkSpecBase {
       ("matchmove artist: MPC (5 episodes)", "", ("matchmove artist", "mpc", "")),
       ("senior artist: miniatures, weta workshop", "",
         ("senior artist, miniatures", "weta workshop", "")),
-      ("", "", ("", "", "")))
+      ("", "", ("", "", "")),
+      (null, "weta", ("", "", "")),
+      // '$' and '\\' are in the stripped symbol class
+      ("comp$ositor: Weta Digital $2", "weta", ("compositor", "weta digital 2", "weta")),
+      ("roto\\artist: Double\\Negative", "", ("rotoartist", "doublenegative", "")))
     for ((notes, tag, (role, company, matched)) <- cases) {
       val p = Scalars.parseNotesRaw(notes, tag)
       assert((p.role, p.company, p.matchedTag) === ((role, company, matched)), s"notes='$notes'")

@@ -406,6 +406,31 @@ class GraphSpec extends SparkSpecBase {
     }
   }
 
+  test("hits: an edge with a null endpoint is dropped, never duplicating rows") {
+    val s = spark; import s.implicits._
+    // node 3 keeps a real out-edge, so its hub score (and the null
+    // edge's contribution) stays non-zero in every round
+    val clean = Seq((1L, Option(2L), 1.0), (2L, Option(3L), 2.0), (1L, Option(3L), 1.0),
+      (3L, Option(1L), 1.0))
+    val edges = (clean :+ ((3L, Option.empty[Long], 1.0))).toDF("src", "dst", "w")
+    val nodes = (1L to 3L).toDF("node")
+    def run(e: org.apache.spark.sql.DataFrame) = Graph.hits(nodes, e, iters = 3)
+      .collect().map(x => (x.getLong(0), x.getDouble(1), x.getDouble(2)))
+    val withNull = run(edges)
+    val ref = run(clean.toDF("src", "dst", "w")).map(x => x._1 -> x).toMap
+    assert(withNull.length === 3, withNull.mkString(", "))
+    withNull.foreach { case (k, hub, auth) =>
+      assert(math.abs(hub - ref(k)._2) < 1e-12 && math.abs(auth - ref(k)._3) < 1e-12,
+        s"node $k")
+    }
+    // each audited half-step keeps exactly one null-node row: its L1 total
+    for (cp <- Seq(false, true)) {
+      val (ac, hc) = Graph.hitsHalfStepAudit(nodes, edges, copartition = cp)
+      assert(ac.filter(col("node").isNull).count() === 1L, s"copartition=$cp")
+      assert(hc.filter(col("node").isNull).count() === 1L, s"copartition=$cp")
+    }
+  }
+
   test("labelPropagation: tie votes pick the smallest label") {
     val s = spark; import s.implicits._
     // node 3 hears labels 1 and 2 with equal weight → adopts 1

@@ -769,6 +769,28 @@ class LlmSpec extends SparkSpecBase {
     assert(ds.getAs[Long]("grams_above_cap") > 0L)
   }
 
+  test("containmentDiagnostics builds the gram index once: at most one more " +
+       "materialized frame than containmentPairs") {
+    val s = spark; import s.implicits._
+    val core = (1 to 40).map(i => s"tok$i").mkString(" ")
+    val wrapper = core + " " + (1 to 80).map(i => s"pad$i").mkString(" ")
+    val healthy = Seq((1L, core), (2L, wrapper),
+      (3L, (100 to 130).map(i => s"body$i").mkString(" "))).toDF("doc_id", "text")
+    def newFrames(run: => Unit): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      run
+      (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    }
+    val pairs = newFrames(Dedup.containmentPairs(healthy, "doc_id", "text",
+      n = 3, minContainment = 0.5, maxDf = 20).count())
+    val diag = newFrames(Dedup.containmentDiagnostics(healthy, "doc_id", "text",
+      n = 3, minContainment = 0.5, maxDf = 20).first())
+    assert(pairs > 0)
+    // the one extra frame is the counted-candidate table
+    assert(diag <= pairs + 1, s"containmentDiagnostics materialized $diag frames, " +
+      s"containmentPairs $pairs")
+  }
+
   test("df-cap saturation is LOUD: the exact tier warns when zero grams are " +
        "pairable, and stays quiet on a healthy corpus") {
     val s = spark; import s.implicits._
