@@ -19,7 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * per rel, all inside ONE serial row (the envelope is a single
   * document). This kernel emits the identical bytes in one pass:
   *
-  *  - per doc: `{"id":<str>,"name":<str>,"rels":[<rel>,…]}`;
+  *  - per doc: `{"id":<str>,"name":<str>,"rels":[<rel>,…]}`; a null doc,
+  *    or a doc whose `rels` is null, is left out;
   *  - per rel, keys in json.dumps sorted order:
   *    `{"dummy":…,"imdbMovieId":…,"location":…,"matchedCompanyName":…,
   *      "movieReleaseYear":…,"personMappedRole":…,"region":…,"seq":…}`;
@@ -44,7 +45,7 @@ case class JumpsJson(child: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(st: StructType, _)
-        if st.fieldNames.contains("id") && st.fieldNames.contains("name") &&
+        if Seq("id", "name").forall(f => st.find(_.name == f).exists(_.dataType == StringType)) &&
           st.fieldNames.contains("rels") =>
       st("rels").dataType match {
         case ArrayType(_: StructType, _) => TypeCheckResult.TypeCheckSuccess
@@ -52,7 +53,7 @@ case class JumpsJson(child: Expression)
           s"jumps_json expects rels: array<struct>, got $other")
       }
     case other => TypeCheckResult.TypeCheckFailure(
-      s"jumps_json expects array<struct<id,name,rels>>, got $other")
+      s"jumps_json expects array<struct<id: string, name: string, rels>>, got $other")
   }
 
   @transient private lazy val docSt =
@@ -106,34 +107,39 @@ case class JumpsJson(child: Expression)
     val docs = input.asInstanceOf[ArrayData]
     val sb = new java.lang.StringBuilder(1 << 16)
     var d = 0
+    var first = true
     while (d < docs.numElements()) {
-      if (d > 0) sb.append(',')
-      val doc = docs.getStruct(d, docSt.length)
-      sb.append("{\"id\":")
-      if (doc.isNullAt(idIdx)) sb.append("null")
-      else appendEscaped(sb, doc.getUTF8String(idIdx))
-      sb.append(",\"name\":")
-      if (doc.isNullAt(nameIdx)) sb.append("null")
-      else appendEscaped(sb, doc.getUTF8String(nameIdx))
-      sb.append(",\"rels\":[")
-      if (!doc.isNullAt(relsIdx)) {
+      // a null doc or a doc with null rels renders as nothing, as the
+      // reference's null docJson drops out of its array_join
+      val doc = if (docs.isNullAt(d)) null else docs.getStruct(d, docSt.length)
+      if (doc != null && !doc.isNullAt(relsIdx)) {
+        if (!first) sb.append(',')
+        first = false
+        sb.append("{\"id\":")
+        if (doc.isNullAt(idIdx)) sb.append("null")
+        else appendEscaped(sb, doc.getUTF8String(idIdx))
+        sb.append(",\"name\":")
+        if (doc.isNullAt(nameIdx)) sb.append("null")
+        else appendEscaped(sb, doc.getUTF8String(nameIdx))
+        sb.append(",\"rels\":[")
         val rels = doc.getArray(relsIdx)
         var r = 0
         while (r < rels.numElements()) {
           if (r > 0) sb.append(',')
-          val rel = rels.getStruct(r, relSt.length)
+          // a null rel renders every field as null, as the reference does
+          val rel = if (rels.isNullAt(r)) null else rels.getStruct(r, relSt.length)
           var f = 0
           while (f < relFields.length) {
             val (nm, idx, dt) = relFields(f)
             sb.append(if (f == 0) "{\"" else ",\"").append(nm).append("\":")
-            appendField(sb, rel, idx, dt)
+            if (rel == null) sb.append("null") else appendField(sb, rel, idx, dt)
             f += 1
           }
           sb.append('}')
           r += 1
         }
+        sb.append("]}")
       }
-      sb.append("]}")
       d += 1
     }
     UTF8String.fromString(sb.toString)

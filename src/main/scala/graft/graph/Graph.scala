@@ -23,16 +23,18 @@ import org.apache.spark.sql.functions._
   *   - Edge derivation is the W1/W2 jump pattern: one hash partition by
   *     person + local sort, then lag(); only (person, company) pairs
   *     shuffle. No self-joins.
-  *   - PageRank is the standard Pregel-style iterate: per iteration ONE
-  *     equi-join ranks⋈edges + one hash aggregate on dst, plus a scalar
-  *     aggregate for the dangling mass (broadcast back as a 1-row literal
-  *     — never collected to a driver loop over nodes). Lineage is
-  *     truncated every iteration (localCheckpoint — on a real cluster this
-  *     is the periodic-checkpoint pattern GraphX uses); out-shares are
-  *     computed once and persisted, so each iteration shuffles only the
-  *     (node, rank) table.
-  *   - Node/edge tables stay distributed throughout: nothing here assumes
-  *     the graph fits on the driver.
+  *   - The iterative loops (pagerank, label propagation, HITS) have two
+  *     delivery modes. Broadcast mode (`copartition = false`, what every
+  *     caller runs) keeps the node vector on the driver as a dense array
+  *     over the sorted node ids ([[EdgeBlocks]]): the edge list is packed
+  *     and persisted once per call, and each round is one Spark job that
+  *     folds the edges against the broadcast vector, one partial per node
+  *     per task. Its precondition is that the node vector fits on the
+  *     driver, which broadcast delivery needs anyway: the vector passes
+  *     through the driver every round. Co-partitioned mode
+  *     (`copartition = true`) keeps node and edge tables distributed and
+  *     hash-partitioned by node, with nothing node-sized on one machine:
+  *     the path for graphs whose node vector does not fit there.
   */
 object Graph {
 
@@ -84,64 +86,55 @@ object Graph {
     * count (deterministic — no convergence-dependent early exit, so the
     * result is a pure function of the graph and both engines can replay
     * it). r(v) ← (1−d)/N + d·(Σ_{u→v} r(u)·w(u,v)/wout(u) + dangling/N).
-    *
-    * Per iteration: one shuffle (the contrib aggregate on dst); the
-    * dangling mass is a scalar aggregate crossJoined back as a broadcast
-    * 1-row relation. `localCheckpoint` truncates lineage each round —
-    * without it the rank plan doubles per iteration (ranks feeds both the
-    * contrib join and the dangling aggregate) and analysis cost grows
-    * 2^iters.
+    * An edge whose dst is null or not a listed node counts in wout(u), and
+    * its share is lost, as in the oracle's `LEFT JOIN nodes`.
     *
     * Two rank-delivery strategies, identical arithmetic:
-    *  - `copartition = false`: the node-sized rank vector is broadcast
-    *    into the edge join each round. Simplest plan, but the vector
-    *    must fit on every executor — a broadcast CEILING at
-    *    billion-node graphs.
-    *  - `copartition = true` (the 100×-scale path, now the default for
-    *    the query tier): the edge-sized share table is hash-partitioned
-    *    by `src` ONCE and persisted; the rank vector lives
-    *    hash-partitioned by `node` (same partition count), so each
+    *  - `copartition = false`: the rank vector lives on the driver
+    *    ([[EdgeBlocks]]). One job sums each node's out-weight, then each
+    *    round is one job: the contrib fold over the persisted edge blocks
+    *    against the broadcast r/wout vector. Teleport, dangling mass and
+    *    the next-rank arithmetic are node-sized driver work.
+    *  - `copartition = true` (the scale path for node vectors that do not
+    *    fit on the driver): the edge-sized share table is
+    *    hash-partitioned by `src` ONCE and persisted; the rank vector
+    *    lives hash-partitioned by `node` (same partition count), so each
     *    round's contrib join is a shuffled-hash join with ZERO exchange
     *    on the edge side — localCheckpoint preserves outputPartitioning,
     *    and the next-rank frame inherits hash(node) through the
     *    node-spine left join, so after round 1 no side of either join
     *    re-shuffles. Per round the only shuffle is the contrib
-    *    aggregate on dst (node-sized), exactly like the broadcast form,
-    *    but nothing node-count-sized ever has to fit on one executor.
-    *    GraphSpec pins ≡ between the two forms. */
+    *    aggregate on dst (node-sized), and nothing node-count-sized ever
+    *    has to fit on one executor. `localCheckpoint` truncates lineage
+    *    each round — without it the rank plan doubles per iteration
+    *    (ranks feeds both the contrib join and the dangling aggregate)
+    *    and analysis cost grows 2^iters. GraphSpec pins ≡ between the
+    *    two forms. */
   def pagerank(nodes: DataFrame, edges: DataFrame,
                iters: Int = 15, damping: Double = 0.85,
                teleportTo: Option[Long] = None,
-               copartition: Boolean = false,
-               shareAllPre: Option[DataFrame] = None): DataFrame = {
+               copartition: Boolean = false): DataFrame =
+    if (copartition) pagerankCopartitioned(nodes, edges, iters, damping, teleportTo)
+    else pagerankOnDriver(nodes, edges, iters, damping, teleportTo)
+
+  private def pagerankCopartitioned(nodes: DataFrame, edges: DataFrame, iters: Int,
+                                    damping: Double, teleportTo: Option[Long]): DataFrame = {
     // checkpointed: the loop re-reads the node list every round (left
-    // join spine) — one materialization instead of 15 source scans.
-    // In copartition mode the spine is hash(node)-partitioned first, so
-    // every frame derived from it (ranks, next-rank joins) inherits the
-    // co-located layout for free.
-    val ndPlan = nodes.select(col("node"))
-    val nd = (if (copartition) ndPlan.repartition(col("node")) else ndPlan)
-      .ckpt()
+    // join spine) — one materialization instead of 15 source scans. The
+    // spine is hash(node)-partitioned first, so every frame derived from
+    // it (ranks, next-rank joins) inherits the co-located layout for free.
+    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
     val n = nd.count().toDouble // model parameter, like IVF's k — one scalar action
     // teleport distribution: uniform (classic) or an indicator at one node
     // (personalized PageRank — relevance of every node to the seed)
     def tCol = teleportTo
       .map(sd => when(col("node") === sd, lit(1.0)).otherwise(lit(0.0)))
       .getOrElse(lit(1.0 / n))
-    // shareAllPre: g2/g7 iterate the SAME normalized share table with
-    // different teleports — the caller memoizes one build
-    // (localCheckpoint preserves the hash(src) layout) and both queries
-    // ride it; ownership stays with the caller (no unpersist here).
-    val shareAll = shareAllPre.getOrElse(
-      shareTable(nd, edges, copartition).persist())
+    val shareAll = shareTable(nd, edges).persist()
     var ranks = nd.withColumn("r", tCol).loopCkpt()
-    // Broadcast mode: the rank vector is node-count sized
-    // (dimension-scale for this tier's company graphs) and
-    // checkpoint-backed, so the optimizer sees no stats — broadcast it
-    // EXPLICITLY or every iteration shuffle-joins the full share table.
-    // Copartition mode: the shuffled-hash hint BUILDS the node-sized
-    // rank side; both sides' existing hash layouts satisfy the join's
-    // distribution, so no exchange is inserted on either side.
+    // The shuffled-hash hint BUILDS the node-sized rank side; both sides'
+    // existing hash layouts satisfy the join's distribution, so no
+    // exchange is inserted on either side.
     // Only the NEXT RANK vector is checkpointed per round (one eager job
     // per iteration); the contrib aggregate stays a LAZY subtree inside
     // that plan, shared by its two consumers (the dangling-mass 1-row
@@ -152,8 +145,7 @@ object Graph {
     // recompute inside every rank reference), so one eager checkpoint
     // per round is the sweet spot.
     for (step <- 1 to iters) {
-      val rankSide = if (copartition) ranks.hint("shuffle_hash") else broadcast(ranks)
-      val contrib = contribOf(shareAll, rankSide)
+      val contrib = contribOf(shareAll, ranks.hint("shuffle_hash"))
       // the dangling mass is ONE value of the LAZY contrib subtree — it
       // rides as a 1-row aggregate crossJoined back as a broadcast row,
       // deduped against the join-side consumer by exchange reuse (the
@@ -162,9 +154,7 @@ object Graph {
       // arithmetic — the rank expression just reads it as a column.
       val dmRow = contrib.filter(col("dst").isNull)
         .agg(coalesce(sum("contrib"), lit(0.0)).as("__dm"))
-      val contribNN = contrib.filter(col("dst").isNotNull)
-      val contribSide = if (copartition) contribNN.hint("shuffle_hash")
-                        else broadcast(contribNN)
+      val contribSide = contrib.filter(col("dst").isNotNull).hint("shuffle_hash")
       val next = nd
         .join(contribSide, nd("node") === contribSide("dst"), "left")
         .crossJoin(broadcast(dmRow))
@@ -176,73 +166,73 @@ object Graph {
       graft.SessionHygiene.freeCheckpoint(ranks)
       ranks = cp
     }
-    if (shareAllPre.isEmpty) shareAll.unpersist()
+    shareAll.unpersist()
     ranks
   }
 
-  /** Deployment gate for the iterative loops' rank-delivery mode
-    * (pagerank/HITS/label propagation): below the threshold the
-    * node-sized rank vector broadcasts cheaply every round and measured
-    * 1.5-2× faster than co-partitioned delivery (round-9 A/B: g11 5.5 s
-    * broadcast vs 10.8 s co-partitioned, g2+g7 9.0 s vs 14.0 s); above
-    * it the per-round broadcast (nodeCount × ~24 B, re-shipped to every
-    * executor every iteration) becomes the scale ceiling and the
-    * hash(src)/hash(node) co-partitioned shuffled-hash path — zero
-    * per-round exchanges, nothing node-sized on one executor — takes
-    * over. 10M nodes ≈ 240 MB per broadcast round: well past where
-    * re-broadcasting beats one co-located layout. GraphSpec pins the two
-    * modes result-equal and the copartition plan exchange-free, so the
-    * gate only ever changes cost, never output. */
-  def copartitionFor(nodeCount: Long, threshold: Long = 10_000_000L): Boolean =
-    nodeCount > threshold
+  /** Broadcast-mode [[pagerank]]: r/wout is the broadcast vector, so the
+    * per-round fold is Σ w·x(src) per dst. */
+  private def pagerankOnDriver(nodes: DataFrame, edges: DataFrame, iters: Int,
+                               damping: Double, teleportTo: Option[Long]): DataFrame = {
+    val g = new EdgeBlocks(nodes, edges)
+    try {
+      val n = g.n
+      val t = teleportTo match {
+        case Some(sd) => val k = g.index(sd); Array.tabulate(n)(i => if (i == k) 1.0 else 0.0)
+        case None => Array.fill(n)(1.0 / n)
+      }
+      val (wout, hasOut) = g.merge(g.outWeight())
+      var r = t
+      for (_ <- 1 to iters) {
+        val x = Array.tabulate(n)(i => if (hasOut(i)) r(i) / wout(i) else 0.0)
+        val (contrib, _) = g.merge(g.spread(x, reverse = false))
+        val dm = (0 until n).iterator.filter(i => !hasOut(i)).map(i => r(i)).sum
+        r = Array.tabulate(n)(v => (1 - damping) * t(v) + damping * (contrib(v) + dm * t(v)))
+      }
+      g.frame("r" -> r)
+    } finally g.release()
+  }
 
-  /** The rank-delivery table pagerank iterates over: per-edge normalized
-    * share (w / out-weight) plus one NULL-dst sink row per dangling node
-    * (a dangling node emits its whole rank to the sink, so ONE join +
-    * aggregate per round yields both the per-dst contribs and the
-    * dangling mass — the NULL-dst group). With `copartition` the table
-    * pays its ONE hash(src) exchange here; every round's contrib join
-    * then reads it co-located. A pure function of (nodes, edges,
-    * copartition), so g2/g7 (same edges, different teleport) memoize ONE
-    * build and pass it via `shareAllPre`. */
-  /** The per-round contribution aggregate — THE shuffle every pagerank
-    * round pays, and the stage a power-law hot node stresses at 100×:
-    * all of the hot node's in-edges key to ONE dst. Safety rests on
-    * map-side PARTIAL aggregation (sum is algebraic, so each map task
-    * folds its slice of the hot key to a single row and the final
-    * aggregate receives at most one row per task per key, never the raw
-    * in-degree) — GraphSpec pins that property on this exact plan via
+  /** The per-round contribution aggregate of the co-partitioned loop —
+    * THE shuffle every round pays, and the stage a power-law hot node
+    * stresses at 100×: all of the hot node's in-edges key to ONE dst.
+    * Safety rests on map-side PARTIAL aggregation (sum is algebraic, so
+    * each map task folds its slice of the hot key to a single row and the
+    * final aggregate receives at most one row per task per key, never the
+    * raw in-degree) — GraphSpec pins that property on this exact plan via
     * [[pagerankContribAudit]] with a planted 100×-median-degree node.
     * ONE copy used by the loop and the audit so the pinned plan can't
-    * drift from the shipped one. HITS' half-steps and label
-    * propagation's (nd, label) count share the same
-    * algebraic-groupBy-sum shape and inherit the same absorption. */
+    * drift from the shipped one. */
   private def contribOf(shareAll: DataFrame, rankSide: DataFrame): DataFrame =
     shareAll
       .join(rankSide, shareAll("src") === rankSide("node"))
       .groupBy(col("dst")).agg(sum(col("share") * col("r")).as("contrib"))
 
-  /** Round-1 contrib plan, un-checkpointed, for GraphSpec's skew audit:
-    * the loop's own stage construction (same shareTable, same
-    * rank-delivery mode) with the checkpoint left off so the physical
-    * aggregate is inspectable. */
-  private[graft] def pagerankContribAudit(nodes: DataFrame, edges: DataFrame,
-                                          copartition: Boolean): DataFrame = {
-    val ndPlan = nodes.select(col("node"))
-    val nd = (if (copartition) ndPlan.repartition(col("node")) else ndPlan)
-      .ckpt()
+  /** Round-1 contrib plan of the co-partitioned loop, un-checkpointed, for
+    * GraphSpec's skew audit: the loop's own stage construction (same
+    * shareTable, same rank delivery) with the checkpoint left off so the
+    * physical aggregate is inspectable. */
+  private[graft] def pagerankContribAudit(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
     val n = nd.count().toDouble
     // checkpointed like the loop's persisted shareAll: the audited plan
     // must be the STEADY-STATE round (share table already materialized,
     // its one-time dangling-sink build not re-printed into every round)
-    val shareAll = shareTable(nd, edges, copartition).ckpt()
+    val shareAll = shareTable(nd, edges).ckpt()
     val ranks = nd.withColumn("r", lit(1.0 / n)).ckpt()
-    val rankSide = if (copartition) ranks.hint("shuffle_hash") else broadcast(ranks)
-    contribOf(shareAll, rankSide)
+    contribOf(shareAll, ranks.hint("shuffle_hash"))
   }
 
-  def shareTable(nodes: DataFrame, edges: DataFrame,
-                 copartition: Boolean = false): DataFrame = {
+  /** The rank-delivery table the co-partitioned loop iterates over:
+    * per-edge normalized share (w / out-weight) plus one NULL-dst sink
+    * row per dangling node (a dangling node emits its whole rank to the
+    * sink, so ONE join + aggregate per round yields both the per-dst
+    * contribs and the dangling mass — the NULL-dst group). An edge with a
+    * null dst counts in its src's out-weight but is not a sink row: its
+    * share is lost, exactly like an edge to an unlisted node. The table
+    * pays its ONE hash(src) exchange here; every round's contrib join
+    * then reads it co-located. */
+  private def shareTable(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val nd = nodes.select(col("node"))
     val wout = edges.groupBy("src").agg(sum("w").as("wout"))
     // checkpointed BEFORE the dangling derivation below references it a
@@ -258,8 +248,7 @@ object Graph {
       .join(share.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
       .select(col("node").as("src"), lit(null).cast("long").as("dst"),
         lit(1.0).as("share"))
-    val plan = share.unionByName(danglingSink)
-    if (copartition) plan.repartition(col("src")) else plan
+    share.filter(col("dst").isNotNull).unionByName(danglingSink).repartition(col("src"))
   }
 
   /** Company similarity by shared workforce: Jaccard overlap of the
@@ -312,7 +301,7 @@ object Graph {
     var k = 0
     var done = frontier.isEmpty
     // frontier/settled sets are checkpoint-backed (no optimizer stats) and
-    // node-bounded — broadcast them explicitly, as in pagerank
+    // node-bounded — broadcast them explicitly
     while (k < maxIter && !done) {
       k += 1
       val next = e.join(broadcast(frontier), frontier("node") === e("src"))
@@ -411,51 +400,67 @@ object Graph {
     * into a DuckDB oracle exactly like pagerank's; the mutual-recursion
     * power iteration is a contraction toward the principal eigenvectors
     * of AᵀA / AAᵀ, so summation-order float noise stays bounded and a
-    * trailing 6dp round absorbs it.
+    * trailing 6dp round absorbs it. Edges with a null endpoint are
+    * dropped. Requires a non-empty edge set (the L1 mass is otherwise
+    * zero and the quotient undefined).
     *
-    * Per half-step: ONE shuffle (the contrib aggregate over dst or src);
-    * the L1 normalizer is read as a single scalar off the checkpointed
-    * contrib table (pagerank's dangling-mass pattern — a 1-row driver
-    * read of an aggregate, not a data collect). The hub/auth vectors are
-    * node-count sized and checkpoint-backed (no optimizer stats), so by
-    * default they are broadcast EXPLICITLY into the edge join. With
-    * `copartition = true` (the 100×-scale path, pagerank's pattern) the
-    * edge table instead pays TWO one-time exchanges — hash(src) for the
-    * auth half-step, hash(dst) for the hub half-step — and every round's
+    * With `copartition = false` the hub and authority vectors live on the
+    * driver ([[EdgeBlocks]]) and each half-step is one job: the fold of
+    * the persisted edge blocks against the broadcast vector; the L1
+    * normalizer is driver arithmetic. This mode reads only edges between
+    * listed nodes. With `copartition = true` (pagerank's scale path) the
+    * edge table pays TWO one-time exchanges — hash(src) for the auth
+    * half-step, hash(dst) for the hub half-step — and every round's
     * vector join is a co-located shuffled-hash join: nothing node-sized
     * ever has to fit on one executor, and the edge table never
-    * re-shuffles. Requires a non-empty edge set (the L1 mass is
-    * otherwise zero and the quotient undefined). */
+    * re-shuffles. */
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int = 8,
            copartition: Boolean = false): DataFrame = {
     require(iters >= 1, s"hits needs at least one iteration, got $iters")
-    val ndPlan = nodes.select(col("node"))
-    val nd = (if (copartition) ndPlan.repartition(col("node")) else ndPlan)
-      .ckpt()
-    val e0 = hitsEdges(edges)
-    val e = (if (copartition) e0.repartition(col("src")) else e0).persist()
-    // derived from the PERSISTED e, not e0: building the dst copy from
-    // the raw plan would re-run the whole upstream edge derivation
-    val eDst = if (copartition) e.repartition(col("dst")).persist() else e
-    // rank-vector delivery per strategy (see scaladoc)
-    def side(v: DataFrame): DataFrame =
-      if (copartition) v.hint("shuffle_hash") else broadcast(v)
+    if (copartition) hitsCopartitioned(nodes, edges, iters) else hitsOnDriver(nodes, edges, iters)
+  }
+
+  /** Broadcast-mode [[hits]]: a node no edge reaches in a half-step stays
+    * at 0, as in the co-partitioned left-joined lift. */
+  private def hitsOnDriver(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
+    val g = new EdgeBlocks(nodes, edges)
+    try {
+      def halfStep(x: Array[Double], reverse: Boolean): Array[Double] = {
+        val (v, hit) = g.merge(g.spread(x, reverse))
+        val total = v.sum
+        Array.tabulate(g.n)(i => if (hit(i)) v(i) / total else 0.0)
+      }
+      var hub = Array.fill(g.n)(1.0)
+      var auth = hub
+      for (_ <- 1 to iters) {
+        auth = halfStep(hub, reverse = false)
+        hub = halfStep(auth, reverse = true)
+      }
+      g.frame("hub" -> hub, "auth" -> auth)
+    } finally g.release()
+  }
+
+  private def hitsCopartitioned(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
+    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
+    val e = hitsEdges(edges).repartition(col("src")).persist()
+    // derived from the PERSISTED e, not the raw edges: building the dst
+    // copy from the raw plan would re-run the whole upstream derivation
+    val eDst = e.repartition(col("dst")).persist()
+    def side(v: DataFrame): DataFrame = v.hint("shuffle_hash")
     // ONE eager job per ROUND (r16; was one per half-step): each
     // half-step aggregates per-`to` contribs AND the grand L1 total in a
     // single ROLLUP aggregate (the total is the grouping-total row,
-    // node = null — pagerank's dangling-sink posture), so the normalizer
-    // is a filter over the SAME aggregate output as the vector rows,
-    // never a second aggregate consumer. Only the HUB half-step is
-    // checkpointed per round; the authority half-step rides as a lazy
-    // rollup subtree inside it, its one exchange shared by both
-    // consumers (the r15 trim failed exactly because the OLD normalizer
-    // — an agg ON TOP of the half-step — did not share the exchange;
-    // filters over one rollup do). The L1 total now folds the joined
-    // edge rows directly instead of the per-node sums — a different
-    // summation TREE for the same value, within the operator's
-    // documented float-noise contract (the per-node order was already
-    // hash-partition-nondeterministic; the trailing 6dp round absorbs
-    // it — oracle re-pinned at both correctness scales).
+    // node = null), so the normalizer is a filter over the SAME aggregate
+    // output as the vector rows, never a second aggregate consumer. Only
+    // the HUB half-step is checkpointed per round; the authority
+    // half-step rides as a lazy rollup subtree inside it, its one
+    // exchange shared by both consumers (the r15 trim failed exactly
+    // because the OLD normalizer — an agg ON TOP of the half-step — did
+    // not share the exchange; filters over one rollup do). The L1 total
+    // folds the joined edge rows directly instead of the per-node sums —
+    // a different summation TREE for the same value, within the
+    // operator's documented float-noise contract (the trailing 6dp round
+    // absorbs it).
     var hub = nd.withColumn("h", lit(1.0)).loopCkpt()
     // hub checkpoints live TWO generations: the final lazy auth reads
     // the previous round's hub blocks until authCp materializes below
@@ -480,10 +485,10 @@ object Graph {
     // cache — auth is a lazy subtree over e and the previous hub ckpt
     val authCp = auth.loopCkpt()
     auth = authCp
-    e.unpersist(); if (copartition) eDst.unpersist()
+    e.unpersist(); eDst.unpersist()
     // lift the edge-supported vectors onto the full node spine (nd is
-    // hash(node)-partitioned in copartition mode, so the hinted joins
-    // stay exchange-free on the spine side)
+    // hash(node)-partitioned, so the hinted joins stay exchange-free on
+    // the spine side)
     val hubL = side(hub.select(col("node"), col("h").as("hub")))
     val authL = side(auth.select(col("node"), col("h").as("auth")))
     nd.join(hubL, Seq("node"), "left")
@@ -500,35 +505,31 @@ object Graph {
     edges.select(col("src"), col("dst"), col("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
 
-  /** The HITS half-step aggregate — pagerank's [[contribOf]] in both edge
-    * directions (authority: sum over in-edges; hub: sum over out-edges),
-    * as a ROLLUP so the L1 normalizer is the grouping-total row
-    * (node = null) of the SAME aggregate. A power-law hot node stresses
-    * the `to`-keyed shuffle exactly like the pagerank contrib: safety is
-    * map-side PARTIAL aggregation (rollup partial-aggregates per
-    * grouping set), pinned by GraphSpec via [[hitsHalfStepAudit]] on
-    * this one shared copy. */
+  /** The co-partitioned HITS half-step aggregate — pagerank's
+    * [[contribOf]] in both edge directions (authority: sum over in-edges;
+    * hub: sum over out-edges), as a ROLLUP so the L1 normalizer is the
+    * grouping-total row (node = null) of the SAME aggregate. A power-law
+    * hot node stresses the `to`-keyed shuffle exactly like the pagerank
+    * contrib: safety is map-side PARTIAL aggregation (rollup
+    * partial-aggregates per grouping set), pinned by GraphSpec via
+    * [[hitsHalfStepAudit]] on this one shared copy. */
   private def halfStepOf(edges: DataFrame, vecSide: DataFrame,
                          from: String, to: String): DataFrame =
     edges.join(vecSide, edges(from) === vecSide("node"))
       .rollup(col(to).as("node")).agg(sum(col("w") * col("h")).as("v"))
 
-  /** Round-1 half-step plans (authority then hub), un-checkpointed, for
-    * GraphSpec's skew audit — the loop's own stage construction (same
-    * edge layouts, same rank-delivery mode) with the checkpoints left
-    * off so the physical aggregates are inspectable. */
-  private[graft] def hitsHalfStepAudit(nodes: DataFrame, edges: DataFrame,
-                                       copartition: Boolean): (DataFrame, DataFrame) = {
-    val ndPlan = nodes.select(col("node"))
-    val nd = (if (copartition) ndPlan.repartition(col("node")) else ndPlan)
-      .ckpt()
-    val e0 = hitsEdges(edges)
-    val e = (if (copartition) e0.repartition(col("src")) else e0).ckpt()
-    val eDst = if (copartition) e.repartition(col("dst")).ckpt() else e
-    def side(v: DataFrame): DataFrame =
-      if (copartition) v.hint("shuffle_hash") else broadcast(v)
-    val vec = nd.withColumn("h", lit(1.0)).ckpt()
-    (halfStepOf(e, side(vec), "src", "dst"), halfStepOf(eDst, side(vec), "dst", "src"))
+  /** Round-1 half-step plans (authority then hub) of the co-partitioned
+    * loop, un-checkpointed, for GraphSpec's skew audit — the loop's own
+    * stage construction (same edge layouts, same vector delivery) with
+    * the checkpoints left off so the physical aggregates are
+    * inspectable. */
+  private[graft] def hitsHalfStepAudit(nodes: DataFrame,
+                                       edges: DataFrame): (DataFrame, DataFrame) = {
+    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
+    val e = hitsEdges(edges).repartition(col("src")).ckpt()
+    val eDst = e.repartition(col("dst")).ckpt()
+    val vec = nd.withColumn("h", lit(1.0)).ckpt().hint("shuffle_hash")
+    (halfStepOf(e, vec, "src", "dst"), halfStepOf(eDst, vec, "dst", "src"))
   }
 
   /** Unrolled DuckDB oracle for [[hits]] over the supplier transition
@@ -578,36 +579,58 @@ object Graph {
     * counts, so vote sums are exact in doubles and the tiebreak can never
     * diverge across engines.
     *
-    * Per round: one equi-join of the symmetrized edges against the
-    * broadcast label vector, a (node, label) weight aggregate, and a
-    * deterministic argmax via one more hash aggregate (max of a
-    * (weight, -label) struct — NO per-node window/sort). With
-    * `copartition = true` (pagerank's pattern) the symmetrized edge
-    * table is hash(dst)-partitioned once and each round's label join is
-    * a co-located shuffled-hash join — no label-vector broadcast
-    * ceiling at billion-node graphs. */
+    * With `copartition = false` the label vector lives on the driver
+    * ([[EdgeBlocks]]) as node indices (sorted ids, so the smallest label
+    * is the smallest index) and each round is one job: each task sums
+    * its edges' votes per (node, neighbour label) in both directions,
+    * and the driver merges them and takes the argmax. Only edges between
+    * listed nodes vote. With `copartition = true` (pagerank's scale path)
+    * the symmetrized edge table is hash(dst)-partitioned once, each
+    * round's label join is a co-located shuffled-hash join, and the
+    * argmax is one more hash aggregate (max of a (weight, -label) struct
+    * — NO per-node window/sort). */
   def labelPropagation(nodes: DataFrame, edges: DataFrame, iters: Int = 6,
-                       copartition: Boolean = false): DataFrame = {
-    val ndPlan = nodes.select(col("node"))
-    val nd = (if (copartition) ndPlan.repartition(col("node")) else ndPlan)
-      .ckpt()
-    val und0 = edges.select(col("src"), col("dst"), col("w"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-    val und = (if (copartition) und0.repartition(col("dst")) else und0).persist()
-    def side(v: DataFrame): DataFrame =
-      if (copartition) v.hint("shuffle_hash") else broadcast(v)
+                       copartition: Boolean = false): DataFrame =
+    if (copartition) labelPropagationCopartitioned(nodes, edges, iters)
+    else labelPropagationOnDriver(nodes, edges, iters)
+
+  private def labelPropagationOnDriver(nodes: DataFrame, edges: DataFrame,
+                                       iters: Int): DataFrame = {
+    val g = new EdgeBlocks(nodes, edges)
+    try {
+      var label = Array.tabulate(g.n)(identity)
+      for (_ <- 1 to iters) {
+        val weight = scala.collection.mutable.LongMap.empty[Double]
+        for (p <- g.votes(label); i <- p.keys.indices)
+          weight(p.keys(i)) = weight.getOrElse(p.keys(i), 0.0) + p.v(i)
+        // a node without votes has no edges: it keeps its own label
+        val next = Array.tabulate(g.n)(identity)
+        val best = Array.fill(g.n)(Double.NegativeInfinity)
+        weight.foreach { case (k, w) =>
+          val (v, l) = ((k >>> 32).toInt, k.toInt)
+          if (w > best(v) || (w == best(v) && l < next(v))) {
+            best(v) = w; next(v) = l
+          }
+        }
+        label = next
+      }
+      g.frame("label" -> label.map(i => g.ids(i)))
+    } finally g.release()
+  }
+
+  private def labelPropagationCopartitioned(nodes: DataFrame, edges: DataFrame,
+                                            iters: Int): DataFrame = {
+    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
+    val und = undirected(edges).repartition(col("dst")).persist()
     var labels = nd.withColumn("label", col("node")).loopCkpt()
     for (_ <- 1 to iters) {
-      // the vote argmax stays LAZY inside the round's broadcast build, so
-      // each round pays exactly ONE eager checkpoint (the new label
-      // vector), not two
-      val labelSide = side(labels)
-      val winners = voteOf(und, labelSide)
+      // the vote argmax stays LAZY inside the round's build, so each
+      // round pays exactly ONE eager checkpoint (the new label vector),
+      // not two
+      val winners = voteOf(und, labels.hint("shuffle_hash")).hint("shuffle_hash")
       // a node absent from the vote table has no edges, so its label is
       // still its initial id — coalesce to node ≡ coalesce to prev label
-      val winnerSide = side(winners)
-      val next = nd.join(winnerSide, nd("node") === winnerSide("nd"), "left")
+      val next = nd.join(winners, nd("node") === winners("nd"), "left")
         .select(nd("node"), coalesce(col("lbl"), nd("node")).as("label"))
         .loopCkpt()
       graft.SessionHygiene.freeCheckpoint(labels)
@@ -617,11 +640,19 @@ object Graph {
     labels
   }
 
-  /** The label-propagation vote: a (node, label) weight sum followed by a
-    * deterministic argmax (max of a (weight, -label) struct — no
-    * per-node window). Both aggregates are algebraic, so a hot node's
-    * votes partial-aggregate map-side exactly like the pagerank contrib;
-    * GraphSpec pins that via [[lpVoteAudit]] on this one shared copy. */
+  /** The symmetrized edge list label propagation votes over: one row per
+    * (src, dst) with the summed weight of both directions. */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), col("w"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+      .groupBy("src", "dst").agg(sum("w").as("w"))
+
+  /** The co-partitioned label-propagation vote: a (node, label) weight
+    * sum followed by a deterministic argmax (max of a (weight, -label)
+    * struct — no per-node window). Both aggregates are algebraic, so a
+    * hot node's votes partial-aggregate map-side exactly like the
+    * pagerank contrib; GraphSpec pins that via [[lpVoteAudit]] on this
+    * one shared copy. */
   private def voteOf(und: DataFrame, labelSide: DataFrame): DataFrame =
     und
       .join(labelSide, und("dst") === labelSide("node"))
@@ -631,23 +662,15 @@ object Graph {
       .agg(max(struct(col("wv"), (-col("label")).as("nl"))).as("m"))
       .select(col("nd"), (-col("m.nl")).as("lbl"))
 
-  /** Round-1 vote plan, un-checkpointed, for GraphSpec's skew audit —
-    * the loop's own stage construction (same symmetrized edge layout,
-    * same label-delivery mode) with the checkpoint left off. */
-  private[graft] def lpVoteAudit(nodes: DataFrame, edges: DataFrame,
-                                 copartition: Boolean): DataFrame = {
-    val ndPlan = nodes.select(col("node"))
-    val nd = (if (copartition) ndPlan.repartition(col("node")) else ndPlan)
-      .ckpt()
-    val und0 = edges.select(col("src"), col("dst"), col("w"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-    val und = (if (copartition) und0.repartition(col("dst")) else und0)
-      .ckpt()
-    def side(v: DataFrame): DataFrame =
-      if (copartition) v.hint("shuffle_hash") else broadcast(v)
+  /** Round-1 vote plan of the co-partitioned loop, un-checkpointed, for
+    * GraphSpec's skew audit — the loop's own stage construction (same
+    * symmetrized edge layout, same label delivery) with the checkpoint
+    * left off. */
+  private[graft] def lpVoteAudit(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
+    val und = undirected(edges).repartition(col("dst")).ckpt()
     val labels = nd.withColumn("label", col("node")).ckpt()
-    voteOf(und, side(labels))
+    voteOf(und, labels.hint("shuffle_hash"))
   }
 
   /** DuckDB oracle for [[labelPropagation]]: rounds unrolled into chained

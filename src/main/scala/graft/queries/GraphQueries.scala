@@ -48,25 +48,6 @@ object GraphQueries {
     QueryMemo.frame(s, d, "graph_backbone")(Graph.backbone(e, k = 5))
   }
 
-  /** g2 and g7 iterate the SAME normalized share+dangling-sink table
-    * (only the teleport differs): one memoized build serves both — the
-    * round-8 verdict measured the un-shared pair rebuilding it twice.
-    *
-    * Delivery mode for the whole query tier is BROADCAST
-    * (copartition=false): this graph is supplier-count-sized, far below
-    * any broadcast ceiling, and the A/B measured broadcast strictly
-    * faster (g11 5.5 s vs 10.8 s co-partitioned; g2+g7 9.0 s vs 14.0 s).
-    * The copartition path stays the documented 100×-scale gate
-    * ([[Graph.copartitionFor]]) and GraphSpec pins its results ≡
-    * broadcast plus its zero-per-round-exchange plan shape. */
-  private def shareMemo(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val e = edgesMemo(s, d)
-    QueryMemo.frame(s, d, "graph_pagerank_share") {
-      Graph.shareTable(Tables.supplier(s, d).select(col("s_suppkey").as("node")),
-        e, copartition = false)
-    }
-  }
-
   val defs: Seq[QueryDef] = Seq(
 
     // ---- g1: the transition matrix (edge weights + P(dst|src)) ----
@@ -90,11 +71,10 @@ object GraphQueries {
       (s, d) => {
         val edges = edgesMemo(s, d)
         val nodes = Tables.supplier(s, d).select(col("s_suppkey").as("node"))
-        // broadcast delivery: see shareMemo's scaladoc — measured 1.5-2×
-        // faster than co-partitioned at this node count; copartition is
-        // the >copartitionFor-threshold scale path, GraphSpec-pinned ≡
-        Graph.pagerank(nodes, edges, iters = 15, damping = 0.85,
-            copartition = false, shareAllPre = Some(shareMemo(s, d)))
+        // broadcast delivery (the rank vector on the driver): this graph
+        // is supplier-count-sized, so the vector fits on the driver many
+        // times over; the co-partitioned scale path is GraphSpec-pinned ≡
+        Graph.pagerank(nodes, edges, iters = 15, damping = 0.85, copartition = false)
           .select(col("node"), round(col("r"), 6).as("pagerank"))
           .orderBy("node")
       },
@@ -137,8 +117,7 @@ object GraphQueries {
         val edges = edgesMemo(s, d)
         val nodes = Tables.supplier(s, d).select(col("s_suppkey").as("node"))
         Graph.pagerank(nodes, edges, iters = 15, damping = 0.85,
-            teleportTo = Some(0L), copartition = false,
-            shareAllPre = Some(shareMemo(s, d)))
+            teleportTo = Some(0L), copartition = false)
           .select(col("node"), round(col("r"), 6).as("ppr"))
           .orderBy("node")
       },
@@ -219,7 +198,7 @@ object GraphQueries {
       (s, d) => {
         Graph.labelPropagation(
             Tables.supplier(s, d).select(col("s_suppkey").as("node")),
-            // broadcast below the copartitionFor threshold (see shareMemo)
+            // broadcast delivery: the label vector fits on the driver (see g2)
             backboneMemo(s, d), iters = 6, copartition = false)
           .select(col("node"), col("label").as("community"))
           .orderBy("node")
@@ -240,9 +219,8 @@ object GraphQueries {
       (s, d) => {
         val edges = edgesMemo(s, d)
         val nodes = Tables.supplier(s, d).select(col("s_suppkey").as("node"))
-        // broadcast below the copartitionFor threshold: the round-8
-        // copartition default DOUBLED g11's minimum (ADVICE r8) — the
-        // co-partitioned path stays GraphSpec-covered
+        // broadcast delivery: the hub/authority vectors fit on the driver
+        // (see g2); the co-partitioned path stays GraphSpec-covered
         Graph.hits(nodes, edges, iters = 8, copartition = false)
           .select(col("node"), round(col("hub"), 6).as("hub"),
             round(col("auth"), 6).as("auth"))

@@ -2,6 +2,7 @@ package graft.graph
 
 import graft.SparkSpecBase
 import graft.llm.Dedup
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpecBase {
@@ -158,29 +159,41 @@ class GraphSpec extends SparkSpecBase {
       local.foreach { case (k, v) =>
         assert(math.abs(v - got(k)) < 1e-12, s"node $k cp=$cp") }
     }
-    // plan pin on the loop's own stage (pagerankContribAudit builds it
-    // through the same contribOf the rounds run): the groupBy(dst) sum
-    // must PARTIAL-aggregate before its exchange, so each map task folds
-    // its slice of the hot key to one row and the final aggregate
-    // receives at most one row per task per key — never the raw
-    // in-degree. That property, not luck, is what bounds the hot node's
-    // reduce-side state at 100×. HITS' half-steps and label
-    // propagation's (nd, label) count are the same algebraic
-    // groupBy-sum/count shape and inherit the same absorption.
-    for (cp <- Seq(false, true)) {
-      val audit = Graph.pagerankContribAudit(nodes, edges, copartition = cp)
-      audit.collect() // finalize AQE
-      val plan = audit.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(plan.contains("partial_sum"),
-        s"no map-side partial aggregation (cp=$cp):\n$plan")
-      assert("HashAggregate".r.findAllIn(plan).size >= 2,
-        s"expected partial+final hash aggregates (cp=$cp):\n$plan")
-      assert(plan.contains("Exchange hashpartitioning(dst"),
-        s"missing the dst aggregate exchange (cp=$cp):\n$plan")
-      if (cp) assert(!plan.contains("BroadcastExchange"),
-        s"copartitioned audit must not broadcast the rank vector:\n$plan")
-    }
+    // plan pin on the co-partitioned loop's own stage (pagerankContribAudit
+    // builds it through the same contribOf the rounds run): the
+    // groupBy(dst) sum must PARTIAL-aggregate before its exchange, so
+    // each map task folds its slice of the hot key to one row and the
+    // final aggregate receives at most one row per task per key — never
+    // the raw in-degree. That property, not luck, is what bounds the hot
+    // node's reduce-side state at 100×.
+    val audit = Graph.pagerankContribAudit(nodes, edges)
+    audit.collect() // finalize AQE
+    val plan = audit.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(plan.contains("partial_sum"), s"no map-side partial aggregation:\n$plan")
+    assert("HashAggregate".r.findAllIn(plan).size >= 2,
+      s"expected partial+final hash aggregates:\n$plan")
+    assert(plan.contains("Exchange hashpartitioning(dst"),
+      s"missing the dst aggregate exchange:\n$plan")
+    assert(!plan.contains("BroadcastExchange"),
+      s"copartitioned audit must not broadcast the rank vector:\n$plan")
+    // broadcast mode: the same bound on the driver merge — the contrib
+    // fold the rounds run hands the hot node over as ONE entry per task
+    // (the edges are spread over 4 partitions, so 4 tasks see its spokes)
+    val g = new EdgeBlocks(nodes, edges.repartition(4))
+    try assertFoldAbsorbs(g.spread(Array.fill(g.n)(1.0 / g.n), reverse = false),
+      g.index(0L), "pagerank contrib")
+    finally g.release()
+  }
+
+  /** The broadcast-mode skew pin: a fold's per-task partials hold each key
+    * at most once, and the hot key's edges span several tasks, each of
+    * which still hands it over as a single entry. */
+  private def assertFoldAbsorbs(parts: Array[Partial], hot: Long, what: String): Unit = {
+    parts.foreach(p => assert(p.keys.distinct.length === p.keys.length, s"$what: repeated key"))
+    val perTask = parts.map(_.keys.count(_ == hot))
+    assert(perTask.count(_ == 1) > 1 && perTask.forall(_ <= 1),
+      s"$what: hot key entries per task ${perTask.mkString(",")}")
   }
 
   test("hits + labelPropagation skew: planted 200×-median hot node — partial agg absorbs, both modes exact") {
@@ -243,35 +256,43 @@ class GraphSpec extends SparkSpecBase {
       assert(l === lpRef, s"labelPropagation cp=$cp")
     }
 
-    // plan pins through the loops' OWN stage constructions: every hot-key
-    // shuffle (both HITS half-steps, the LP (nd, label) vote sum and its
-    // argmax) must PARTIAL-aggregate map-side before its exchange —
-    // previously this was inherited from the pagerank pin by argument
-    // only; now each loop's audited plan asserts it directly
-    for (cp <- Seq(false, true)) {
-      val (ac, hc) = Graph.hitsHalfStepAudit(nodes, edges, copartition = cp)
-      for ((df, nm) <- Seq((ac, "auth"), (hc, "hub"))) {
-        df.collect()
-        val plan = df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-        assert(plan.contains("partial_sum"),
-          s"no map-side partial aggregation in HITS $nm step (cp=$cp):\n$plan")
-        assert("HashAggregate".r.findAllIn(plan).size >= 2,
-          s"expected partial+final hash aggregates in HITS $nm step (cp=$cp):\n$plan")
-        if (cp) assert(!plan.contains("BroadcastExchange"),
-          s"copartitioned HITS $nm step must not broadcast the vector:\n$plan")
-      }
-      val vote = Graph.lpVoteAudit(nodes, edges, copartition = cp)
-      vote.collect()
-      val plan = vote.queryExecution.executedPlan.toString
+    // plan pins through the co-partitioned loops' OWN stage
+    // constructions: every hot-key shuffle (both HITS half-steps, the LP
+    // (nd, label) vote sum and its argmax) must PARTIAL-aggregate
+    // map-side before its exchange
+    val (ac, hc) = Graph.hitsHalfStepAudit(nodes, edges)
+    for ((df, nm) <- Seq((ac, "auth"), (hc, "hub"))) {
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
         .split("== Initial Plan ==").head
       assert(plan.contains("partial_sum"),
-        s"no map-side partial vote aggregation (cp=$cp):\n$plan")
-      assert(plan.contains("partial_max"),
-        s"no map-side partial argmax (cp=$cp):\n$plan")
-      if (cp) assert(!plan.contains("BroadcastExchange"),
-        s"copartitioned LP vote must not broadcast the label vector:\n$plan")
+        s"no map-side partial aggregation in HITS $nm step:\n$plan")
+      assert("HashAggregate".r.findAllIn(plan).size >= 2,
+        s"expected partial+final hash aggregates in HITS $nm step:\n$plan")
+      assert(!plan.contains("BroadcastExchange"),
+        s"copartitioned HITS $nm step must not broadcast the vector:\n$plan")
     }
+    val vote = Graph.lpVoteAudit(nodes, edges)
+    vote.collect()
+    val plan = vote.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(plan.contains("partial_sum"), s"no map-side partial vote aggregation:\n$plan")
+    assert(plan.contains("partial_max"), s"no map-side partial argmax:\n$plan")
+    assert(!plan.contains("BroadcastExchange"),
+      s"copartitioned LP vote must not broadcast the label vector:\n$plan")
+
+    // broadcast mode: the folds the rounds run. The authority half-step
+    // keys by dst (the hot node); the hub half-step keys by src. The LP
+    // vote keys by (node, label): with every neighbour on one label the
+    // hot node's 200 votes reach the merge as one entry per task.
+    val g = new EdgeBlocks(nodes, edges.repartition(4))
+    try {
+      val hot = g.index(0L).toLong
+      assertFoldAbsorbs(g.spread(Array.fill(g.n)(1.0), reverse = false), hot, "HITS auth")
+      val hub = g.spread(Array.fill(g.n)(1.0), reverse = true)
+      hub.foreach(p => assert(p.keys.distinct.length === p.keys.length, "HITS hub: repeated key"))
+      assertFoldAbsorbs(g.votes(Array.fill(g.n)(1)), hot << 32 | 1, "LP vote")
+    } finally g.release()
   }
 
   test("pagerank: symmetric cycle is uniform") {
@@ -423,11 +444,17 @@ class GraphSpec extends SparkSpecBase {
       assert(math.abs(hub - ref(k)._2) < 1e-12 && math.abs(auth - ref(k)._3) < 1e-12,
         s"node $k")
     }
-    // each audited half-step keeps exactly one null-node row: its L1 total
-    for (cp <- Seq(false, true)) {
-      val (ac, hc) = Graph.hitsHalfStepAudit(nodes, edges, copartition = cp)
-      assert(ac.filter(col("node").isNull).count() === 1L, s"copartition=$cp")
-      assert(hc.filter(col("node").isNull).count() === 1L, s"copartition=$cp")
+    // co-partitioned: each audited half-step keeps exactly one null-node
+    // row, its L1 total
+    val (ac, hc) = Graph.hitsHalfStepAudit(nodes, edges)
+    assert(ac.filter(col("node").isNull).count() === 1L)
+    assert(hc.filter(col("node").isNull).count() === 1L)
+    val cp = Graph.hits(nodes, edges, iters = 3, copartition = true)
+      .collect().map(x => (x.getLong(0), x.getDouble(1), x.getDouble(2)))
+    assert(cp.length === 3, cp.mkString(", "))
+    cp.foreach { case (k, hub, auth) =>
+      assert(math.abs(hub - ref(k)._2) < 1e-12 && math.abs(auth - ref(k)._3) < 1e-12,
+        s"node $k copartition")
     }
   }
 
@@ -500,5 +527,97 @@ class GraphSpec extends SparkSpecBase {
         Seq((1L, 2L)).toDF("src", "dst"), k = 2)
       .filter(col("in_core")).count()
     assert(none === 0L)
+  }
+
+  test("pagerank: a null dst loses its share like an unlisted dst, in both modes") {
+    val s = spark; import s.implicits._
+    // the 3-cycle plus (1, null): node 1 keeps the null edge in its
+    // out-weight, and the edge's share leaves the graph, as an edge to
+    // an unlisted node 9 does
+    val nodesSeq = Seq(1L, 2L, 3L)
+    val cycle = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 1L, 1.0))
+    val nodes = nodesSeq.toDF("node")
+    val withNull = (cycle.map(e => (e._1, Option(e._2), e._3)) :+ ((1L, Option.empty[Long], 1.0)))
+      .toDF("src", "dst", "w")
+    val expected = pagerankLocal(nodesSeq, cycle :+ ((1L, 9L, 1.0)), iters = 15, d = 0.85)
+    assert(expected.values.sum < 0.5, "the lost share leaves mass outside the graph")
+    for (cp <- Seq(false, true)) {
+      val got = Graph.pagerank(nodes, withNull, copartition = cp)
+        .as[(Long, Double)].collect().toMap
+      assert(got.keySet == expected.keySet)
+      expected.foreach { case (k, v) =>
+        assert(math.abs(v - got(k)) < 1e-12, s"node $k cp=$cp got $got") }
+    }
+    // label propagation and HITS ignore the null edge: the cycle's answer
+    val clean = cycle.toDF("src", "dst", "w")
+    for (cp <- Seq(false, true)) {
+      def lp(e: org.apache.spark.sql.DataFrame) =
+        Graph.labelPropagation(nodes, e, iters = 3, copartition = cp).as[(Long, Long)].collect().toMap
+      assert(lp(withNull) === lp(clean), s"labelPropagation cp=$cp")
+      def hits(e: org.apache.spark.sql.DataFrame) = Graph.hits(nodes, e, iters = 3, copartition = cp)
+        .as[(Long, Double, Double)].collect().map(t => t._1 -> t).toMap
+      val (h, ref) = (hits(withNull), hits(clean))
+      assert(h.keySet === ref.keySet)
+      h.foreach { case (k, (_, hb, au)) =>
+        assert(math.abs(hb - ref(k)._2) < 1e-12 && math.abs(au - ref(k)._3) < 1e-12,
+          s"hits node $k cp=$cp") }
+    }
+  }
+
+  /** Spark jobs started by `body` on this thread, counted by a listener:
+    * a marker job in its own group runs after `body`, and since the
+    * listener bus delivers events in order, seeing the marker means every
+    * earlier job start has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (group, marker) = ("graphspec-jobs", "graphspec-marker")
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet()
+          case Some(`marker`) => done.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      counted.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("broadcast-mode loops: one Spark job per round (HITS: one per half-step), no leftover persisted RDDs") {
+    val s = spark; import s.implicits._
+    val nodes = (1L to 5L).toDF("node")
+    val edges = Seq((1L, 2L, 2.0), (1L, 3L, 1.0), (2L, 3L, 1.0), (3L, 4L, 5.0),
+      (4L, 2L, 1.0)).toDF("src", "dst", "w")
+    val loops = Seq[(String, Int, Int => org.apache.spark.sql.DataFrame)](
+      ("pagerank", 1, k => Graph.pagerank(nodes, edges, iters = k)),
+      ("labelPropagation", 1, k => Graph.labelPropagation(nodes, edges, iters = k)),
+      ("hits", 2, k => Graph.hits(nodes, edges, iters = k)))
+    for ((name, perRound, run) <- loops) {
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val Seq(jk, jk1) = Seq(2, 3).map(k => jobsOf(run(k).collect()))
+      assert(jk1 - jk === perRound, s"$name: $jk jobs at 2 rounds, $jk1 at 3")
+      assert(spark.sparkContext.getPersistentRDDs.keySet === persisted, name)
+    }
+  }
+
+  test("broadcast-mode loops keep the input's integral node id type") {
+    val s = spark; import s.implicits._
+    val edges = Seq((1, 2, 2.0), (1, 3, 1.0), (2, 3, 1.0), (3, 1, 5.0)).toDF("src", "dst", "w")
+    val nodes = (1 to 4).toDF("node")
+    val lp = Graph.labelPropagation(nodes, edges, iters = 2)
+    assert(lp.schema.map(_.dataType.typeName) === Seq("integer", "integer"))
+    assert(lp.as[(Int, Int)].collect().toMap === Graph.labelPropagation(nodes, edges,
+      iters = 2, copartition = true).as[(Int, Int)].collect().toMap)
+    val pr = Graph.pagerank(nodes, edges)
+    assert(pr.schema.map(_.dataType.typeName) === Seq("integer", "double"))
   }
 }

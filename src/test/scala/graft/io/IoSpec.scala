@@ -248,4 +248,36 @@ class IoSpec extends SparkSpecBase {
     assert(viaKernel === viaColumns)
     assert(expected.contains(viaKernel), "kernel render is the jumps section of the envelope")
   }
+
+  test("JumpsJson kernel ≡ reference on null rels, a null doc and a null rel; id/name must be strings") {
+    import graft.analytics.Envelope
+    val relT = "struct<dummy:boolean,imdbMovieId:string,location:string,matchedCompanyName:string," +
+      "movieReleaseYear:bigint,personMappedRole:string,region:string,seq:bigint>"
+    val rel = "named_struct('dummy', true, 'imdbMovieId', 'm1', 'location', 'l', " +
+      "'matchedCompanyName', 'c', 'movieReleaseYear', 2001L, 'personMappedRole', 'r', " +
+      "'region', 'g', 'seq', 0L)"
+    // the null-rels doc comes first, so a dropped doc must not leave a comma
+    val env = spark.sql(s"""SELECT array(
+      |  named_struct('id', 'p2', 'name', 'b', 'rels', CAST(NULL AS array<$relT>)),
+      |  named_struct('id', 'p1', 'name', 'a', 'rels', array($rel, CAST(NULL AS $relT))),
+      |  CAST(NULL AS struct<id:string,name:string,rels:array<$relT>>),
+      |  named_struct('id', 'p3', 'name', CAST(NULL AS STRING), 'rels', array($rel))
+      |) AS jumps""".stripMargin)
+    val viaKernel = env
+      .select(graft.functions.JumpsJson(col("jumps")).as("jumps_json"))
+      .head.getString(0)
+    assert(viaKernel === Envelope.jumpsJsonReference(env).head.getString(0))
+    val relJson = "{\"dummy\":true,\"imdbMovieId\":\"m1\",\"location\":\"l\"," +
+      "\"matchedCompanyName\":\"c\",\"movieReleaseYear\":2001,\"personMappedRole\":\"r\"," +
+      "\"region\":\"g\",\"seq\":0}"
+    val nullRel = "{\"dummy\":null,\"imdbMovieId\":null,\"location\":null," +
+      "\"matchedCompanyName\":null,\"movieReleaseYear\":null,\"personMappedRole\":null," +
+      "\"region\":null,\"seq\":null}"
+    assert(viaKernel === s"""{"id":"p1","name":"a","rels":[$relJson,$nullRel]},""" +
+      s"""{"id":"p3","name":null,"rels":[$relJson]}""")
+    val intId = spark.sql(s"SELECT array(named_struct('id', 1, 'name', 'a', 'rels', array($rel))) AS jumps")
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      intId.select(graft.functions.JumpsJson(col("jumps"))).head())
+    assert(err.getMessage.contains("id: string"), err.getMessage)
+  }
 }

@@ -1810,4 +1810,17 @@ class LlmSpec extends SparkSpecBase {
     assert(got.contains((0L, 2L)) && got((0L, 2L)) > 0)
     assert(!got.keySet.exists(p => p._1 == 3L || p._2 == 3L))
   }
+
+  test("simhashDiagnostics: counts match a Scala recount of simhashPortable's 15-bit chunks") {
+    val fp = Dedup.simhashPortable(docs, "doc_id", "text").collect().map(_.getLong(1))
+    val buckets = fp.toSeq.flatMap(h => (0 until 4).map(c => (c, (h >> (c * 15)) & 32767L)))
+      .groupBy(identity).values.map(_.size.toLong).toSeq
+    val r = Dedup.simhashDiagnostics(docs, "doc_id", "text").head()
+    assert(r.getAs[Long]("n_docs") === fp.length.toLong)
+    assert(r.getAs[Long]("n_distinct_fp") === fp.distinct.length.toLong)
+    val pairs = buckets.map(n => n * (n - 1) / 2).sum
+    assert(pairs >= 4, "docs 0 and 1 are identical, so they share all four chunks")
+    assert(r.getAs[Long]("bucket_pairs") === pairs)
+    assert(r.getAs[Long]("max_bucket") === buckets.max)
+  }
 }

@@ -184,8 +184,8 @@ class ScaleSpec extends SparkSpecBase {
       "dd11_incremental_neardup" -> "2/4/0/0/-",
       "ts12_tfidf_keywords" -> "6/1/0/1/-",
       "ts13_cooccurrence" -> "6/2/0/2/-",
-      // g2's plan is the checkpoint-truncated final round (localCheckpoint
-      // per iteration is the point); emb1's two BNLJs are 1-row broadcasts
+      // g2's plan is the local relation of the driver-held rank vector
+      // plus the output sort; emb1's two BNLJs are 1-row broadcasts
       // (n/d stats + the 64-row means dim), ts14 is TakeOrderedAndProject
       "g1_transition_matrix" -> "5/2/0/0/p",
       "g2_pagerank" -> "1/0/0/0/-",
@@ -269,8 +269,8 @@ class ScaleSpec extends SparkSpecBase {
       // cur12: the full deterministic chain (gates + gram joins + cap)
       // under the disabled memo, then five 1-row stage aggregates
       "cur12_attrition" -> "10/7/0/0/p",
-      // g10's audited plan starts at the checkpointed label vector (like
-      // g2); the tail is one aggregate + the output sort
+      // g10's audited plan starts at the driver-held label vector's
+      // local relation (like g2); the tail is the output sort
       "g10_label_propagation" -> "1/0/0/0/-",
       // stats2's BNLJ is the 1-row bounds broadcast.
       // stats1's four BNLJs are the 1-row NDV side-aggregates crossJoined
@@ -278,16 +278,14 @@ class ScaleSpec extends SparkSpecBase {
       // of every fact row (measured 6.9x slower)
       "stats1_column_profile" -> "9/0/0/4/-",
       "stats2_histogram" -> "3/0/0/1/-",
-      // g11's audited plan is the final node-spine join. The query tier
-      // delivers ranks by BROADCAST (measured ~2x faster below the
-      // ceiling; the round-8 close) so the lifts are BHJs, not
-      // shuffled-hash exchanges. r16: both half-steps are rollup
-      // aggregates whose grouping-total row IS the L1 normalizer and the
-      // final authority vector is checkpointed, so only ONE lazy
-      // normalizer BNLJ (the hub side's) and one output exchange remain
-      // in the audited tail. GraphSpec pins the copartitioned 100x-scale
-      // path ≡ broadcast with zero per-round exchanges
-      "g11_hits" -> "1/2/0/1/-",
+      // g11 (like g2/g7/g10): broadcast delivery keeps the hub and
+      // authority vectors on the driver and returns them as a local
+      // relation, so the audited plan is the output sort alone — the two
+      // node-spine lift BHJs and the hub normalizer BNLJ of the
+      // checkpointed form (1/2/0/1) are gone. GraphSpec pins the
+      // copartitioned scale path ≡ broadcast with zero per-round
+      // exchanges
+      "g11_hits" -> "1/0/0/0/-",
       // g12 is a 1-row summary: its exchanges are the per-aggregate
       // finals over the checkpointed node/edge-scale frames, its BNLJs
       // the 1-row stat crossJoins
