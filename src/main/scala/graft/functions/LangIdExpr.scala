@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -19,7 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     seen-token set);
   *   - result = the language with the unique maximum score; a zero max
   *     or a tie at the max is "unknown" (array_max over struct(score,
-  *     lang) + the nAtMax==1 guard collapse to exactly this).
+  *     lang) + the nAtMax==1 guard collapse to exactly this);
+  *   - null text is "unknown", never null, as in the Column form (its
+  *     token array is null, so no language scores above zero).
   *
   * The Column form evaluates the whole chain as ONE interpreted
   * higher-order expression per row (let-bound transforms are
@@ -32,6 +35,7 @@ case class LangIdExpr(child: Expression, langs: Seq[(String, Seq[String])])
     extends UnaryExpression with CodegenFallback {
 
   override def dataType: DataType = StringType
+  override def nullable: Boolean = false
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -50,6 +54,11 @@ case class LangIdExpr(child: Expression, langs: Seq[(String, Seq[String])])
     m
   }
   @transient private lazy val unknown = UTF8String.fromString("unknown")
+
+  override def eval(input: InternalRow): Any = {
+    val text = child.eval(input)
+    if (text == null) unknown else nullSafeEval(text)
+  }
 
   override protected def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[UTF8String].toLowerCase.toString

@@ -400,16 +400,17 @@ object Graph {
     * into a DuckDB oracle exactly like pagerank's; the mutual-recursion
     * power iteration is a contraction toward the principal eigenvectors
     * of AᵀA / AAᵀ, so summation-order float noise stays bounded and a
-    * trailing 6dp round absorbs it. Edges with a null endpoint are
+    * trailing 6dp round absorbs it. Both modes read only the edges
+    * between listed nodes: an edge with a null or unlisted endpoint is
     * dropped. Requires a non-empty edge set (the L1 mass is otherwise
     * zero and the quotient undefined).
     *
     * With `copartition = false` the hub and authority vectors live on the
     * driver ([[EdgeBlocks]]) and each half-step is one job: the fold of
     * the persisted edge blocks against the broadcast vector; the L1
-    * normalizer is driver arithmetic. This mode reads only edges between
-    * listed nodes. With `copartition = true` (pagerank's scale path) the
-    * edge table pays TWO one-time exchanges — hash(src) for the auth
+    * normalizer is driver arithmetic. With `copartition = true`
+    * (pagerank's scale path) the edge table, once semi-joined to the
+    * node spine, pays TWO one-time exchanges — hash(src) for the auth
     * half-step, hash(dst) for the hub half-step — and every round's
     * vector join is a co-located shuffled-hash join: nothing node-sized
     * ever has to fit on one executor, and the edge table never
@@ -442,7 +443,7 @@ object Graph {
 
   private def hitsCopartitioned(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
-    val e = hitsEdges(edges).repartition(col("src")).persist()
+    val e = hitsEdges(nd, edges).repartition(col("src")).persist()
     // derived from the PERSISTED e, not the raw edges: building the dst
     // copy from the raw plan would re-run the whole upstream derivation
     val eDst = e.repartition(col("dst")).persist()
@@ -497,13 +498,19 @@ object Graph {
         coalesce(col("auth"), lit(0.0)).as("auth"))
   }
 
-  /** The HITS edge list without edges that lack an endpoint: the
-    * half-step rollup picks its L1 total out as the `node IS NULL` row,
-    * so a null `dst` (or `src`, in the hub direction) would add a second
-    * null-keyed row and duplicate every normalized vector row. */
-  private def hitsEdges(edges: DataFrame): DataFrame =
+  /** The HITS edge list restricted to edges between listed nodes, as the
+    * broadcast mode reads it. An unlisted endpoint would otherwise carry
+    * hub or authority mass between half-steps and count in the L1 totals.
+    * A null endpoint never matches a node, so it goes too: the half-step
+    * rollup picks its L1 total out as the `node IS NULL` row, and a null
+    * key would add a second such row and duplicate every normalized
+    * vector row. */
+  private def hitsEdges(nd: DataFrame, edges: DataFrame): DataFrame = {
+    val (from, to) = (nd.select(col("node").as("from")), nd.select(col("node").as("to")))
     edges.select(col("src"), col("dst"), col("w"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .join(from, col("src") === col("from"), "left_semi")
+      .join(to, col("dst") === col("to"), "left_semi")
+  }
 
   /** The co-partitioned HITS half-step aggregate — pagerank's
     * [[contribOf]] in both edge directions (authority: sum over in-edges;
@@ -526,7 +533,7 @@ object Graph {
   private[graft] def hitsHalfStepAudit(nodes: DataFrame,
                                        edges: DataFrame): (DataFrame, DataFrame) = {
     val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
-    val e = hitsEdges(edges).repartition(col("src")).ckpt()
+    val e = hitsEdges(nd, edges).repartition(col("src")).ckpt()
     val eDst = e.repartition(col("dst")).ckpt()
     val vec = nd.withColumn("h", lit(1.0)).ckpt().hint("shuffle_hash")
     (halfStepOf(e, vec, "src", "dst"), halfStepOf(eDst, vec, "dst", "src"))
@@ -534,7 +541,8 @@ object Graph {
 
   /** Unrolled DuckDB oracle for [[hits]] over the supplier transition
     * graph — chained MATERIALIZED CTEs, two per round (auth then hub),
-    * mirroring the Spark arithmetic exactly. */
+    * mirroring the Spark arithmetic exactly. Like both Spark modes it
+    * reads only the edges between listed nodes (`listed`). */
   def hitsOracleSql(iters: Int = 8): String = {
     val base = s"""
       |WITH seq AS MATERIALIZED (
@@ -547,18 +555,21 @@ object Graph {
       |  SELECT prev AS src, supp AS dst, count(*)::DOUBLE AS w
       |  FROM seq WHERE prev IS NOT NULL AND prev <> supp GROUP BY 1, 2),
       |nodes AS MATERIALIZED (SELECT s_suppkey AS node FROM supplier),
+      |listed AS MATERIALIZED (
+      |  SELECT * FROM edges
+      |  WHERE src IN (SELECT node FROM nodes) AND dst IN (SELECT node FROM nodes)),
       |h0 AS MATERIALIZED (SELECT node, 1.0 AS hub FROM nodes)""".stripMargin
     val steps = (1 to iters).map { k =>
       s""",
          |ac$k AS MATERIALIZED (
          |  SELECT e.dst AS node, sum(e.w * h.hub) AS v
-         |  FROM edges e JOIN h${k - 1} h ON e.src = h.node GROUP BY 1),
+         |  FROM listed e JOIN h${k - 1} h ON e.src = h.node GROUP BY 1),
          |a$k AS MATERIALIZED (
          |  SELECT n.node, COALESCE(c.v, 0) / (SELECT sum(v) FROM ac$k) AS auth
          |  FROM nodes n LEFT JOIN ac$k c ON n.node = c.node),
          |hc$k AS MATERIALIZED (
          |  SELECT e.src AS node, sum(e.w * a.auth) AS v
-         |  FROM edges e JOIN a$k a ON e.dst = a.node GROUP BY 1),
+         |  FROM listed e JOIN a$k a ON e.dst = a.node GROUP BY 1),
          |h$k AS MATERIALIZED (
          |  SELECT n.node, COALESCE(c.v, 0) / (SELECT sum(v) FROM hc$k) AS hub
          |  FROM nodes n LEFT JOIN hc$k c ON n.node = c.node)""".stripMargin

@@ -2,9 +2,10 @@ package graft.llm
 
 import graft.Ckpt._
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 
 /** One ranked partner for the bounded per-doc pair summary. */
 case class OrdPid(ord: Double, pid: Long)
@@ -1505,21 +1506,36 @@ object Dedup {
     docs.join(contaminatedIds(docs, id, text, bench, btext, n, hashGrams),
       Seq(id), "left_anti")
 
-  /** Connected components over an undirected edge list, via alternating
-    * large-star / small-star rounds (Kiveris et al., "Connected Components
-    * in MapReduce and Beyond", SoCC'14). Each round is a groupBy-min plus
-    * an equi-join shuffling only (node, node) pairs, and the edge set
+  /** Connected components over an undirected edge list.
+    *
+    * Input: two integral columns (any orientation, dups/self-loops fine;
+    * an edge with a null endpoint is dropped). Output: (id, component),
+    * in the edges' id type, for every node that appears in a kept edge,
+    * with component = the minimum node id of its component.
+    *
+    * The edges are oriented (u > v), de-duplicated and checkpointed, and
+    * their (count, hash-sum) signature is taken. Before every round,
+    * including the first, the edge count is checked against the budget
+    * Spark already uses to broadcast a relation through the driver
+    * (`spark.sql.autoBroadcastJoinThreshold`, 16 B per edge). Within it,
+    * the edges are collected and a union-find rooted at the smallest id
+    * finishes on the driver; the result is a local relation. This is
+    * exact at any round: both star operations below keep every
+    * component and its node set, so the union-find over the current edge
+    * set gives the rows the rounds would converge to.
+    *
+    * Above the budget (or with it at -1, or with non-integral ids) the
+    * rounds run: alternating large-star / small-star (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14). Each round
+    * is a groupBy-min plus an equi-join shuffling only (node, node)
+    * pairs, and the edge set
     * converges to stars centered at each component's minimum id in
     * O(log n) rounds on ANY graph — naive min-label propagation needs
     * graph-diameter rounds, which a 100 TB chain-shaped near-dup cluster
-    * would actually hit.
-    *
-    * Input: two integral columns (any orientation, dups/self-loops fine).
-    * Output: (id, component) for every node that appears in an edge, with
-    * component = the minimum node id of its component. The driver loop
-    * runs ONE scalar aggregate per round for the convergence check (a
-    * (count, hash-sum) pair — no data is collected), and lineage is
-    * truncated per round so plans stay constant-size. */
+    * would actually hit. The loop then runs ONE scalar aggregate per
+    * round for the convergence check (the signature — no data is
+    * collected), and lineage is truncated per round so plans stay
+    * constant-size. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val cols = edges.columns
     require(cols.length == 2, s"edge list must have 2 columns, got ${cols.mkString(",")}")
@@ -1535,10 +1551,13 @@ object Dedup {
         coalesce(sum(pmod(xxhash64(col("u"), col("v")), lit(1L << 30))), lit(0L))).first()
       (r.getLong(0), r.getLong(1))
     }
+    val budget = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(e.schema("u").dataType)
+    def fitsDriver(n: Long): Boolean = integral && budget >= 0 && n <= budget / 16
     var sigE = signature(e)
     var it = 0
     var converged = sigE._1 == 0L
-    while (!converged && it < maxIter) {
+    while (!converged && !fitsDriver(sigE._1) && it < maxIter) {
       // large-star: every neighbor LARGER than u links to min(N(u) ∪ {u})
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
       val mins = sym.groupBy("u").agg(min(col("v")).as("mv"))
@@ -1558,14 +1577,48 @@ object Dedup {
       val next = ss.loopCkpt()
       val sigNext = signature(next)
       converged = sigNext == sigE
+      graft.SessionHygiene.freeCheckpoint(e)
       e = next; sigE = sigNext
       it += 1
     }
     // fixpoint is a star per component: (member → center). Centers appear
     // only on the v side; label them with themselves.
-    e.select(col("u").as("id"), col("v").as("component"))
+    val stars = e.select(col("u").as("id"), col("v").as("component"))
       .union(e.select(col("v").as("id"), col("v").as("component")).distinct())
       .distinct()
+    if (fitsDriver(sigE._1)) componentsOnDriver(e, stars.schema) else stars
+  }
+
+  /** The driver finish of [[connectedComponents]]: collects the oriented,
+    * checkpointed edges, frees their checkpoint, and returns each node's
+    * union-find root (the smallest id of its component) as a local
+    * relation of `schema`. */
+  private def componentsOnDriver(e: DataFrame, schema: StructType): DataFrame = {
+    val pairs = e.collect().map(r =>
+      (r.get(0).asInstanceOf[Number].longValue, r.get(1).asInstanceOf[Number].longValue))
+    graft.SessionHygiene.freeCheckpoint(e)
+    val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    // ids are sorted, so the smaller index is the smaller id
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    pairs.foreach { case (u, v) =>
+      val (a, b) = (find(index(u)), find(index(v)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val box: Long => Any = schema("id").dataType match {
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case ByteType => _.toByte
+      case _ => x => x
+    }
+    val rows = java.util.Arrays.asList(ids.indices.map(i =>
+      Row(box(ids(i)), box(ids(find(i))))): _*)
+    e.sparkSession.createDataFrame(rows, schema)
   }
 
   /** Label every row of `df` with its near-dup component: edges are the

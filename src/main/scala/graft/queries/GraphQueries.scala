@@ -81,9 +81,11 @@ object GraphQueries {
       Some(Graph.pagerankOracleSql(iters = 15, damping = 0.85))),
 
     // ---- g3: strong-ties components — threshold the transition
-    // probability, then large-star/small-star connected components
-    // (llm/Dedup.connectedComponents, O(log n) rounds); oracle = the
-    // dd6-style recursive-CTE transitive closure over the same edges ----
+    // probability, then connected components (llm/Dedup.connectedComponents:
+    // the supplier-sized edge set fits the broadcast budget, so a driver
+    // union-find finishes it; above the budget, O(log n) large-star/
+    // small-star rounds); oracle = the dd6-style recursive-CTE transitive
+    // closure over the same edges ----
     QueryDef("g3_strong_components",
       (s, d) => {
         val edges = Graph.transitionMatrix(edgesMemo(s, d))

@@ -879,7 +879,7 @@ object LlmQueries {
         .orderBy("new_id", "corpus_id"),
       Some(containmentEstimateIncrementalOracle)),
 
-    // ---- near-dup CONNECTED COMPONENTS (large-star/small-star): pairwise
+    // ---- near-dup CONNECTED COMPONENTS (Dedup.connectedComponents): pairwise
     // near-dup under-deletes transitive groups (A~B, B~C, A!~C); clusters
     // are what a dedup pass actually keys on. Edges are the PORTABLE
     // banded-LSH candidate pairs on the 1-in-5 proof slice, so the whole
@@ -2355,8 +2355,12 @@ object LlmQueries {
         // Survivor test as a row-local filter over the EDGE-sized component
         // map (dd6b's shape) — NOT a corpus×corpus semi-join on a survivor
         // id list: the map holds only docs in >=1 near-dup pair (dup-rate
-        // bounded), AQE broadcasts it here, and at 100 TB the same join is
-        // a dup-bounded shuffle, never a corpus-wide sort.
+        // bounded), and at 100 TB the same join is a dup-bounded shuffle,
+        // never a corpus-wide sort. The edges fit the broadcast budget at
+        // every tested scale, so the components finish on the driver (a
+        // union-find over the collected edges, no star rounds) and the map
+        // arrives as a local relation that the join broadcasts; above the
+        // budget the rounds run and AQE picks the join by runtime size.
         val comp = Dedup.connectedComponents(edges).withColumnRenamed("id", "doc_id")
         val nearSurv = exact.join(comp, Seq("doc_id"), "left")
           .filter(coalesce(col("component"), col("doc_id")) === col("doc_id"))

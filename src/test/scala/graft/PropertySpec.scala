@@ -157,17 +157,9 @@ object PropertySpec extends Properties("graft") {
   // Hamilton quota allocation: Σ quota == budget exactly, and every
   // quota stays within 1 of its exact proportional share (the two
   // defining invariants of largest-remainder rounding). Driven through
-  // the real Spark operator on a shared local session.
+  // the real Spark operator on the specs' shared session (SparkSpecBase).
   property("quotaAllocate: exact budget, within-1 proportionality") = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.sql.shuffle.partitions", "2")
-// bounded-buffer typed aggregates (TopKAgg/MinKByAgg) group by
-// corpus-sized keys: the 128-key default silently flips
-// ObjectHashAggregate to sort-based, paying a map-side sort of
-// the whole input (measured 2.7x on the pair summaries); buffers
-// are <= k rows per group, so hash aggregation is safe
-.config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkSpecBase.session
     import spark.implicits._
     val weights = Gen.nonEmptyListOf(Gen.choose(1L, 1000L)).map(_.take(8))
     forAll(weights, Gen.choose(1, 50)) { (ws, budget) =>

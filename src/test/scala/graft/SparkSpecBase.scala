@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,6 +9,46 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   override def afterAll(): Unit = () // session shared across suites
+
+  /** Runs `body` with the session confs set to `kvs`, restoring each one
+    * (or unsetting it, if it was unset) afterwards. */
+  def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Spark jobs started by `body` on this thread, counted by a listener:
+    * a marker job in its own group runs after `body`, and since the
+    * listener bus delivers events in order, seeing the marker means every
+    * earlier job start has been counted. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (group, marker) = ("spec-jobs", "spec-marker")
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet()
+          case Some(`marker`) => done.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      counted.get
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpecBase {

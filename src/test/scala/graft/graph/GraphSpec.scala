@@ -2,7 +2,6 @@ package graft.graph
 
 import graft.SparkSpecBase
 import graft.llm.Dedup
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpecBase {
@@ -458,6 +457,23 @@ class GraphSpec extends SparkSpecBase {
     }
   }
 
+  test("hits: both modes ignore an edge to or from an unlisted node") {
+    val s = spark; import s.implicits._
+    val fixture = Seq((1L, 2L, 2.0), (1L, 3L, 1.0), (2L, 3L, 1.0), (3L, 4L, 5.0), (4L, 2L, 1.0))
+    val nodes = (1L to 5L).toDF("node")
+    val withNine = (fixture ++ Seq((3L, 9L, 4.0), (9L, 1L, 3.0))).toDF("src", "dst", "w")
+    def hits(e: org.apache.spark.sql.DataFrame, cp: Boolean) =
+      Graph.hits(nodes, e, iters = 3, copartition = cp).as[(Long, Double, Double)].collect()
+    val ref = hits(fixture.toDF("src", "dst", "w"), cp = false).map(t => t._1 -> t).toMap
+    for (cp <- Seq(false, true)) {
+      val got = hits(withNine, cp)
+      assert(got.map(_._1).sorted === (1L to 5L), s"cp=$cp")
+      got.foreach { case (k, hb, au) =>
+        assert(math.abs(hb - ref(k)._2) < 1e-12 && math.abs(au - ref(k)._3) < 1e-12,
+          s"node $k cp=$cp: ($hb, $au) vs ${ref(k)}") }
+    }
+  }
+
   test("labelPropagation: tie votes pick the smallest label") {
     val s = spark; import s.implicits._
     // node 3 hears labels 1 and 2 with equal weight → adopts 1
@@ -562,34 +578,6 @@ class GraphSpec extends SparkSpecBase {
         assert(math.abs(hb - ref(k)._2) < 1e-12 && math.abs(au - ref(k)._3) < 1e-12,
           s"hits node $k cp=$cp") }
     }
-  }
-
-  /** Spark jobs started by `body` on this thread, counted by a listener:
-    * a marker job in its own group runs after `body`, and since the
-    * listener bus delivers events in order, seeing the marker means every
-    * earlier job start has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val (group, marker) = ("graphspec-jobs", "graphspec-marker")
-    val counted = new java.util.concurrent.atomic.AtomicInteger
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => counted.incrementAndGet()
-          case Some(`marker`) => done.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
-      counted.get
-    } finally sc.removeSparkListener(l)
   }
 
   test("broadcast-mode loops: one Spark job per round (HITS: one per half-step), no leftover persisted RDDs") {

@@ -383,7 +383,7 @@ class LlmSpec extends SparkSpecBase {
     // algebra it replaced on every document of the real corpus AND on
     // constructed edge cases (ties, zero evidence, shared stopwords
     // between languages, empty/whitespace text, repeated stopwords that
-    // must count once, mixed case, CJK tokens)
+    // must count once, mixed case, CJK tokens, null text → "unknown")
     val s = spark; import s.implicits._
     val real = graft.model.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"))
@@ -393,7 +393,8 @@ class LlmSpec extends SparkSpecBase {
       (9005L, "le la et est"),        // fr-heavy with shared words
       (9006L, "的 是 在 了"),          // zh
       (9007L, "the und le el 的"),    // five-way tie
-      (9008L, "The AND Of tO a In") // case-normalized en
+      (9008L, "The AND Of tO a In"), // case-normalized en
+      (9009L, null)
     ).toDF("doc_id", "text")
     val both = real.unionByName(hostile)
     val got = both.select(col("doc_id"),
@@ -403,6 +404,7 @@ class LlmSpec extends SparkSpecBase {
     val diff = got.filter(r => r.getString(1) != r.getString(2))
     assert(diff.isEmpty,
       s"kernel != reference on ${diff.take(5).mkString(";")}")
+    assert(got.find(_.getLong(0) == 9009L).map(_.getString(1)) === Some("unknown"))
   }
 
   test("token counts and quality features are consistent") {
@@ -1255,25 +1257,48 @@ class LlmSpec extends SparkSpecBase {
     assert(survStr === surv)
   }
 
+  /** Runs `body` on each of connectedComponents' paths for an input of
+    * `k` distinct oriented edges: the driver finish (the default budget),
+    * the rounds only (budget -1), and rounds until the edge set fits a
+    * budget one edge short of the input, then the driver finish (a forest
+    * never shrinks, so there the rounds run to the end). */
+  private def onEachCcPath(k: Long)(body: String => Unit): Unit =
+    Seq("driver finish" -> None, "rounds" -> Some("-1"),
+        "rounds, then driver finish" -> Some((16 * (k - 1)).toString)).foreach {
+      case (path, budget) => withBudget(budget)(body(path))
+    }
+
+  /** Runs `body` under the given broadcast budget, or the default one. */
+  private def withBudget[A](budget: Option[String])(body: => A): A =
+    budget.fold(body)(b => withConf("spark.sql.autoBroadcastJoinThreshold" -> b)(body))
+
+  private def orientedEdges(es: Seq[(Long, Long)]): Long =
+    es.filter(e => e._1 != e._2).map(e => (e._1 max e._2, e._1 min e._2)).distinct.size.toLong
+
   test("connected components: chain, star, forest, singletons") {
     val s = spark; import s.implicits._
     // chain 1-2-3-...-8 (worst case for label propagation: diameter 7)
-    val chain = (1L to 7L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val cc1 = Dedup.connectedComponents(chain).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert((1L to 8L).forall(cc1(_) == 1L), s"chain collapses to min: $cc1")
+    val chainEdges = (1L to 7L).map(i => (i, i + 1))
+    val chain = chainEdges.toDF("id1", "id2")
+    onEachCcPath(orientedEdges(chainEdges)) { path =>
+      val cc1 = Dedup.connectedComponents(chain).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(cc1 === (1L to 8L).map(_ -> 1L).toMap, s"$path: chain collapses to min")
+    }
     // two components + reversed/duplicated/self-loop edges
-    val messy = Seq((5L, 3L), (3L, 5L), (4L, 4L), (3L, 4L), (10L, 11L), (11L, 10L))
-      .toDF("a", "b")
-    val cc2 = Dedup.connectedComponents(messy).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(cc2 === Map(3L -> 3L, 4L -> 3L, 5L -> 3L, 10L -> 10L, 11L -> 10L))
-    // labelComponents: nodes absent from edges are singletons of themselves
+    val messyEdges = Seq((5L, 3L), (3L, 5L), (4L, 4L), (3L, 4L), (10L, 11L), (11L, 10L))
+    val messy = messyEdges.toDF("a", "b")
     val nodes = (1L to 12L).toDF("id")
-    val labeled = Dedup.labelComponents(nodes, "id", messy).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(labeled(4L) == 3L && labeled(11L) == 10L)
-    assert(Seq(1L, 2L, 6L, 7L, 8L, 9L, 12L).forall(i => labeled(i) == i))
+    onEachCcPath(orientedEdges(messyEdges)) { path =>
+      val cc2 = Dedup.connectedComponents(messy).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(cc2 === Map(3L -> 3L, 4L -> 3L, 5L -> 3L, 10L -> 10L, 11L -> 10L), path)
+      // labelComponents: nodes absent from edges are singletons of themselves
+      val labeled = Dedup.labelComponents(nodes, "id", messy).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(labeled(4L) == 3L && labeled(11L) == 10L, path)
+      assert(Seq(1L, 2L, 6L, 7L, 8L, 9L, 12L).forall(i => labeled(i) == i), path)
+    }
   }
 
   test("connected components match union-find on randomized graphs") {
@@ -1296,10 +1321,45 @@ class LlmSpec extends SparkSpecBase {
       val edges = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       val expected = unionFind(n, edges)
       val nodes = (0L until n.toLong).toDF("id")
-      val got = Dedup.labelComponents(nodes,
-          "id", edges.toDF("id1", "id2")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got === expected, s"trial $trial: n=$n edges=$edges")
+      onEachCcPath(orientedEdges(edges)) { path =>
+        val got = Dedup.labelComponents(nodes,
+            "id", edges.toDF("id1", "id2")).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toMap
+        assert(got === expected, s"$path, trial $trial: n=$n edges=$edges")
+      }
+    }
+  }
+
+  test("connected components: within the budget the job count does not grow with the graph, and nothing stays persisted") {
+    val s = spark; import s.implicits._
+    def chain(n: Long) = (1L until n).map(i => (i, i + 1)).toDF("id1", "id2")
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    // the rounds would need more of themselves for the longer chain
+    val Seq(j8, j64) = Seq(8L, 64L).map(n => jobsOf(Dedup.connectedComponents(chain(n)).collect()))
+    assert(j8 === j64, s"$j8 jobs on the 8-node chain, $j64 on the 64-node chain")
+    assert(sc.getPersistentRDDs.keySet === persisted)
+    // K6: 15 edges become a 5-edge star in one round, so a 14-edge budget
+    // runs exactly one round before the driver finish, and -1 runs two
+    val k6 = (for (a <- 1L to 6L; b <- a + 1 to 6L) yield (a, b)).toDF("id1", "id2")
+    val Seq(driver, oneRound, rounds) = Seq(None, Some("224"), Some("-1")).map { t =>
+      jobsOf(withBudget(t) {
+        val cc = Dedup.connectedComponents(k6).as[(Long, Long)].collect().toMap
+        assert(cc === (1L to 6L).map(_ -> 1L).toMap, s"budget $t")
+      })
+    }
+    assert(driver < oneRound && oneRound < rounds, s"jobs: $driver, $oneRound, $rounds")
+  }
+
+  test("connected components on hostile input: integer ids stay integer, null endpoints and self-loop-only nodes are dropped, on both paths") {
+    val s = spark; import s.implicits._
+    val edges = Seq((Some(1), Some(2)), (Some(3), Some(2)), (None, Some(4)), (Some(5), None),
+      (Some(6), Some(6)), (Some(7), Some(7)), (Some(8), Some(7)), (None, None)).toDF("a", "b")
+    for (t <- Seq(None, Some("-1"))) withBudget(t) {
+      val cc = Dedup.connectedComponents(edges)
+      assert(cc.schema.map(_.dataType.typeName) === Seq("integer", "integer"), s"budget $t")
+      assert(cc.as[(Int, Int)].collect().toMap ===
+        Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7, 8 -> 7), s"budget $t")
     }
   }
 

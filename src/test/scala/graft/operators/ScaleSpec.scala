@@ -139,7 +139,11 @@ class ScaleSpec extends SparkSpecBase {
       "ao1_asof_join" -> "2/0/0/0/p",
       "rj1_range_join" -> "1/1/0/0/p",
       "e2e_jumps_endpoint" -> "3/5/0/0/p",
-      "dd6c_components_fast" -> "4/1/0/0/-",
+      // dd6c: the component map is a driver-finished local relation (the
+      // edges fit the broadcast budget), so the exchanges of the rounds'
+      // star output are gone (was 4/1/0/0); the BHJ broadcasts the map
+      // onto the node spine, the exchange left is the output sort
+      "dd6c_components_fast" -> "1/1/0/0/-",
       "dd7_decontaminate" -> "3/2/0/0/p",
       "ts7_repetition" -> "1/0/0/0/-",
       "st4_streaming_neardup" -> "2/1/0/0/-",
@@ -301,8 +305,10 @@ class ScaleSpec extends SparkSpecBase {
       "cur13_quota_allocation" -> "6/0/0/3/-",
       "ts19_readability" -> "1/0/0/0/-",
       // dd17: the memo-disabled audit pays the full candidate+component
-      // chain; the tail is the quality join + one struct-max aggregate
-      "dd17_quality_survivors" -> "4/2/0/0/p",
+      // chain; the tail is the quality join + one struct-max aggregate.
+      // The component map is a driver-finished local relation, so the
+      // exchanges of the rounds' star output are gone (was 4/2/0/0)
+      "dd17_quality_survivors" -> "2/2/0/0/p",
       // dd18: one chunking pass checkpointed, corpus distinct + per-doc
       // aggs; the anti-join and novelty join broadcast at audit scale
       "dd18_cdc_incremental" -> "4/2/0/0/-",
