@@ -28,16 +28,15 @@ object Ckpt {
   implicit class CkptOps[T](private val ds: Dataset[T]) extends AnyVal {
     def ckpt(): Dataset[T] = if (disabled) ds else ds.localCheckpoint()
 
-    /** Checkpoint for LOOP-CARRIED frames (pagerank/HITS/LP/BFS/k-core
-      * rounds, connected-components stars, BPE merge rounds): truncates
+    /** Checkpoint for LOOP-CARRIED frames (BFS/k-core rounds,
+      * connected-components stars, BPE merge rounds): truncates
       * EVEN in audit mode. Without truncation an iterative plan's
       * lineage grows exponentially in the round count (each round
       * references the previous frame more than once), so "disable
       * checkpoints and read the whole plan" is not a meaningful audit
       * there — Catalyst analysis itself never terminates at realistic
       * round counts (the r14 shadow-pass hang). Iteration boundaries
-      * keep their truncation; the per-round plan shapes are audited by
-      * the operator specs (GraphSpec's planted-hot-node pins) instead. */
+      * keep their truncation. */
     def loopCkpt(): Dataset[T] = ds.localCheckpoint()
   }
 }

@@ -17,8 +17,8 @@ private[graft] final case class EdgeBlock(from: Array[Int], to: Array[Int], w: A
   * order. */
 private[graft] final case class Partial(keys: Array[Long], v: Array[Double])
 
-/** The state of the broadcast-mode graph loops (`copartition = false` in
-  * [[Graph.pagerank]], [[Graph.labelPropagation]] and [[Graph.hits]]).
+/** The state of the graph loops [[Graph.pagerank]],
+  * [[Graph.labelPropagation]] and [[Graph.hits]].
   *
   * The node spine is collected to the driver as sorted ids, and every node
   * vector is a dense array over them. The edge list is packed once per
@@ -39,7 +39,7 @@ private[graft] final class EdgeBlocks(nodes: DataFrame, edges: DataFrame) {
   private val sc = nodes.sparkSession.sparkContext
   private val nodeType = nodes.schema("node").dataType
   require(Seq(ByteType, ShortType, IntegerType, LongType).contains(nodeType),
-    s"broadcast-mode graph loops need integral node ids, got $nodeType")
+    s"the graph loops need integral node ids, got $nodeType")
 
   val ids: Array[Long] = {
     val rows = nodes.select(col("node").cast("long")).collect()

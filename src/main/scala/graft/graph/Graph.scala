@@ -2,7 +2,7 @@ package graft.graph
 
 import graft.Ckpt._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,18 +23,15 @@ import org.apache.spark.sql.functions._
   *   - Edge derivation is the W1/W2 jump pattern: one hash partition by
   *     person + local sort, then lag(); only (person, company) pairs
   *     shuffle. No self-joins.
-  *   - The iterative loops (pagerank, label propagation, HITS) have two
-  *     delivery modes. Broadcast mode (`copartition = false`, what every
-  *     caller runs) keeps the node vector on the driver as a dense array
-  *     over the sorted node ids ([[EdgeBlocks]]): the edge list is packed
-  *     and persisted once per call, and each round is one Spark job that
-  *     folds the edges against the broadcast vector, one partial per node
-  *     per task. Its precondition is that the node vector fits on the
-  *     driver, which broadcast delivery needs anyway: the vector passes
-  *     through the driver every round. Co-partitioned mode
-  *     (`copartition = true`) keeps node and edge tables distributed and
-  *     hash-partitioned by node, with nothing node-sized on one machine:
-  *     the path for graphs whose node vector does not fit there.
+  *   - The iterative loops (pagerank, label propagation, HITS) keep the
+  *     node vector on the driver as a dense array over the sorted node
+  *     ids ([[EdgeBlocks]]): the edge list is packed and persisted once
+  *     per call, and each round is one Spark job that folds the edges
+  *     against the broadcast vector, one partial per node per task. The
+  *     precondition is that the node vector fits on the driver: it passes
+  *     through the driver every round. The graphs here are company-sized
+  *     (a few hundred canonical studios in DWW, one node per supplier in
+  *     the registry), so it fits many times over.
   */
 object Graph {
 
@@ -89,96 +86,23 @@ object Graph {
     * An edge whose dst is null or not a listed node counts in wout(u), and
     * its share is lost, as in the oracle's `LEFT JOIN nodes`.
     *
-    * Two rank-delivery strategies, identical arithmetic:
-    *  - `copartition = false`: the rank vector lives on the driver
-    *    ([[EdgeBlocks]]). One job sums each node's out-weight, then each
-    *    round is one job: the contrib fold over the persisted edge blocks
-    *    against the broadcast r/wout vector. Teleport, dangling mass and
-    *    the next-rank arithmetic are node-sized driver work.
-    *  - `copartition = true` (the scale path for node vectors that do not
-    *    fit on the driver): the edge-sized share table is
-    *    hash-partitioned by `src` ONCE and persisted; the rank vector
-    *    lives hash-partitioned by `node` (same partition count), so each
-    *    round's contrib join is a shuffled-hash join with ZERO exchange
-    *    on the edge side — localCheckpoint preserves outputPartitioning,
-    *    and the next-rank frame inherits hash(node) through the
-    *    node-spine left join, so after round 1 no side of either join
-    *    re-shuffles. Per round the only shuffle is the contrib
-    *    aggregate on dst (node-sized), and nothing node-count-sized ever
-    *    has to fit on one executor. `localCheckpoint` truncates lineage
-    *    each round — without it the rank plan doubles per iteration
-    *    (ranks feeds both the contrib join and the dangling aggregate)
-    *    and analysis cost grows 2^iters. GraphSpec pins ≡ between the
-    *    two forms. */
+    * The rank vector lives on the driver ([[EdgeBlocks]]). One job sums
+    * each node's out-weight, then each round is one job: the contrib fold
+    * over the persisted edge blocks against the broadcast r/wout vector.
+    * Teleport, dangling mass and the next-rank arithmetic are node-sized
+    * driver work. With `teleportTo` (personalized PageRank) the teleport
+    * vector is the indicator of that seed, which must be a listed node. */
   def pagerank(nodes: DataFrame, edges: DataFrame,
                iters: Int = 15, damping: Double = 0.85,
-               teleportTo: Option[Long] = None,
-               copartition: Boolean = false): DataFrame =
-    if (copartition) pagerankCopartitioned(nodes, edges, iters, damping, teleportTo)
-    else pagerankOnDriver(nodes, edges, iters, damping, teleportTo)
-
-  private def pagerankCopartitioned(nodes: DataFrame, edges: DataFrame, iters: Int,
-                                    damping: Double, teleportTo: Option[Long]): DataFrame = {
-    // checkpointed: the loop re-reads the node list every round (left
-    // join spine) — one materialization instead of 15 source scans. The
-    // spine is hash(node)-partitioned first, so every frame derived from
-    // it (ranks, next-rank joins) inherits the co-located layout for free.
-    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
-    val n = nd.count().toDouble // model parameter, like IVF's k — one scalar action
-    // teleport distribution: uniform (classic) or an indicator at one node
-    // (personalized PageRank — relevance of every node to the seed)
-    def tCol = teleportTo
-      .map(sd => when(col("node") === sd, lit(1.0)).otherwise(lit(0.0)))
-      .getOrElse(lit(1.0 / n))
-    val shareAll = shareTable(nd, edges).persist()
-    var ranks = nd.withColumn("r", tCol).loopCkpt()
-    // The shuffled-hash hint BUILDS the node-sized rank side; both sides'
-    // existing hash layouts satisfy the join's distribution, so no
-    // exchange is inserted on either side.
-    // Only the NEXT RANK vector is checkpointed per round (one eager job
-    // per iteration); the contrib aggregate stays a LAZY subtree inside
-    // that plan, shared by its two consumers (the dangling-mass 1-row
-    // aggregate and the join side) via exchange reuse, so it is still
-    // computed once — just without its own eager job and block
-    // round-trip. Chaining multiple un-checkpointed ROUNDS into one plan
-    // measured SLOWER (AQE re-plans the deeper tree and the aggregates
-    // recompute inside every rank reference), so one eager checkpoint
-    // per round is the sweet spot.
-    for (step <- 1 to iters) {
-      val contrib = contribOf(shareAll, ranks.hint("shuffle_hash"))
-      // the dangling mass is ONE value of the LAZY contrib subtree — it
-      // rides as a 1-row aggregate crossJoined back as a broadcast row,
-      // deduped against the join-side consumer by exchange reuse (the
-      // explicit per-round head() was a separate driver job each
-      // iteration and measured the loop ~3× slower). Same value, same
-      // arithmetic — the rank expression just reads it as a column.
-      val dmRow = contrib.filter(col("dst").isNull)
-        .agg(coalesce(sum("contrib"), lit(0.0)).as("__dm"))
-      val contribSide = contrib.filter(col("dst").isNotNull).hint("shuffle_hash")
-      val next = nd
-        .join(contribSide, nd("node") === contribSide("dst"), "left")
-        .crossJoin(broadcast(dmRow))
-        .select(nd("node"),
-          (lit(1 - damping) * tCol +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) + col("__dm") * tCol)).as("r"))
-      val cp = next.loopCkpt()
-      // real frees: Dataset.unpersist is a no-op on checkpoint frames
-      graft.SessionHygiene.freeCheckpoint(ranks)
-      ranks = cp
-    }
-    shareAll.unpersist()
-    ranks
-  }
-
-  /** Broadcast-mode [[pagerank]]: r/wout is the broadcast vector, so the
-    * per-round fold is Σ w·x(src) per dst. */
-  private def pagerankOnDriver(nodes: DataFrame, edges: DataFrame, iters: Int,
-                               damping: Double, teleportTo: Option[Long]): DataFrame = {
+               teleportTo: Option[Long] = None): DataFrame = {
     val g = new EdgeBlocks(nodes, edges)
     try {
       val n = g.n
       val t = teleportTo match {
-        case Some(sd) => val k = g.index(sd); Array.tabulate(n)(i => if (i == k) 1.0 else 0.0)
+        case Some(sd) =>
+          val k = g.index(sd)
+          require(k >= 0, s"pagerank teleport seed $sd is not a listed node")
+          Array.tabulate(n)(i => if (i == k) 1.0 else 0.0)
         case None => Array.fill(n)(1.0 / n)
       }
       val (wout, hasOut) = g.merge(g.outWeight())
@@ -191,64 +115,6 @@ object Graph {
       }
       g.frame("r" -> r)
     } finally g.release()
-  }
-
-  /** The per-round contribution aggregate of the co-partitioned loop —
-    * THE shuffle every round pays, and the stage a power-law hot node
-    * stresses at 100×: all of the hot node's in-edges key to ONE dst.
-    * Safety rests on map-side PARTIAL aggregation (sum is algebraic, so
-    * each map task folds its slice of the hot key to a single row and the
-    * final aggregate receives at most one row per task per key, never the
-    * raw in-degree) — GraphSpec pins that property on this exact plan via
-    * [[pagerankContribAudit]] with a planted 100×-median-degree node.
-    * ONE copy used by the loop and the audit so the pinned plan can't
-    * drift from the shipped one. */
-  private def contribOf(shareAll: DataFrame, rankSide: DataFrame): DataFrame =
-    shareAll
-      .join(rankSide, shareAll("src") === rankSide("node"))
-      .groupBy(col("dst")).agg(sum(col("share") * col("r")).as("contrib"))
-
-  /** Round-1 contrib plan of the co-partitioned loop, un-checkpointed, for
-    * GraphSpec's skew audit: the loop's own stage construction (same
-    * shareTable, same rank delivery) with the checkpoint left off so the
-    * physical aggregate is inspectable. */
-  private[graft] def pagerankContribAudit(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
-    val n = nd.count().toDouble
-    // checkpointed like the loop's persisted shareAll: the audited plan
-    // must be the STEADY-STATE round (share table already materialized,
-    // its one-time dangling-sink build not re-printed into every round)
-    val shareAll = shareTable(nd, edges).ckpt()
-    val ranks = nd.withColumn("r", lit(1.0 / n)).ckpt()
-    contribOf(shareAll, ranks.hint("shuffle_hash"))
-  }
-
-  /** The rank-delivery table the co-partitioned loop iterates over:
-    * per-edge normalized share (w / out-weight) plus one NULL-dst sink
-    * row per dangling node (a dangling node emits its whole rank to the
-    * sink, so ONE join + aggregate per round yields both the per-dst
-    * contribs and the dangling mass — the NULL-dst group). An edge with a
-    * null dst counts in its src's out-weight but is not a sink row: its
-    * share is lost, exactly like an edge to an unlisted node. The table
-    * pays its ONE hash(src) exchange here; every round's contrib join
-    * then reads it co-located. */
-  private def shareTable(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val nd = nodes.select(col("node"))
-    val wout = edges.groupBy("src").agg(sum("w").as("wout"))
-    // checkpointed BEFORE the dangling derivation below references it a
-    // second time — otherwise the whole upstream edge pipeline (scan +
-    // join + window at the call sites) is derived twice in the first
-    // materialization. The eager inner checkpoint's blocks go dead once
-    // the caller materializes the returned plan; SessionHygiene.release
-    // frees them between queries.
-    val share = edges.join(wout, "src")
-      .select(col("src"), col("dst"), (col("w") / col("wout")).as("share"))
-      .ckpt()
-    val danglingSink = nd
-      .join(share.select(col("src").as("node")).distinct(), Seq("node"), "left_anti")
-      .select(col("node").as("src"), lit(null).cast("long").as("dst"),
-        lit(1.0).as("share"))
-    share.filter(col("dst").isNotNull).unionByName(danglingSink).repartition(col("src"))
   }
 
   /** Company similarity by shared workforce: Jaccard overlap of the
@@ -400,30 +266,16 @@ object Graph {
     * into a DuckDB oracle exactly like pagerank's; the mutual-recursion
     * power iteration is a contraction toward the principal eigenvectors
     * of AᵀA / AAᵀ, so summation-order float noise stays bounded and a
-    * trailing 6dp round absorbs it. Both modes read only the edges
-    * between listed nodes: an edge with a null or unlisted endpoint is
-    * dropped. Requires a non-empty edge set (the L1 mass is otherwise
-    * zero and the quotient undefined).
+    * trailing 6dp round absorbs it. Only the edges between listed nodes
+    * count: an edge with a null or unlisted endpoint is dropped.
     *
-    * With `copartition = false` the hub and authority vectors live on the
-    * driver ([[EdgeBlocks]]) and each half-step is one job: the fold of
-    * the persisted edge blocks against the broadcast vector; the L1
-    * normalizer is driver arithmetic. With `copartition = true`
-    * (pagerank's scale path) the edge table, once semi-joined to the
-    * node spine, pays TWO one-time exchanges — hash(src) for the auth
-    * half-step, hash(dst) for the hub half-step — and every round's
-    * vector join is a co-located shuffled-hash join: nothing node-sized
-    * ever has to fit on one executor, and the edge table never
-    * re-shuffles. */
-  def hits(nodes: DataFrame, edges: DataFrame, iters: Int = 8,
-           copartition: Boolean = false): DataFrame = {
+    * The hub and authority vectors live on the driver ([[EdgeBlocks]])
+    * and each half-step is one job: the fold of the persisted edge blocks
+    * against the broadcast vector; the L1 normalizer is driver arithmetic.
+    * A node no edge reaches in a half-step scores 0.0, so when no edge
+    * joins two listed nodes every hub and authority is 0.0. */
+  def hits(nodes: DataFrame, edges: DataFrame, iters: Int = 8): DataFrame = {
     require(iters >= 1, s"hits needs at least one iteration, got $iters")
-    if (copartition) hitsCopartitioned(nodes, edges, iters) else hitsOnDriver(nodes, edges, iters)
-  }
-
-  /** Broadcast-mode [[hits]]: a node no edge reaches in a half-step stays
-    * at 0, as in the co-partitioned left-joined lift. */
-  private def hitsOnDriver(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     val g = new EdgeBlocks(nodes, edges)
     try {
       def halfStep(x: Array[Double], reverse: Boolean): Array[Double] = {
@@ -441,108 +293,10 @@ object Graph {
     } finally g.release()
   }
 
-  private def hitsCopartitioned(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
-    val e = hitsEdges(nd, edges).repartition(col("src")).persist()
-    // derived from the PERSISTED e, not the raw edges: building the dst
-    // copy from the raw plan would re-run the whole upstream derivation
-    val eDst = e.repartition(col("dst")).persist()
-    def side(v: DataFrame): DataFrame = v.hint("shuffle_hash")
-    // ONE eager job per ROUND (r16; was one per half-step): each
-    // half-step aggregates per-`to` contribs AND the grand L1 total in a
-    // single ROLLUP aggregate (the total is the grouping-total row,
-    // node = null), so the normalizer is a filter over the SAME aggregate
-    // output as the vector rows, never a second aggregate consumer. Only
-    // the HUB half-step is checkpointed per round; the authority
-    // half-step rides as a lazy rollup subtree inside it, its one
-    // exchange shared by both consumers (the r15 trim failed exactly
-    // because the OLD normalizer — an agg ON TOP of the half-step — did
-    // not share the exchange; filters over one rollup do). The L1 total
-    // folds the joined edge rows directly instead of the per-node sums —
-    // a different summation TREE for the same value, within the
-    // operator's documented float-noise contract (the trailing 6dp round
-    // absorbs it).
-    var hub = nd.withColumn("h", lit(1.0)).loopCkpt()
-    // hub checkpoints live TWO generations: the final lazy auth reads
-    // the previous round's hub blocks until authCp materializes below
-    var prev: DataFrame = hub
-    var prevPrev: DataFrame = null
-    var auth: DataFrame = null
-    def normalized(hs: DataFrame): DataFrame =
-      hs.filter(col("node").isNotNull)
-        .crossJoin(broadcast(
-          hs.filter(col("node").isNull).select(col("v").as("s"))))
-        .select(col("node"), (col("v") / col("s")).as("h"))
-    for (_ <- 1 to iters) {
-      val acr = halfStepOf(e, side(hub), "src", "dst")
-      auth = normalized(acr)
-      val hcr = halfStepOf(eDst, side(auth), "dst", "src").loopCkpt()
-      if (prevPrev != null) graft.SessionHygiene.freeCheckpoint(prevPrev)
-      prevPrev = prev
-      prev = hcr
-      hub = normalized(hcr)
-    }
-    // materialize the final authority vector BEFORE releasing the edge
-    // cache — auth is a lazy subtree over e and the previous hub ckpt
-    val authCp = auth.loopCkpt()
-    auth = authCp
-    e.unpersist(); eDst.unpersist()
-    // lift the edge-supported vectors onto the full node spine (nd is
-    // hash(node)-partitioned, so the hinted joins stay exchange-free on
-    // the spine side)
-    val hubL = side(hub.select(col("node"), col("h").as("hub")))
-    val authL = side(auth.select(col("node"), col("h").as("auth")))
-    nd.join(hubL, Seq("node"), "left")
-      .join(authL, Seq("node"), "left")
-      .select(col("node"), coalesce(col("hub"), lit(0.0)).as("hub"),
-        coalesce(col("auth"), lit(0.0)).as("auth"))
-  }
-
-  /** The HITS edge list restricted to edges between listed nodes, as the
-    * broadcast mode reads it. An unlisted endpoint would otherwise carry
-    * hub or authority mass between half-steps and count in the L1 totals.
-    * A null endpoint never matches a node, so it goes too: the half-step
-    * rollup picks its L1 total out as the `node IS NULL` row, and a null
-    * key would add a second such row and duplicate every normalized
-    * vector row. */
-  private def hitsEdges(nd: DataFrame, edges: DataFrame): DataFrame = {
-    val (from, to) = (nd.select(col("node").as("from")), nd.select(col("node").as("to")))
-    edges.select(col("src"), col("dst"), col("w"))
-      .join(from, col("src") === col("from"), "left_semi")
-      .join(to, col("dst") === col("to"), "left_semi")
-  }
-
-  /** The co-partitioned HITS half-step aggregate — pagerank's
-    * [[contribOf]] in both edge directions (authority: sum over in-edges;
-    * hub: sum over out-edges), as a ROLLUP so the L1 normalizer is the
-    * grouping-total row (node = null) of the SAME aggregate. A power-law
-    * hot node stresses the `to`-keyed shuffle exactly like the pagerank
-    * contrib: safety is map-side PARTIAL aggregation (rollup
-    * partial-aggregates per grouping set), pinned by GraphSpec via
-    * [[hitsHalfStepAudit]] on this one shared copy. */
-  private def halfStepOf(edges: DataFrame, vecSide: DataFrame,
-                         from: String, to: String): DataFrame =
-    edges.join(vecSide, edges(from) === vecSide("node"))
-      .rollup(col(to).as("node")).agg(sum(col("w") * col("h")).as("v"))
-
-  /** Round-1 half-step plans (authority then hub) of the co-partitioned
-    * loop, un-checkpointed, for GraphSpec's skew audit — the loop's own
-    * stage construction (same edge layouts, same vector delivery) with
-    * the checkpoints left off so the physical aggregates are
-    * inspectable. */
-  private[graft] def hitsHalfStepAudit(nodes: DataFrame,
-                                       edges: DataFrame): (DataFrame, DataFrame) = {
-    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
-    val e = hitsEdges(nd, edges).repartition(col("src")).ckpt()
-    val eDst = e.repartition(col("dst")).ckpt()
-    val vec = nd.withColumn("h", lit(1.0)).ckpt().hint("shuffle_hash")
-    (halfStepOf(e, vec, "src", "dst"), halfStepOf(eDst, vec, "dst", "src"))
-  }
-
   /** Unrolled DuckDB oracle for [[hits]] over the supplier transition
     * graph — chained MATERIALIZED CTEs, two per round (auth then hub),
-    * mirroring the Spark arithmetic exactly. Like both Spark modes it
-    * reads only the edges between listed nodes (`listed`). */
+    * mirroring the Spark arithmetic exactly. Like [[hits]] it reads only
+    * the edges between listed nodes (`listed`). */
   def hitsOracleSql(iters: Int = 8): String = {
     val base = s"""
       |WITH seq AS MATERIALIZED (
@@ -590,23 +344,13 @@ object Graph {
     * counts, so vote sums are exact in doubles and the tiebreak can never
     * diverge across engines.
     *
-    * With `copartition = false` the label vector lives on the driver
-    * ([[EdgeBlocks]]) as node indices (sorted ids, so the smallest label
-    * is the smallest index) and each round is one job: each task sums
-    * its edges' votes per (node, neighbour label) in both directions,
-    * and the driver merges them and takes the argmax. Only edges between
-    * listed nodes vote. With `copartition = true` (pagerank's scale path)
-    * the symmetrized edge table is hash(dst)-partitioned once, each
-    * round's label join is a co-located shuffled-hash join, and the
-    * argmax is one more hash aggregate (max of a (weight, -label) struct
-    * — NO per-node window/sort). */
-  def labelPropagation(nodes: DataFrame, edges: DataFrame, iters: Int = 6,
-                       copartition: Boolean = false): DataFrame =
-    if (copartition) labelPropagationCopartitioned(nodes, edges, iters)
-    else labelPropagationOnDriver(nodes, edges, iters)
-
-  private def labelPropagationOnDriver(nodes: DataFrame, edges: DataFrame,
-                                       iters: Int): DataFrame = {
+    * The label vector lives on the driver ([[EdgeBlocks]]) as node
+    * indices (sorted ids, so the smallest label is the smallest index)
+    * and each round is one job: each task sums its edges' votes per
+    * (node, neighbour label) in both directions, and the driver merges
+    * them and takes the argmax. Only edges between listed nodes vote; a
+    * node with none keeps its own id. */
+  def labelPropagation(nodes: DataFrame, edges: DataFrame, iters: Int = 6): DataFrame = {
     val g = new EdgeBlocks(nodes, edges)
     try {
       var label = Array.tabulate(g.n)(identity)
@@ -627,61 +371,6 @@ object Graph {
       }
       g.frame("label" -> label.map(i => g.ids(i)))
     } finally g.release()
-  }
-
-  private def labelPropagationCopartitioned(nodes: DataFrame, edges: DataFrame,
-                                            iters: Int): DataFrame = {
-    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
-    val und = undirected(edges).repartition(col("dst")).persist()
-    var labels = nd.withColumn("label", col("node")).loopCkpt()
-    for (_ <- 1 to iters) {
-      // the vote argmax stays LAZY inside the round's build, so each
-      // round pays exactly ONE eager checkpoint (the new label vector),
-      // not two
-      val winners = voteOf(und, labels.hint("shuffle_hash")).hint("shuffle_hash")
-      // a node absent from the vote table has no edges, so its label is
-      // still its initial id — coalesce to node ≡ coalesce to prev label
-      val next = nd.join(winners, nd("node") === winners("nd"), "left")
-        .select(nd("node"), coalesce(col("lbl"), nd("node")).as("label"))
-        .loopCkpt()
-      graft.SessionHygiene.freeCheckpoint(labels)
-      labels = next
-    }
-    und.unpersist()
-    labels
-  }
-
-  /** The symmetrized edge list label propagation votes over: one row per
-    * (src, dst) with the summed weight of both directions. */
-  private def undirected(edges: DataFrame): DataFrame =
-    edges.select(col("src"), col("dst"), col("w"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-
-  /** The co-partitioned label-propagation vote: a (node, label) weight
-    * sum followed by a deterministic argmax (max of a (weight, -label)
-    * struct — no per-node window). Both aggregates are algebraic, so a
-    * hot node's votes partial-aggregate map-side exactly like the
-    * pagerank contrib; GraphSpec pins that via [[lpVoteAudit]] on this
-    * one shared copy. */
-  private def voteOf(und: DataFrame, labelSide: DataFrame): DataFrame =
-    und
-      .join(labelSide, und("dst") === labelSide("node"))
-      .groupBy(col("src").as("nd"), col("label"))
-      .agg(sum("w").as("wv"))
-      .groupBy("nd")
-      .agg(max(struct(col("wv"), (-col("label")).as("nl"))).as("m"))
-      .select(col("nd"), (-col("m.nl")).as("lbl"))
-
-  /** Round-1 vote plan of the co-partitioned loop, un-checkpointed, for
-    * GraphSpec's skew audit — the loop's own stage construction (same
-    * symmetrized edge layout, same label delivery) with the checkpoint
-    * left off. */
-  private[graft] def lpVoteAudit(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val nd = nodes.select(col("node")).repartition(col("node")).ckpt()
-    val und = undirected(edges).repartition(col("dst")).ckpt()
-    val labels = nd.withColumn("label", col("node")).ckpt()
-    voteOf(und, labels.hint("shuffle_hash"))
   }
 
   /** DuckDB oracle for [[labelPropagation]]: rounds unrolled into chained

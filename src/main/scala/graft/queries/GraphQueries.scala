@@ -66,15 +66,15 @@ object GraphQueries {
               |ORDER BY e.src, e.dst""".stripMargin)),
 
     // ---- g2: weighted PageRank with dangling redistribution, 15 fixed
-    // iterations (Pregel-style join+agg per round, lineage truncated) ----
+    // iterations (one Spark job per round folds the edges against the
+    // driver-held rank vector) ----
     QueryDef("g2_pagerank",
       (s, d) => {
         val edges = edgesMemo(s, d)
         val nodes = Tables.supplier(s, d).select(col("s_suppkey").as("node"))
-        // broadcast delivery (the rank vector on the driver): this graph
-        // is supplier-count-sized, so the vector fits on the driver many
-        // times over; the co-partitioned scale path is GraphSpec-pinned ≡
-        Graph.pagerank(nodes, edges, iters = 15, damping = 0.85, copartition = false)
+        // the rank vector lives on the driver: this graph is
+        // supplier-count-sized, so it fits there many times over
+        Graph.pagerank(nodes, edges, iters = 15, damping = 0.85)
           .select(col("node"), round(col("r"), 6).as("pagerank"))
           .orderBy("node")
       },
@@ -113,13 +113,13 @@ object GraphQueries {
 
     // ---- g7: personalized PageRank — teleport to one seed company, so
     // ranks measure every node's relevance TO that company through the
-    // movement flows (same machinery as g2, indicator teleport) ----
+    // movement flows (same machinery as g2, indicator teleport). The
+    // seed must be a listed node: suppliers are numbered from 0 ----
     QueryDef("g7_personalized_pagerank",
       (s, d) => {
         val edges = edgesMemo(s, d)
         val nodes = Tables.supplier(s, d).select(col("s_suppkey").as("node"))
-        Graph.pagerank(nodes, edges, iters = 15, damping = 0.85,
-            teleportTo = Some(0L), copartition = false)
+        Graph.pagerank(nodes, edges, iters = 15, damping = 0.85, teleportTo = Some(0L))
           .select(col("node"), round(col("r"), 6).as("ppr"))
           .orderBy("node")
       },
@@ -200,8 +200,8 @@ object GraphQueries {
       (s, d) => {
         Graph.labelPropagation(
             Tables.supplier(s, d).select(col("s_suppkey").as("node")),
-            // broadcast delivery: the label vector fits on the driver (see g2)
-            backboneMemo(s, d), iters = 6, copartition = false)
+            // the label vector fits on the driver (see g2)
+            backboneMemo(s, d), iters = 6)
           .select(col("node"), col("label").as("community"))
           .orderBy("node")
       },
@@ -221,9 +221,8 @@ object GraphQueries {
       (s, d) => {
         val edges = edgesMemo(s, d)
         val nodes = Tables.supplier(s, d).select(col("s_suppkey").as("node"))
-        // broadcast delivery: the hub/authority vectors fit on the driver
-        // (see g2); the co-partitioned path stays GraphSpec-covered
-        Graph.hits(nodes, edges, iters = 8, copartition = false)
+        // the hub/authority vectors fit on the driver (see g2)
+        Graph.hits(nodes, edges, iters = 8)
           .select(col("node"), round(col("hub"), 6).as("hub"),
             round(col("auth"), 6).as("auth"))
           .orderBy("node")

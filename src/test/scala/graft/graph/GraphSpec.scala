@@ -55,20 +55,73 @@ class GraphSpec extends SparkSpecBase {
       (3L, 0L, 2L, 0.0, 5.0), (4L, 0L, 0L, 0.0, 0.0)))
   }
 
-  /** Independent driver-side power iteration with the same semantics. */
+  /** Independent driver-side power iteration with the same semantics:
+    * uniform teleport, or the seed's indicator with `teleportTo`. */
   private def pagerankLocal(nodes: Seq[Long], edges: Seq[(Long, Long, Double)],
-                            iters: Int, d: Double): Map[Long, Double] = {
+                            iters: Int, d: Double,
+                            teleportTo: Option[Long] = None): Map[Long, Double] = {
     val n = nodes.size.toDouble
+    val t = nodes.map(v => v -> teleportTo.fold(1.0 / n)(s => if (v == s) 1.0 else 0.0)).toMap
     val wout = edges.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-    var r = nodes.map(_ -> 1.0 / n).toMap
+    var r = t
     for (_ <- 1 to iters) {
       val dangling = nodes.filterNot(wout.contains).map(r).sum
       val contrib = edges.groupBy(_._2).view.mapValues(
         _.map { case (s, _, w) => r(s) * w / wout(s) }.sum).toMap
       r = nodes.map(v =>
-        v -> ((1 - d) / n + d * (contrib.getOrElse(v, 0.0) + dangling / n))).toMap
+        v -> ((1 - d) * t(v) + d * (contrib.getOrElse(v, 0.0) + dangling * t(v)))).toMap
     }
     r
+  }
+
+  /** Local HITS (Graph.hits arithmetic): only edges between listed nodes
+    * count, each half-step L1-normalizes over the nodes it reaches, and a
+    * node no edge reaches scores 0.0. Returns (hub, auth) per node. */
+  private def hitsLocal(nodes: Seq[Long], edges: Seq[(Long, Long, Double)],
+                        iters: Int): Map[Long, (Double, Double)] = {
+    val es = edges.filter(e => nodes.contains(e._1) && nodes.contains(e._2))
+    def halfStep(x: Map[Long, Double], key: ((Long, Long, Double)) => Long,
+                 from: ((Long, Long, Double)) => Long): Map[Long, Double] = {
+      val v = es.groupBy(key).map { case (k, g) => k -> g.map(e => e._3 * x(from(e))).sum }
+      val total = v.values.sum
+      nodes.map(n => n -> v.get(n).fold(0.0)(_ / total)).toMap
+    }
+    var hub = nodes.map(_ -> 1.0).toMap
+    var auth = hub
+    for (_ <- 1 to iters) {
+      auth = halfStep(hub, _._2, _._1)
+      hub = halfStep(auth, _._1, _._2)
+    }
+    nodes.map(n => n -> ((hub(n), auth(n)))).toMap
+  }
+
+  /** Local synchronous label propagation: vote = summed incident weight
+    * per neighbour label over the edges between listed nodes; max weight,
+    * ties to the smallest label; a node without votes keeps its id. */
+  private def lpLocal(nodes: Seq[Long], edges: Seq[(Long, Long, Double)],
+                      iters: Int): Map[Long, Long] = {
+    val und = edges.filter(e => nodes.contains(e._1) && nodes.contains(e._2))
+      .flatMap(e => Seq((e._1, e._2, e._3), (e._2, e._1, e._3)))
+    var lab = nodes.map(n => n -> n).toMap
+    for (_ <- 1 to iters) {
+      val votes = und.groupBy(_._1).map { case (n, g) =>
+        val byLabel = g.groupBy(e => lab(e._2)).map { case (l, gg) => (l, gg.map(_._3).sum) }
+        n -> byLabel.toSeq.sortBy { case (l, wv) => (-wv, l) }.head._1
+      }
+      lab = nodes.map(n => n -> votes.getOrElse(n, n)).toMap
+    }
+    lab
+  }
+
+  private def hitsOf(df: org.apache.spark.sql.DataFrame): Map[Long, (Double, Double)] =
+    df.as[(Long, Double, Double)].collect().map(t => t._1 -> ((t._2, t._3))).toMap
+
+  private def assertHits(got: Map[Long, (Double, Double)], ref: Map[Long, (Double, Double)],
+                         what: String): Unit = {
+    assert(got.keySet === ref.keySet, what)
+    ref.foreach { case (k, (hb, au)) =>
+      assert(math.abs(got(k)._1 - hb) < 1e-12 && math.abs(got(k)._2 - au) < 1e-12,
+        s"$what node $k: ${got(k)} vs ${(hb, au)}") }
   }
 
   test("pagerank matches an independent local power iteration (incl. dangling)") {
@@ -83,111 +136,61 @@ class GraphSpec extends SparkSpecBase {
     assert(math.abs(got.values.sum - 1.0) < 1e-9, "ranks sum to 1")
   }
 
-  test("pagerank copartition ≡ broadcast (incl. dangling + personalized teleport)") {
+  test("pagerank: personalized teleport matches the local power iteration (incl. dangling)") {
+    // node 5 dangles and is reachable (4 → 5), so with teleportTo = 3 its
+    // mass returns to node 3 only
     val nodesSeq = Seq(1L, 2L, 3L, 4L, 5L)
     val edgesSeq = Seq((1L, 2L, 2.0), (1L, 3L, 1.0), (2L, 3L, 1.0), (3L, 4L, 5.0),
-      (4L, 2L, 1.0))
-    val nodes = nodesSeq.toDF("node")
-    val edges = edgesSeq.toDF("src", "dst", "w")
+      (4L, 2L, 1.0), (4L, 5L, 1.0))
     for (tp <- Seq(None, Some(3L))) {
-      val bc = Graph.pagerank(nodes, edges, teleportTo = tp)
-        .as[(Long, Double)].collect().toMap
-      val cp = Graph.pagerank(nodes, edges, teleportTo = tp, copartition = true)
-        .as[(Long, Double)].collect().toMap
-      assert(bc.keySet == cp.keySet)
-      bc.foreach { case (k, v) => assert(math.abs(v - cp(k)) < 1e-12, s"node $k tp=$tp") }
+      val expected = pagerankLocal(nodesSeq, edgesSeq, iters = 15, d = 0.85, teleportTo = tp)
+      val got = Graph.pagerank(nodesSeq.toDF("node"), edgesSeq.toDF("src", "dst", "w"),
+        teleportTo = tp).as[(Long, Double)].collect().toMap
+      assert(got.keySet == expected.keySet)
+      expected.foreach { case (k, v) => assert(math.abs(v - got(k)) < 1e-12, s"node $k tp=$tp") }
+      assert(math.abs(got.values.sum - 1.0) < 1e-9, s"ranks sum to 1, tp=$tp")
     }
-    // the copartitioned contrib join must not broadcast the rank vector:
-    // the share table is hash(src)-partitioned once and the round joins
-    // are shuffled-hash — a broadcast there is the scale ceiling this
-    // path exists to remove. (The final node-spine lift is outside the
-    // loop and node-sized either way.)
-    val local = pagerankLocal(nodesSeq, edgesSeq, iters = 15, d = 0.85)
-    val got = Graph.pagerank(nodes, edges, copartition = true)
-      .as[(Long, Double)].collect().toMap
-    local.foreach { case (k, v) => assert(math.abs(v - got(k)) < 1e-12, s"node $k") }
   }
 
-  test("copartitioned round join: checkpoint keeps hash layout, no exchange, no broadcast") {
-    // the exact shape pagerank(copartition = true) runs per round: share
-    // hash(src)-partitioned + persisted, ranks hash(node)-partitioned +
-    // localCheckpoint'ed. localCheckpoint must PRESERVE outputPartitioning
-    // (LogicalRDD carries it) so the shuffled-hash join satisfies both
-    // sides' distributions with ZERO new exchanges — that property is the
-    // entire point of the 100×-scale path, so pin it.
-    val share = (1L to 200L).map(i => (i % 20, i % 7, 1.0))
-      .toDF("src", "dst", "share").repartition(col("src")).persist()
-    val ranks = (0L to 19L).map(i => (i, 0.05)).toDF("node", "r")
-      .repartition(col("node")).localCheckpoint()
-    try {
-      val j = share.join(ranks.hint("shuffle_hash"), share("src") === ranks("node"))
-        .groupBy(col("dst")).agg(sum(col("share") * col("r")).as("contrib"))
-      j.collect() // finalize AQE
-      val plan = j.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-      assert(plan.contains("ShuffledHashJoin"), s"expected shuffled-hash join:\n$plan")
-      assert(!plan.contains("BroadcastExchange"),
-        s"rank vector must not broadcast on the copartitioned path:\n$plan")
-      // the ONLY exchange Spark had to INSERT is the contrib aggregate's
-      // hash(dst) — neither join input re-shuffles. (The share cache's
-      // stored build plan prints its one-time REPARTITION_BY_COL exchange
-      // inside the InMemoryRelation; that's the deliberate one-off cost,
-      // not a per-round one, so count only ENSURE_REQUIREMENTS.)
-      val inserted = "ENSURE_REQUIREMENTS".r.findAllIn(plan).size
-      assert(inserted == 1, s"expected only the dst aggregate exchange, got $inserted:\n$plan")
-      assert("Exchange hashpartitioning\\(dst".r.findAllIn(plan).size == 1, plan)
-    } finally share.unpersist()
+  test("pagerank: a teleport seed outside the node list is rejected by name") {
+    // an unlisted seed would make the teleport vector all zeros and every
+    // rank 0.0
+    val nodes = Seq(1L, 2L, 3L).toDF("node")
+    val edges = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 1L, 1.0)).toDF("src", "dst", "w")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException](Graph.pagerank(nodes, edges, teleportTo = Some(9L)))
+    assert(e.getMessage.contains("seed 9"), e.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted, "edge blocks released")
   }
 
   test("pagerank skew: planted 100×-median hot node — map-side partial agg absorbs the hot key") {
     // ring of 200 (every node in-degree 1, the median) + an edge from
     // every ring node into node 0: in-degree(0) = 200 = 200× median —
-    // the dd8-style planted pathology for the per-round contrib shuffle,
+    // the dd8-style planted pathology for the per-round contrib fold,
     // where all of the hot node's mass keys to ONE dst
     val nodesSeq = (0L to 200L).toSeq
     val ring = (1L to 200L).map(i => (i, if (i == 200L) 1L else i + 1, 1.0))
     val spokes = (1L to 200L).map(i => (i, 0L, 1.0))
     val nodes = nodesSeq.toDF("node")
     val edges = (ring ++ spokes).toDF("src", "dst", "w")
-    // correctness under skew: both delivery modes match the local power
-    // iteration exactly (node 0 is also dangling — no out-edges)
+    // correctness under skew: the local power iteration exactly (node 0 is
+    // also dangling — no out-edges)
     val local = pagerankLocal(nodesSeq, ring ++ spokes, iters = 15, d = 0.85)
-    for (cp <- Seq(false, true)) {
-      val got = Graph.pagerank(nodes, edges, copartition = cp)
-        .as[(Long, Double)].collect().toMap
-      assert(got.keySet == local.keySet)
-      local.foreach { case (k, v) =>
-        assert(math.abs(v - got(k)) < 1e-12, s"node $k cp=$cp") }
-    }
-    // plan pin on the co-partitioned loop's own stage (pagerankContribAudit
-    // builds it through the same contribOf the rounds run): the
-    // groupBy(dst) sum must PARTIAL-aggregate before its exchange, so
-    // each map task folds its slice of the hot key to one row and the
-    // final aggregate receives at most one row per task per key — never
-    // the raw in-degree. That property, not luck, is what bounds the hot
-    // node's reduce-side state at 100×.
-    val audit = Graph.pagerankContribAudit(nodes, edges)
-    audit.collect() // finalize AQE
-    val plan = audit.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    assert(plan.contains("partial_sum"), s"no map-side partial aggregation:\n$plan")
-    assert("HashAggregate".r.findAllIn(plan).size >= 2,
-      s"expected partial+final hash aggregates:\n$plan")
-    assert(plan.contains("Exchange hashpartitioning(dst"),
-      s"missing the dst aggregate exchange:\n$plan")
-    assert(!plan.contains("BroadcastExchange"),
-      s"copartitioned audit must not broadcast the rank vector:\n$plan")
-    // broadcast mode: the same bound on the driver merge — the contrib
-    // fold the rounds run hands the hot node over as ONE entry per task
-    // (the edges are spread over 4 partitions, so 4 tasks see its spokes)
+    val got = Graph.pagerank(nodes, edges).as[(Long, Double)].collect().toMap
+    assert(got.keySet == local.keySet)
+    local.foreach { case (k, v) => assert(math.abs(v - got(k)) < 1e-12, s"node $k") }
+    // the contrib fold the rounds run hands the hot node over as ONE entry
+    // per task (the edges are spread over 4 partitions, so 4 tasks see its
+    // spokes): the driver merge never receives the raw in-degree
     val g = new EdgeBlocks(nodes, edges.repartition(4))
     try assertFoldAbsorbs(g.spread(Array.fill(g.n)(1.0 / g.n), reverse = false),
       g.index(0L), "pagerank contrib")
     finally g.release()
   }
 
-  /** The broadcast-mode skew pin: a fold's per-task partials hold each key
-    * at most once, and the hot key's edges span several tasks, each of
-    * which still hands it over as a single entry. */
+  /** The skew pin: a fold's per-task partials hold each key at most once,
+    * and the hot key's edges span several tasks, each of which still hands
+    * it over as a single entry. */
   private def assertFoldAbsorbs(parts: Array[Partial], hot: Long, what: String): Unit = {
     parts.foreach(p => assert(p.keys.distinct.length === p.keys.length, s"$what: repeated key"))
     val perTask = parts.map(_.keys.count(_ == hot))
@@ -195,7 +198,7 @@ class GraphSpec extends SparkSpecBase {
       s"$what: hot key entries per task ${perTask.mkString(",")}")
   }
 
-  test("hits + labelPropagation skew: planted 200×-median hot node — partial agg absorbs, both modes exact") {
+  test("hits + labelPropagation skew: planted 200×-median hot node — partial agg absorbs, exact against the local references") {
     // same planted pathology as the pagerank skew pin: ring of 200
     // (median in-degree 1) + a spoke from every ring node into node 0
     val nodesSeq = (0L to 200L).toSeq
@@ -204,86 +207,14 @@ class GraphSpec extends SparkSpecBase {
     val es = ring ++ spokes
     val nodes = nodesSeq.toDF("node")
     val edges = es.toDF("src", "dst", "w")
+    assertHits(hitsOf(Graph.hits(nodes, edges, iters = 8)), hitsLocal(nodesSeq, es, 8), "hits")
+    val l = Graph.labelPropagation(nodes, edges, iters = 6).as[(Long, Long)].collect().toMap
+    assert(l === lpLocal(nodesSeq, es, 6), "labelPropagation")
 
-    // local HITS mirror (Graph.hits arithmetic: inner-join contribs, L1
-    // normalize over the contrib rows, absent nodes lift to 0.0)
-    def hitsLocal(iters: Int): Map[Long, (Double, Double)] = {
-      var hub = nodesSeq.map(_ -> 1.0).toMap
-      var auth = Map.empty[Long, Double]
-      for (_ <- 1 to iters) {
-        val ac = es.groupBy(_._2).map { case (d, g) =>
-          d -> g.map(e => e._3 * hub(e._1)).sum }
-        val s1 = ac.values.sum
-        auth = nodesSeq.map(n => n -> (ac.getOrElse(n, 0.0) / s1)).toMap
-        val hc = es.groupBy(_._1).map { case (s0, g) =>
-          s0 -> g.map(e => e._3 * auth(e._2)).sum }
-        val s2 = hc.values.sum
-        hub = nodesSeq.map(n => n -> (hc.getOrElse(n, 0.0) / s2)).toMap
-      }
-      nodesSeq.map(n => n -> ((hub(n), auth(n)))).toMap
-    }
-    // local synchronous LP mirror (vote = summed incident weight per
-    // neighbor label; max weight, ties to the smallest label)
-    def lpLocal(iters: Int): Map[Long, Long] = {
-      val und = es.flatMap(e => Seq((e._1, e._2, e._3), (e._2, e._1, e._3)))
-        .groupBy(e => (e._1, e._2))
-        .map { case ((s0, d), g) => (s0, d, g.map(_._3).sum) }.toSeq
-      var lab = nodesSeq.map(n => n -> n).toMap
-      for (_ <- 1 to iters) {
-        val votes = und.groupBy(_._1).map { case (n, g) =>
-          val byLabel = g.groupBy(e => lab(e._2))
-            .map { case (l, gg) => (l, gg.map(_._3).sum) }
-          n -> byLabel.toSeq.sortBy { case (l, wv) => (-wv, l) }.head._1
-        }
-        lab = nodesSeq.map(n => n -> votes.getOrElse(n, n)).toMap
-      }
-      lab
-    }
-
-    val hitsRef = hitsLocal(8)
-    val lpRef = lpLocal(6)
-    for (cp <- Seq(false, true)) {
-      val h = Graph.hits(nodes, edges, iters = 8, copartition = cp)
-        .as[(Long, Double, Double)].collect().map(t => t._1 -> ((t._2, t._3))).toMap
-      assert(h.keySet == hitsRef.keySet)
-      hitsRef.foreach { case (k, (hb, au)) =>
-        assert(math.abs(h(k)._1 - hb) < 1e-12, s"hub $k cp=$cp")
-        assert(math.abs(h(k)._2 - au) < 1e-12, s"auth $k cp=$cp")
-      }
-      val l = Graph.labelPropagation(nodes, edges, iters = 6, copartition = cp)
-        .as[(Long, Long)].collect().toMap
-      assert(l === lpRef, s"labelPropagation cp=$cp")
-    }
-
-    // plan pins through the co-partitioned loops' OWN stage
-    // constructions: every hot-key shuffle (both HITS half-steps, the LP
-    // (nd, label) vote sum and its argmax) must PARTIAL-aggregate
-    // map-side before its exchange
-    val (ac, hc) = Graph.hitsHalfStepAudit(nodes, edges)
-    for ((df, nm) <- Seq((ac, "auth"), (hc, "hub"))) {
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(plan.contains("partial_sum"),
-        s"no map-side partial aggregation in HITS $nm step:\n$plan")
-      assert("HashAggregate".r.findAllIn(plan).size >= 2,
-        s"expected partial+final hash aggregates in HITS $nm step:\n$plan")
-      assert(!plan.contains("BroadcastExchange"),
-        s"copartitioned HITS $nm step must not broadcast the vector:\n$plan")
-    }
-    val vote = Graph.lpVoteAudit(nodes, edges)
-    vote.collect()
-    val plan = vote.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    assert(plan.contains("partial_sum"), s"no map-side partial vote aggregation:\n$plan")
-    assert(plan.contains("partial_max"), s"no map-side partial argmax:\n$plan")
-    assert(!plan.contains("BroadcastExchange"),
-      s"copartitioned LP vote must not broadcast the label vector:\n$plan")
-
-    // broadcast mode: the folds the rounds run. The authority half-step
-    // keys by dst (the hot node); the hub half-step keys by src. The LP
-    // vote keys by (node, label): with every neighbour on one label the
-    // hot node's 200 votes reach the merge as one entry per task.
+    // the folds the rounds run. The authority half-step keys by dst (the
+    // hot node); the hub half-step keys by src. The LP vote keys by
+    // (node, label): with every neighbour on one label the hot node's 200
+    // votes reach the merge as one entry per task.
     val g = new EdgeBlocks(nodes, edges.repartition(4))
     try {
       val hot = g.index(0L).toLong
@@ -403,75 +334,38 @@ class GraphSpec extends SparkSpecBase {
     assert(byNode(7L) === 7L)
   }
 
-  test("hits + labelPropagation: copartition ≡ broadcast") {
+  test("hits + labelPropagation: two cliques match the local references") {
     val s = spark; import s.implicits._
-    val edges = Seq(
+    val es = Seq(
       (1L, 2L, 5.0), (1L, 3L, 5.0), (2L, 3L, 5.0),
       (4L, 5L, 5.0), (4L, 6L, 5.0), (5L, 6L, 5.0),
-      (3L, 4L, 1.0), (6L, 1L, 2.0)).toDF("src", "dst", "w")
-    val nodes = (1L to 7L).toDF("node")
-    val lpaB = Graph.labelPropagation(nodes, edges, iters = 6)
+      (3L, 4L, 1.0), (6L, 1L, 2.0))
+    val nodesSeq = 1L to 7L
+    val (nodes, edges) = (nodesSeq.toDF("node"), es.toDF("src", "dst", "w"))
+    val lpa = Graph.labelPropagation(nodes, edges, iters = 6)
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    val lpaC = Graph.labelPropagation(nodes, edges, iters = 6, copartition = true)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    assert(lpaB === lpaC)
-    val hB = Graph.hits(nodes, edges, iters = 5)
-      .collect().map(x => x.getLong(0) -> (x.getDouble(1), x.getDouble(2))).toMap
-    val hC = Graph.hits(nodes, edges, iters = 5, copartition = true)
-      .collect().map(x => x.getLong(0) -> (x.getDouble(1), x.getDouble(2))).toMap
-    assert(hB.keySet === hC.keySet)
-    hB.foreach { case (k, (hub, auth)) =>
-      assert(math.abs(hub - hC(k)._1) < 1e-12 && math.abs(auth - hC(k)._2) < 1e-12,
-        s"node $k")
-    }
+    assert(lpa === lpLocal(nodesSeq, es, 6))
+    assertHits(hitsOf(Graph.hits(nodes, edges, iters = 5)), hitsLocal(nodesSeq, es, 5), "hits")
   }
 
   test("hits: an edge with a null endpoint is dropped, never duplicating rows") {
     val s = spark; import s.implicits._
     // node 3 keeps a real out-edge, so its hub score (and the null
     // edge's contribution) stays non-zero in every round
-    val clean = Seq((1L, Option(2L), 1.0), (2L, Option(3L), 2.0), (1L, Option(3L), 1.0),
-      (3L, Option(1L), 1.0))
-    val edges = (clean :+ ((3L, Option.empty[Long], 1.0))).toDF("src", "dst", "w")
-    val nodes = (1L to 3L).toDF("node")
-    def run(e: org.apache.spark.sql.DataFrame) = Graph.hits(nodes, e, iters = 3)
-      .collect().map(x => (x.getLong(0), x.getDouble(1), x.getDouble(2)))
-    val withNull = run(edges)
-    val ref = run(clean.toDF("src", "dst", "w")).map(x => x._1 -> x).toMap
-    assert(withNull.length === 3, withNull.mkString(", "))
-    withNull.foreach { case (k, hub, auth) =>
-      assert(math.abs(hub - ref(k)._2) < 1e-12 && math.abs(auth - ref(k)._3) < 1e-12,
-        s"node $k")
-    }
-    // co-partitioned: each audited half-step keeps exactly one null-node
-    // row, its L1 total
-    val (ac, hc) = Graph.hitsHalfStepAudit(nodes, edges)
-    assert(ac.filter(col("node").isNull).count() === 1L)
-    assert(hc.filter(col("node").isNull).count() === 1L)
-    val cp = Graph.hits(nodes, edges, iters = 3, copartition = true)
-      .collect().map(x => (x.getLong(0), x.getDouble(1), x.getDouble(2)))
-    assert(cp.length === 3, cp.mkString(", "))
-    cp.foreach { case (k, hub, auth) =>
-      assert(math.abs(hub - ref(k)._2) < 1e-12 && math.abs(auth - ref(k)._3) < 1e-12,
-        s"node $k copartition")
-    }
+    val clean = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (1L, 3L, 1.0), (3L, 1L, 1.0))
+    val edges = (clean.map(e => (e._1, Option(e._2), e._3)) :+ ((3L, Option.empty[Long], 1.0)))
+      .toDF("src", "dst", "w")
+    val withNull = Graph.hits((1L to 3L).toDF("node"), edges, iters = 3)
+    assert(withNull.count() === 3L)
+    assertHits(hitsOf(withNull), hitsLocal(1L to 3L, clean, 3), "hits")
   }
 
-  test("hits: both modes ignore an edge to or from an unlisted node") {
+  test("hits: an edge to or from an unlisted node is ignored") {
     val s = spark; import s.implicits._
     val fixture = Seq((1L, 2L, 2.0), (1L, 3L, 1.0), (2L, 3L, 1.0), (3L, 4L, 5.0), (4L, 2L, 1.0))
-    val nodes = (1L to 5L).toDF("node")
     val withNine = (fixture ++ Seq((3L, 9L, 4.0), (9L, 1L, 3.0))).toDF("src", "dst", "w")
-    def hits(e: org.apache.spark.sql.DataFrame, cp: Boolean) =
-      Graph.hits(nodes, e, iters = 3, copartition = cp).as[(Long, Double, Double)].collect()
-    val ref = hits(fixture.toDF("src", "dst", "w"), cp = false).map(t => t._1 -> t).toMap
-    for (cp <- Seq(false, true)) {
-      val got = hits(withNine, cp)
-      assert(got.map(_._1).sorted === (1L to 5L), s"cp=$cp")
-      got.foreach { case (k, hb, au) =>
-        assert(math.abs(hb - ref(k)._2) < 1e-12 && math.abs(au - ref(k)._3) < 1e-12,
-          s"node $k cp=$cp: ($hb, $au) vs ${ref(k)}") }
-    }
+    assertHits(hitsOf(Graph.hits((1L to 5L).toDF("node"), withNine, iters = 3)),
+      hitsLocal(1L to 5L, fixture, 3), "hits")
   }
 
   test("labelPropagation: tie votes pick the smallest label") {
@@ -545,7 +439,7 @@ class GraphSpec extends SparkSpecBase {
     assert(none === 0L)
   }
 
-  test("pagerank: a null dst loses its share like an unlisted dst, in both modes") {
+  test("pagerank: a null dst loses its share like an unlisted dst") {
     val s = spark; import s.implicits._
     // the 3-cycle plus (1, null): node 1 keeps the null edge in its
     // out-weight, and the edge's share leaves the graph, as an edge to
@@ -557,26 +451,37 @@ class GraphSpec extends SparkSpecBase {
       .toDF("src", "dst", "w")
     val expected = pagerankLocal(nodesSeq, cycle :+ ((1L, 9L, 1.0)), iters = 15, d = 0.85)
     assert(expected.values.sum < 0.5, "the lost share leaves mass outside the graph")
-    for (cp <- Seq(false, true)) {
-      val got = Graph.pagerank(nodes, withNull, copartition = cp)
-        .as[(Long, Double)].collect().toMap
-      assert(got.keySet == expected.keySet)
-      expected.foreach { case (k, v) =>
-        assert(math.abs(v - got(k)) < 1e-12, s"node $k cp=$cp got $got") }
-    }
+    val got = Graph.pagerank(nodes, withNull).as[(Long, Double)].collect().toMap
+    assert(got.keySet == expected.keySet)
+    expected.foreach { case (k, v) => assert(math.abs(v - got(k)) < 1e-12, s"node $k got $got") }
     // label propagation and HITS ignore the null edge: the cycle's answer
-    val clean = cycle.toDF("src", "dst", "w")
-    for (cp <- Seq(false, true)) {
-      def lp(e: org.apache.spark.sql.DataFrame) =
-        Graph.labelPropagation(nodes, e, iters = 3, copartition = cp).as[(Long, Long)].collect().toMap
-      assert(lp(withNull) === lp(clean), s"labelPropagation cp=$cp")
-      def hits(e: org.apache.spark.sql.DataFrame) = Graph.hits(nodes, e, iters = 3, copartition = cp)
-        .as[(Long, Double, Double)].collect().map(t => t._1 -> t).toMap
-      val (h, ref) = (hits(withNull), hits(clean))
-      assert(h.keySet === ref.keySet)
-      h.foreach { case (k, (_, hb, au)) =>
-        assert(math.abs(hb - ref(k)._2) < 1e-12 && math.abs(au - ref(k)._3) < 1e-12,
-          s"hits node $k cp=$cp") }
+    val lp = Graph.labelPropagation(nodes, withNull, iters = 3).as[(Long, Long)].collect().toMap
+    assert(lp === lpLocal(nodesSeq, cycle, 3), "labelPropagation")
+    assertHits(hitsOf(Graph.hits(nodes, withNull, iters = 3)), hitsLocal(nodesSeq, cycle, 3), "hits")
+  }
+
+  test("edge-free graphs: pagerank uniform, labels stay own ids, HITS zero; no nodes, no rows") {
+    val s = spark; import s.implicits._
+    val nodes = (1L to 4L).toDF("node")
+    val none = Seq.empty[(Long, Long, Double)].toDF("src", "dst", "w")
+    // every node dangles, so the rank stays at the uniform teleport
+    Graph.pagerank(nodes, none).as[(Long, Double)].collect()
+      .foreach { case (k, v) => assert(math.abs(v - 0.25) < 1e-12, s"node $k") }
+    assert(Graph.labelPropagation(nodes, none).as[(Long, Long)].collect().toMap ===
+      (1L to 4L).map(n => n -> n).toMap)
+    // no edge joins two listed nodes: the lone edge reaches unlisted 9
+    for (e <- Seq(none, Seq((1L, 9L, 1.0)).toDF("src", "dst", "w")))
+      assert(Graph.hits(nodes, e).as[(Long, Double, Double)].collect().sortBy(_._1) ===
+        (1L to 4L).map(n => (n, 0.0, 0.0)).toArray)
+    // an empty node set: zero rows, node columns keep the input's id type
+    val noNodes = Seq.empty[Int].toDF("node")
+    val intEdges = Seq((1, 2, 1.0)).toDF("src", "dst", "w")
+    for ((name, out, types) <- Seq(
+        ("pagerank", Graph.pagerank(noNodes, intEdges), Seq("integer", "double")),
+        ("labelPropagation", Graph.labelPropagation(noNodes, intEdges), Seq("integer", "integer")),
+        ("hits", Graph.hits(noNodes, intEdges), Seq("integer", "double", "double")))) {
+      assert(out.count() === 0L, name)
+      assert(out.schema.map(_.dataType.typeName) === types, name)
     }
   }
 
@@ -599,13 +504,13 @@ class GraphSpec extends SparkSpecBase {
 
   test("broadcast-mode loops keep the input's integral node id type") {
     val s = spark; import s.implicits._
-    val edges = Seq((1, 2, 2.0), (1, 3, 1.0), (2, 3, 1.0), (3, 1, 5.0)).toDF("src", "dst", "w")
+    val es = Seq((1, 2, 2.0), (1, 3, 1.0), (2, 3, 1.0), (3, 1, 5.0))
     val nodes = (1 to 4).toDF("node")
-    val lp = Graph.labelPropagation(nodes, edges, iters = 2)
+    val lp = Graph.labelPropagation(nodes, es.toDF("src", "dst", "w"), iters = 2)
     assert(lp.schema.map(_.dataType.typeName) === Seq("integer", "integer"))
-    assert(lp.as[(Int, Int)].collect().toMap === Graph.labelPropagation(nodes, edges,
-      iters = 2, copartition = true).as[(Int, Int)].collect().toMap)
-    val pr = Graph.pagerank(nodes, edges)
+    assert(lp.as[(Int, Int)].collect().map { case (n, l) => n.toLong -> l.toLong }.toMap ===
+      lpLocal(1L to 4L, es.map(e => (e._1.toLong, e._2.toLong, e._3)), 2))
+    val pr = Graph.pagerank(nodes, es.toDF("src", "dst", "w"))
     assert(pr.schema.map(_.dataType.typeName) === Seq("integer", "double"))
   }
 }

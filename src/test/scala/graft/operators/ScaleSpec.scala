@@ -188,8 +188,8 @@ class ScaleSpec extends SparkSpecBase {
       "dd11_incremental_neardup" -> "2/4/0/0/-",
       "ts12_tfidf_keywords" -> "6/1/0/1/-",
       "ts13_cooccurrence" -> "6/2/0/2/-",
-      // g2's plan is the local relation of the driver-held rank vector
-      // plus the output sort; emb1's two BNLJs are 1-row broadcasts
+      // g2's (and g7's) plan is the local relation of the driver-held
+      // rank vector plus the output sort; emb1's two BNLJs are 1-row broadcasts
       // (n/d stats + the 64-row means dim), ts14 is TakeOrderedAndProject
       "g1_transition_matrix" -> "5/2/0/0/p",
       "g2_pagerank" -> "1/0/0/0/-",
@@ -282,13 +282,9 @@ class ScaleSpec extends SparkSpecBase {
       // of every fact row (measured 6.9x slower)
       "stats1_column_profile" -> "9/0/0/4/-",
       "stats2_histogram" -> "3/0/0/1/-",
-      // g11 (like g2/g7/g10): broadcast delivery keeps the hub and
-      // authority vectors on the driver and returns them as a local
-      // relation, so the audited plan is the output sort alone — the two
-      // node-spine lift BHJs and the hub normalizer BNLJ of the
-      // checkpointed form (1/2/0/1) are gone. GraphSpec pins the
-      // copartitioned scale path ≡ broadcast with zero per-round
-      // exchanges
+      // g11 (like g2/g7/g10): the hub and authority vectors live on the
+      // driver and come back as a local relation, so the audited plan is
+      // the output sort alone
       "g11_hits" -> "1/0/0/0/-",
       // g12 is a 1-row summary: its exchanges are the per-aggregate
       // finals over the checkpointed node/edge-scale frames, its BNLJs
