@@ -56,16 +56,9 @@ object SessionHygiene {
   def freeCheckpoint(df: DataFrame): Unit = {
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        // In audit mode only loopCkpt() still checkpoints (Ckpt.scala:41)
-        // — its retired frames are exactly these LogicalRDD roots, and an
-        // iterative shadow audit leaks one pinned block set per round per
-        // frame if they aren't freed here too.
         lr.rdd.unpersist(blocking = false)
       case other =>
-        // Audit mode (Ckpt.disabled): ckpt() was the identity, so
-        // ckpt-rooted callers hand us plain derived plans with nothing
-        // persisted to free. No-op instead of throwing.
-        if (!Ckpt.disabled) throw new IllegalArgumentException(
+        throw new IllegalArgumentException(
           "freeCheckpoint requires the checkpoint-rooted frame itself " +
             s"(plan root is ${other.nodeName}, not LogicalRDD); freeing " +
             "LogicalRDDs inside a derived plan could strand other live " +

@@ -162,7 +162,7 @@ object Graph {
     // unpersisted edge derivation would re-run upstream per round
     val e = edges.select(col("src"), col("dst")).persist()
     var dist = nodes.filter(col("node") === seed)
-      .select(col("node"), lit(0).as("hops")).loopCkpt()
+      .select(col("node"), lit(0).as("hops")).ckpt()
     var frontier = dist
     var k = 0
     var done = frontier.isEmpty
@@ -174,10 +174,10 @@ object Graph {
         .select(col("dst").as("node")).distinct()
         .join(broadcast(dist), Seq("node"), "left_anti")
         .select(col("node"), lit(k).as("hops"))
-        .loopCkpt()
+        .ckpt()
       if (next.isEmpty) done = true
       else {
-        dist = dist.union(next).loopCkpt()
+        dist = dist.union(next).ckpt()
         frontier = next
       }
     }
@@ -507,7 +507,7 @@ object Graph {
             rounds: Int = 8): DataFrame = {
     var und = edges
       .select(least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().loopCkpt()
+      .filter(col("u") =!= col("v")).distinct().ckpt()
     // Early exit on convergence is oracle-safe: peeling is idempotent at
     // the fixpoint, so running the remaining unrolled oracle rounds on a
     // converged edge set changes nothing. The count is on the checkpointed
@@ -517,11 +517,11 @@ object Graph {
     for (_ <- 1 to rounds if !converged) {
       val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("n").loopCkpt()
+      val keep = deg.filter(col("deg") >= k).select("n").ckpt()
       und = und
         .join(broadcast(keep).select(col("n").as("u")), Seq("u"), "left_semi")
         .join(broadcast(keep).select(col("n").as("v")), Seq("v"), "left_semi")
-        .loopCkpt()
+        .ckpt()
       val cur = und.count()
       converged = cur == prev
       prev = cur

@@ -95,7 +95,7 @@ object Bpe {
   def learnMerges(docs: DataFrame, text: String, nMerges: Int): Seq[Merge] = {
     var cur = wordFreq(docs, text)
       .select(col("word"), col("freq"), charToks(col("word")).as("toks"))
-      .loopCkpt()
+      .ckpt()
     val out = Seq.newBuilder[Merge]
     var rank = 1
     var exhausted = false
@@ -110,7 +110,7 @@ object Bpe {
         out += Merge(rank, a, b, a + b, top(0).getAs[Long]("cnt"))
         val next = cur
           .withColumn("toks", applyMerge(col("toks"), a, b))
-          .loopCkpt()
+          .ckpt()
         cur.unpersist()
         cur = next
         rank += 1

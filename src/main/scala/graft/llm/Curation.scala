@@ -56,41 +56,25 @@ object Curation {
     Seq((16, 2), (8, 4), (4, 8), (2, 16))
       .minBy { case (b, r) => math.abs(math.pow(1.0 / b, 1.0 / r) - threshold) }
 
-  /** Fully deterministic curation pass: the end-to-end corpus build with
-    * every stage a pure md5-derived function of (id, text) — unlike
-    * `curated` (whose LSH tail is xxhash64-keyed), the whole pipeline is
-    * reproducible bit-for-bit by any engine, so the COMPOSITION itself is
-    * oracle-checkable (cur9), not just its stages.
-    *
-    * Stages, each shrinking what the next touches: quality + language
-    * gates and first-wins exact dedup (`exactCurated`, one gated scan) →
-    * benchmark decontamination (gram set broadcast) → per-source cap
-    * (salted exact top-k) → stratified split (hash-cut) → deterministic
-    * corpus shuffle (two-level exact rank). */
-  def deterministicPass(docs: DataFrame, id: String, text: String,
-                        source: String, benchmark: DataFrame,
-                        cfg: Config = Config(), capK: Int = 15,
-                        valFrac: Double = 0.1, testFrac: Double = 0.1): DataFrame =
-    finishDeterministic(detStages(docs, id, text, benchmark, cfg).clean,
-      id, source, capK, valFrac, testFrac)
-
   /** The deterministic pass's intermediate stages, exposed so several
     * queries (the pass itself, the attrition funnel) can share one build
     * — the staged-table pattern a pipeline server would use. */
   final case class DetStages(raw: DataFrame, gated: DataFrame,
                              exact: DataFrame, clean: DataFrame)
 
-  def detStages(docs: DataFrame, id: String, text: String,
-                benchmark: DataFrame, cfg: Config = Config()): DetStages = {
-    val gated = gatedScan(docs, id, text, cfg)
-    val exact = exactFromGated(gated, id)
-    val clean = Dedup.decontaminate(exact, id, text, benchmark, text,
-      n = 8, hashGrams = false)
-    DetStages(docs, gated, exact, clean)
-  }
-
-  /** The row-preserving tail of the deterministic pass: per-source cap →
-    * stratified split → corpus shuffle. */
+  /** The row-preserving tail of the fully deterministic curation pass:
+    * the end-to-end corpus build with every stage a pure md5-derived
+    * function of (id, text) — unlike `curated` (whose LSH tail is
+    * xxhash64-keyed), the whole pipeline is reproducible bit-for-bit by
+    * any engine, so the COMPOSITION itself is oracle-checkable (cur9),
+    * not just its stages.
+    *
+    * Stages, each shrinking what the next touches: quality + language
+    * gates and first-wins exact dedup (`gatedScan` + `exactFromGated`,
+    * one gated scan) → benchmark decontamination (gram set broadcast),
+    * which yields `clean`; this method runs the rest: per-source cap
+    * (salted exact top-k) → stratified split (hash-cut) → deterministic
+    * corpus shuffle (two-level exact rank). */
   def finishDeterministic(clean: DataFrame, id: String, source: String,
                           capK: Int = 15, valFrac: Double = 0.1,
                           testFrac: Double = 0.1): DataFrame =

@@ -2,7 +2,7 @@ package graft.llm
 
 import graft.Ckpt._
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
@@ -273,6 +273,24 @@ object Dedup {
   private[graft] def portableCoef(i: Int): (Long, Long) =
     graft.functions.MinHashKernel.portableCoef(i)
 
+  /** DuckDB select list of the portable MinHash sketch over a 28-bit
+    * base-hash column `h`: `min((h * a + b) % p) AS m$i` per member. */
+  private[graft] def portableMinsSql(numHashes: Int): String =
+    (0 until numHashes).map { i =>
+      val (a, b) = portableCoef(i)
+      s"min((h * $a + $b) % $portableP) AS m$i"
+    }.mkString(",\n         ")
+
+  /** DuckDB count of the sketch slots on which `sa` and `sb` agree. */
+  private[graft] def portableAgreeSql(numHashes: Int): String =
+    (0 until numHashes).map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
+      .mkString(" + ")
+
+  /** DuckDB r=1 band rows `(id, band, v)` of the sketch table `src`. */
+  private[graft] def portableBandRowsSql(src: String, id: String, numHashes: Int): String =
+    (0 until numHashes).map(i => s"SELECT $id, $i AS band, m$i AS v FROM $src")
+      .mkString("\n  UNION ALL\n  ")
+
   /** Portable MinHash signature columns (m0..m{n-1}): ONE md5-derived
     * 28-bit base hash per shingle, then per-seed k-universal transforms
     * min((a_i·h + b_i) mod p) — bit-exact across engines (the SQL twin is
@@ -298,10 +316,7 @@ object Dedup {
   /** DuckDB SQL computing the identical portable MinHash signature. */
   def minhashPortableOracleSql(table: String, id: String, text: String,
                                k: Int = 5, numHashes: Int = 8): String = {
-    val mins = (0 until numHashes).map { seed =>
-      val (a, b) = portableCoef(seed)
-      s"min((h * $a + $b) % $portableP) AS m$seed"
-    }.mkString(",\n         ")
+    val mins = portableMinsSql(numHashes)
     s"""WITH base AS (SELECT $id, lower($text) AS t FROM $table),
        |sh AS (
        |  SELECT $id,
@@ -404,10 +419,7 @@ object Dedup {
   /** DuckDB SQL computing [[corpusOverlap]] bit-for-bit. */
   def corpusOverlapOracleSql(table: String, source: String, text: String,
                              k: Int = 5, numHashes: Int = 32): String = {
-    val mins = (0 until numHashes).map { i =>
-      val (a, b) = portableCoef(i)
-      s"min((h * $a + $b) % $portableP) AS m$i"
-    }.mkString(",\n         ")
+    val mins = portableMinsSql(numHashes)
     val matches = (0 until numHashes)
       .map(i => s"(CASE WHEN x.m$i = y.m$i THEN 1 ELSE 0 END)")
       .mkString(" + ")
@@ -1513,37 +1525,55 @@ object Dedup {
     * in the edges' id type, for every node that appears in a kept edge,
     * with component = the minimum node id of its component.
     *
-    * The edges are oriented (u > v), de-duplicated and checkpointed, and
-    * their (count, hash-sum) signature is taken. Before every round,
-    * including the first, the edge count is checked against the budget
-    * Spark already uses to broadcast a relation through the driver
-    * (`spark.sql.autoBroadcastJoinThreshold`, 16 B per edge). Within it,
-    * the edges are collected and a union-find rooted at the smallest id
-    * finishes on the driver; the result is a local relation. This is
-    * exact at any round: both star operations below keep every
-    * component and its node set, so the union-find over the current edge
-    * set gives the rows the rounds would converge to.
+    * The edges are oriented (u > v) first. Their count, duplicates
+    * included, bounds the distinct edge count from above. One pass
+    * collects up to one edge more than the budget Spark already uses to
+    * broadcast a relation through the driver
+    * (`spark.sql.autoBroadcastJoinThreshold`, 16 B per edge); when that
+    * pass holds every edge, a union-find rooted at the smallest id
+    * finishes on the driver (a duplicate edge joins nothing new), and
+    * the result is a local relation. No shuffle, checkpoint or
+    * signature job runs on this path.
     *
     * Above the budget (or with it at -1, or with non-integral ids) the
-    * rounds run: alternating large-star / small-star (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14). Each round
-    * is a groupBy-min plus an equi-join shuffling only (node, node)
-    * pairs, and the edge set
-    * converges to stars centered at each component's minimum id in
-    * O(log n) rounds on ANY graph — naive min-label propagation needs
-    * graph-diameter rounds, which a 100 TB chain-shaped near-dup cluster
-    * would actually hit. The loop then runs ONE scalar aggregate per
-    * round for the convergence check (the signature — no data is
-    * collected), and lineage is truncated per round so plans stay
-    * constant-size. */
+    * edges are de-duplicated and checkpointed, their (count, hash-sum)
+    * signature is taken, and the rounds run: alternating large-star /
+    * small-star (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC'14). Before every round, including the first, the
+    * distinct edge count is checked against the same budget; within it
+    * the driver finish takes over. This is exact at any round: both star
+    * operations keep every component and its node set, so the union-find
+    * over the current edge set gives the rows the rounds would converge
+    * to. Each round is a groupBy-min plus an equi-join shuffling only
+    * (node, node) pairs, and the edge set converges to stars centered at
+    * each component's minimum id in O(log n) rounds on ANY graph — naive
+    * min-label propagation needs graph-diameter rounds, which a 100 TB
+    * chain-shaped near-dup cluster would actually hit. The loop then runs
+    * ONE scalar aggregate per round for the convergence check (the
+    * signature — no data is collected), and lineage is truncated per
+    * round so plans stay constant-size. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val cols = edges.columns
     require(cols.length == 2, s"edge list must have 2 columns, got ${cols.mkString(",")}")
-    // orient u > v; drop self-loops and duplicates
-    var e = edges.toDF("eu", "ev")
+    // orient u > v; drop self-loops (and with them null endpoints)
+    val oriented = edges.toDF("eu", "ev")
       .filter(col("eu") =!= col("ev"))
       .select(greatest(col("eu"), col("ev")).as("u"), least(col("eu"), col("ev")).as("v"))
-      .distinct().loopCkpt()
+    // fixpoint is a star per component: (member → center). Centers appear
+    // only on the v side; label them with themselves.
+    def stars(e: DataFrame): DataFrame =
+      e.select(col("u").as("id"), col("v").as("component"))
+        .union(e.select(col("v").as("id"), col("v").as("component")).distinct())
+        .distinct()
+    val schema = stars(oriented).schema
+    val budget = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(oriented.schema("u").dataType)
+    val cap = if (integral && budget >= 0) math.min(budget / 16, Int.MaxValue - 1L) else -1L
+    if (cap >= 0) {
+      val head = oriented.limit(cap.toInt + 1).collect()
+      if (head.length <= cap) return componentsOnDriver(head, schema, edges.sparkSession)
+    }
+    var e = oriented.distinct().ckpt()
     def signature(df: DataFrame): (Long, Long) = {
       // hashes folded into a 30-bit domain before the sum so the aggregate
       // cannot overflow under ANSI semantics (would need ~8.5e9 edges)
@@ -1551,13 +1581,10 @@ object Dedup {
         coalesce(sum(pmod(xxhash64(col("u"), col("v")), lit(1L << 30))), lit(0L))).first()
       (r.getLong(0), r.getLong(1))
     }
-    val budget = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(e.schema("u").dataType)
-    def fitsDriver(n: Long): Boolean = integral && budget >= 0 && n <= budget / 16
     var sigE = signature(e)
     var it = 0
     var converged = sigE._1 == 0L
-    while (!converged && !fitsDriver(sigE._1) && it < maxIter) {
+    while (!converged && sigE._1 > cap && it < maxIter) {
       // large-star: every neighbor LARGER than u links to min(N(u) ∪ {u})
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
       val mins = sym.groupBy("u").agg(min(col("v")).as("mv"))
@@ -1574,29 +1601,29 @@ object Dedup {
         .select(col("v").as("u"), col("mv").as("v"))
         .union(mins2.select(col("u"), col("mv").as("v")))
         .distinct()
-      val next = ss.loopCkpt()
+      val next = ss.ckpt()
       val sigNext = signature(next)
       converged = sigNext == sigE
       graft.SessionHygiene.freeCheckpoint(e)
       e = next; sigE = sigNext
       it += 1
     }
-    // fixpoint is a star per component: (member → center). Centers appear
-    // only on the v side; label them with themselves.
-    val stars = e.select(col("u").as("id"), col("v").as("component"))
-      .union(e.select(col("v").as("id"), col("v").as("component")).distinct())
-      .distinct()
-    if (fitsDriver(sigE._1)) componentsOnDriver(e, stars.schema) else stars
+    if (sigE._1 > cap) stars(e)
+    else {
+      val rows = e.collect()
+      graft.SessionHygiene.freeCheckpoint(e)
+      componentsOnDriver(rows, schema, edges.sparkSession)
+    }
   }
 
-  /** The driver finish of [[connectedComponents]]: collects the oriented,
-    * checkpointed edges, frees their checkpoint, and returns each node's
-    * union-find root (the smallest id of its component) as a local
-    * relation of `schema`. */
-  private def componentsOnDriver(e: DataFrame, schema: StructType): DataFrame = {
-    val pairs = e.collect().map(r =>
+  /** The driver finish of [[connectedComponents]]: each node of the
+    * oriented `(u, v)` edge rows (duplicates allowed) with its union-find
+    * root (the smallest id of its component), as a local relation of
+    * `schema`. */
+  private def componentsOnDriver(edgeRows: Array[Row], schema: StructType,
+                                 spark: SparkSession): DataFrame = {
+    val pairs = edgeRows.map(r =>
       (r.get(0).asInstanceOf[Number].longValue, r.get(1).asInstanceOf[Number].longValue))
-    graft.SessionHygiene.freeCheckpoint(e)
     val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted
     def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
     // ids are sorted, so the smaller index is the smaller id
@@ -1618,7 +1645,7 @@ object Dedup {
     }
     val rows = java.util.Arrays.asList(ids.indices.map(i =>
       Row(box(ids(i)), box(ids(find(i))))): _*)
-    e.sparkSession.createDataFrame(rows, schema)
+    spark.createDataFrame(rows, schema)
   }
 
   /** Label every row of `df` with its near-dup component: edges are the

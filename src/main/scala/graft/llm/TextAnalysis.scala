@@ -229,12 +229,9 @@ object TextAnalysis {
   }
 
   /** Document fingerprint: md5 of whitespace-normalized lowercase text
-    * (exact-dup key), plus a 64-bit content hash for cheap joins. */
+    * (the exact-dup key). */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(text), """\s+""", " "))
-
-  def fingerprint64(text: Column): Column =
-    xxhash64(regexp_replace(lower(text), """\s+""", " "))
 
   /** Gopher-style repetition signals (Rae et al. 2021 §A1.1: docs whose
     * duplicate n-gram fraction is high are boilerplate/spam): fraction of

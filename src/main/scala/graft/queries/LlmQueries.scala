@@ -171,32 +171,20 @@ object LlmQueries {
       Multimodal.imageTable(t(s, d, "documents"), "doc_id")
     }
 
+  /** Sketch size of the two estimate-tier oracles. */
+  private val estNh = 32
+
   /** DuckDB replay of [[Dedup.containmentEstimatePairs]] (dd21): dd19's
     * word-gram definition hashed to the md5-28 base, the shared LCG
     * minhash family, r=1 banding with the hot-bucket cap, the
     * exact-size J* sketch filter, and the exact list_intersect verify —
     * every constant generated from the SAME portableCoef family the
     * Scala side uses, so the two sides cannot drift. */
-  /** The shared SQL generators for the two estimate-tier oracles: every
-    * constant derives from the same portableCoef family the Scala side
-    * uses. */
-  private val estNh = 32
-  private def estMinExprs: String = (0 until estNh).map { i =>
-    val (a, b) = Dedup.portableCoef(i)
-    s"min((h * $a + $b) % ${Dedup.portableP}) AS m$i"
-  }.mkString(",\n         ")
-  private def estBandRows(src: String): String = (0 until estNh)
-    .map(i => s"SELECT doc_id, $i AS band, m$i AS v FROM $src")
-    .mkString("\n  UNION ALL\n  ")
-  private def estAgreeSum: String = (0 until estNh)
-    .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
-    .mkString(" + ")
-
   private val containmentEstimateOracle: String = {
     val nh = estNh
-    val minExprs = estMinExprs
-    val bandRows = estBandRows("mins")
-    val agreeSum = estAgreeSum
+    val minExprs = Dedup.portableMinsSql(nh)
+    val bandRows = Dedup.portableBandRowsSql("mins", "doc_id", nh)
+    val agreeSum = Dedup.portableAgreeSql(nh)
     s"""WITH grams AS (
        |  ${Dedup.wordGramsOracleSql("documents", 3, "gs")}),
        |sh AS (
@@ -270,14 +258,14 @@ object LlmQueries {
        |gl AS (SELECT doc_id, is_new, list(h) AS g FROM sh GROUP BY doc_id, is_new),
        |mins AS (
        |  SELECT doc_id, is_new,
-       |         $estMinExprs
+       |         ${Dedup.portableMinsSql(nh)}
        |  FROM sh GROUP BY doc_id, is_new),
        |minsc AS (SELECT * FROM mins WHERE NOT is_new),
        |minsb AS (SELECT * FROM mins WHERE is_new),
        |bkc AS (
-       |  ${estBandRows("minsc")}),
+       |  ${Dedup.portableBandRowsSql("minsc", "doc_id", nh)}),
        |bkb AS (
-       |  ${estBandRows("minsb")}),
+       |  ${Dedup.portableBandRowsSql("minsb", "doc_id", nh)}),
        |keep AS (SELECT band, v FROM bkc GROUP BY band, v
        |         HAVING count(*) <= 100),
        |cands AS (
@@ -295,7 +283,7 @@ object LlmQueries {
        |        <= 8.0::DOUBLE),
        |agr AS (
        |  SELECT s.new_id, s.corpus_id, s.n1, s.n2,
-       |         ($estAgreeSum)::INT AS agree
+       |         (${Dedup.portableAgreeSql(nh)})::INT AS agree
        |  FROM sized s JOIN minsb sa ON sa.doc_id = s.new_id
        |               JOIN minsc sb ON sb.doc_id = s.corpus_id),
        |flt AS (
@@ -375,19 +363,14 @@ object LlmQueries {
        |    AND alpha_frac >= 0.8 AND stop_hits >= 2)""".stripMargin
 
   private def llmPipelineOracleSql: String = {
-    val minExprs = (0 until 32).map { i =>
-      val (a, b) = Dedup.portableCoef(i)
-      s"min((h * $a + $b) % ${Dedup.portableP}) AS m$i"
-    }.mkString(",\n         ")
+    val minExprs = Dedup.portableMinsSql(32)
     val bandJoins = (0 until 8).map { b =>
       val eqs = (0 until 4).map(r => s"a.m${b * 4 + r} = b.m${b * 4 + r}")
         .mkString(" AND ")
       s"""SELECT a.doc_id AS id1, b.doc_id AS id2 FROM smins a JOIN smins b
          |    ON $eqs AND a.doc_id < b.doc_id""".stripMargin
     }.mkString("\n  UNION\n  ")
-    val agreeSum = (0 until 32)
-      .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
-      .mkString(" + ")
+    val agreeSum = Dedup.portableAgreeSql(32)
     s"""WITH RECURSIVE
        |train AS (SELECT doc_id, source, text FROM documents WHERE doc_id % 17 <> 0),
        |benchd AS (SELECT text FROM documents WHERE doc_id % 17 = 0),

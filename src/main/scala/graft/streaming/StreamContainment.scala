@@ -242,16 +242,9 @@ object StreamContainment {
                             minContainment: Double = 0.5,
                             maxSizeRatio: Double = 8.0,
                             maxBucket: Int = 100): String = {
-    val minExprs = (0 until numHashes).map { i =>
-      val (a, b) = Dedup.portableCoef(i)
-      s"min((h * $a + $b) % ${Dedup.portableP}) AS m$i"
-    }.mkString(",\n         ")
-    val bandRows = (0 until numHashes)
-      .map(i => s"SELECT $id, $i AS band, m$i AS v FROM mins")
-      .mkString("\n  UNION ALL\n  ")
-    val agreeSum = (0 until numHashes)
-      .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
-      .mkString(" + ")
+    val minExprs = Dedup.portableMinsSql(numHashes)
+    val bandRows = Dedup.portableBandRowsSql("mins", id, numHashes)
+    val agreeSum = Dedup.portableAgreeSql(numHashes)
     s"""WITH grams AS (
        |  ${Dedup.wordGramsOracleSql(table, n, "gs", Seq(id), text)}),
        |sh AS (

@@ -1,6 +1,9 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan audit over the whole registry: executes each query at the given
   * scale factor (so AQE finalizes) and reports the shapes that decide
@@ -25,8 +28,13 @@ object PlanAudit {
   /** Executes the frame (finalizing AQE) and parses the final plan. */
   def shape(df: DataFrame): PlanShape = {
     df.collect() // finalize adaptive plan (dev/audit path, not the engine)
+    shapeOf(df.queryExecution.executedPlan)
+  }
+
+  /** Parses an executed physical plan. */
+  def shapeOf(executed: SparkPlan): PlanShape = {
     // AQE's toString prints Current + Initial plans; audit the final one
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val plan = executed.toString.split("== Initial Plan ==").head
     val lines = plan.linesIterator.toSeq
     def count(p: String) = lines.count(_.contains(p))
     PlanShape(
@@ -37,12 +45,32 @@ object PlanAudit {
       wscg = lines.count(_.matches(""".*\*\(\d+\).*""")),
       pushdown = lines.exists(l =>
         l.contains("PushedFilters: [") && !l.contains("PushedFilters: []")),
-      // eager localCheckpoints truncate lineage, so the audited plan is
-      // only the POST-checkpoint tail — report how many checkpoint scans
-      // feed it, so a row with ckpt > 0 reads as a partial audit (the
-      // truncated stages executed eagerly at build time, outside this
-      // plan; their shapes are documented at the operator)
+      // eager localCheckpoints truncate lineage, so this plan is only the
+      // POST-checkpoint tail: count the checkpoint scans that feed it
+      // (the stages behind them are what [[CheckpointStages]] records)
       ckptScans = count("Scan ExistingRDD"))
+  }
+
+  /** Records the executed plan of every `localCheckpoint` action run on
+    * `spark` while registered. An eager checkpoint runs its stages at
+    * build time, outside the plan of the query that reads it, so these
+    * are the only plans that show them as production runs them. */
+  final class CheckpointStages(spark: SparkSession) extends QueryExecutionListener {
+    private val shapes = new java.util.concurrent.ConcurrentLinkedQueue[PlanShape]()
+    spark.listenerManager.register(this)
+
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (funcName == "localCheckpoint") shapes.add(shapeOf(qe.executedPlan))
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    /** The stages recorded since the last call. Events reach listeners
+      * asynchronously, so the listener bus is drained first. */
+    def take(): Seq[PlanShape] = {
+      ListenerBridge.drain(spark.sparkContext)
+      Iterator.continually(shapes.poll()).takeWhile(_ != null).toSeq
+    }
+
+    def close(): Unit = spark.listenerManager.unregister(this)
   }
 
   def main(args: Array[String]): Unit = {
@@ -71,99 +99,52 @@ object PlanAudit {
       println()
       println("Exchanges = shuffles (broadcast exchanges excluded); BHJ/SMJ = join strategies;")
       println("WSCG = whole-stage-codegen spans; pushdown = parquet PushedFilters non-empty;")
-      println("ckpt = checkpoint scans feeding the plan (ckpt > 0: the audit covers only the")
-      println("post-checkpoint tail — the truncated stages ran eagerly at build time and their")
-      println("shapes are documented at the operator).")
+      println("ckpt = checkpoint scans feeding the plan (ckpt > 0: this row covers only the")
+      println("post-checkpoint tail; the truncated stages ran eagerly at build time, and their")
+      println("executed plans are reported under \"Checkpoint stages\" below).")
       println()
       println("| query | exchanges | BHJ | SMJ | BNLJ | WSCG | pushdown | ckpt |")
       println("|---|---|---|---|---|---|---|---|")
     }
-    val truncated = scala.collection.mutable.ArrayBuffer.empty[String]
+    val stages = new CheckpointStages(spark)
+    val staged = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[PlanShape])]
     for (q <- graft.SparkEntry.all if only.isEmpty || only.contains(q.name)) {
       try {
         val s = shape(q.fn(spark, sfDir))
-        if (s.ckptScans > 0) truncated += q.name
+        val ckpts = stages.take()
+        if (s.ckptScans > 0 || ckpts.nonEmpty) staged += q.name -> ckpts
         if (md)
           println(s"| ${q.name} | ${s.exchanges} | ${s.bhj} | ${s.smj} | ${s.bnlj} | " +
             s"${s.wscg} | ${if (s.pushdown) "yes" else "-"} | " +
             s"${if (s.ckptScans > 0) s.ckptScans.toString else "-"} |")
         else
           println(f"${q.name}%-28s shuffles=${s.exchanges} bhj=${s.bhj} " +
-            f"smj=${s.smj} wscg=${s.wscg} pushdown=${s.pushdown}")
+            f"smj=${s.smj} wscg=${s.wscg} pushdown=${s.pushdown} ckpt_stages=${ckpts.size}")
       } catch {
-        case e: Throwable => println(s"| ${q.name} | audit failed: ${e.getMessage.take(60)} |")
+        case e: Throwable =>
+          stages.take()
+          println(s"| ${q.name} | audit failed: ${e.getMessage.take(60)} |")
       }
     }
-    // Shadow pass (the r13 "ckpt > 0 rows are partial audits" gap): every
-    // query whose production plan is fed by checkpoint scans is rebuilt
-    // with Ckpt disabled, so the audited plan covers the FULL lineage the
-    // eager checkpoints otherwise run outside it. Shapes differ from the
-    // production rows BY DESIGN: un-truncated lineage means shared stages
-    // re-plan per consumer (more exchanges/WSCG, and scans become real
-    // parquet scans with pushdown) — the row answers "is there an SMJ or
-    // unhinted BNLJ hiding in a truncated stage", not "what does
-    // production execute". Skip with --noshadow (plain timing runs).
-    if (md && truncated.nonEmpty && !args.contains("--noshadow")) {
+    stages.close()
+    if (md && staged.nonEmpty) {
       println()
-      println("## Shadow audit: full lineage, checkpoints disabled")
+      println("## Checkpoint stages: the executed plans of the eager checkpoints")
       println()
-      println("Same queries as the ckpt > 0 rows above, rebuilt with -Dgraft.ckpt.disable=true")
-      println("(Ckpt.ckpt() = identity). These rows audit the stages the production plan")
-      println("truncates; exchange/WSCG counts are higher than production by design (shared")
-      println("stages re-plan per consumer without materialization).")
+      println("Every query above that runs a localCheckpoint or reads a checkpoint scan.")
+      println("stages = localCheckpoint actions the query ran while it was built; the shape")
+      println("columns sum their executed (AQE-final) plans; per stage lists each distinct")
+      println("stage shape (exchanges/BHJ/SMJ/BNLJ/pushdown) with its count.")
       println()
-      println("| query | exchanges | BHJ | SMJ | BNLJ | WSCG | pushdown | ckpt |")
-      println("|---|---|---|---|---|---|---|---|")
-      sys.props("graft.ckpt.disable") = "true"
-      // A timed-out worker must not keep running against the shared
-      // session: its jobs would race later shadow rows and spark.stop(),
-      // and its remaining ckpt() calls would flip back to real
-      // checkpoints the instant the property is cleared. On timeout,
-      // cancel the worker's job group (interruptOnCancel kills the task
-      // threads), interrupt the worker, and confirm it exited before the
-      // next row; if it stays wedged, abandon the REST of the shadow
-      // pass with the property still set rather than clear it under a
-      // live worker.
-      var wedged = false
-      try {
-        for (name <- truncated; q <- graft.SparkEntry.all.find(_.name == name) if !wedged) {
-          // per-query watchdog: a query whose un-truncated lineage is
-          // still loop-shaped (a loopCkpt we missed) would hang Catalyst
-          // analysis forever — bound it and say so rather than wedge the
-          // whole audit (the r14 first-run lesson)
-          val group = s"shadow-audit-${q.name}"
-          val result = new java.util.concurrent.atomic.AtomicReference[String](null)
-          val worker = new Thread(() => {
-            spark.sparkContext.setJobGroup(group,
-              s"shadow plan audit: ${q.name}", interruptOnCancel = true)
-            try {
-              val s = shape(q.fn(spark, sfDir))
-              result.set(s"| ${q.name} | ${s.exchanges} | ${s.bhj} | ${s.smj} | ${s.bnlj} | " +
-                s"${s.wscg} | ${if (s.pushdown) "yes" else "-"} | " +
-                s"${if (s.ckptScans > 0) s.ckptScans.toString else "-"} |")
-            } catch {
-              case e: Throwable =>
-                result.set(s"| ${q.name} | shadow audit failed: ${e.getMessage.take(60)} |")
-            } finally spark.sparkContext.clearJobGroup()
-          })
-          worker.setDaemon(true)
-          worker.start()
-          worker.join(300000L)
-          if (worker.isAlive) {
-            spark.sparkContext.cancelJobGroup(group)
-            worker.interrupt()
-            worker.join(30000L) // grace: cancelled tasks unwind
-            wedged = worker.isAlive
-          }
-          println(Option(result.get).getOrElse(
-            s"| ${q.name} | shadow audit timed out (300s) — jobs cancelled" +
-              (if (wedged) "; worker wedged, abandoning shadow pass" else "") +
-              "; un-truncated lineage is loop-shaped; per-round shapes " +
-              "audited at the operator |"))
-        }
-      } finally if (!wedged) sys.props.remove("graft.ckpt.disable")
-      // wedged: leave the property set — the stuck worker still reads it
-      // per ckpt() call; spark.stop() below tears the session down.
+      println("| query | stages | exchanges | BHJ | SMJ | BNLJ | WSCG | pushdown | per stage |")
+      println("|---|---|---|---|---|---|---|---|---|")
+      for ((name, ss) <- staged) {
+        val perStage = ss.groupBy(_.snapshot).toSeq.sortBy(-_._2.size)
+          .map { case (snap, g) => s"${g.size}x $snap" }.mkString(", ")
+        println(s"| $name | ${ss.size} | ${ss.map(_.exchanges).sum} | ${ss.map(_.bhj).sum} | " +
+          s"${ss.map(_.smj).sum} | ${ss.map(_.bnlj).sum} | ${ss.map(_.wscg).sum} | " +
+          s"${if (ss.exists(_.pushdown)) "yes" else "-"} | ${if (perStage.isEmpty) "-" else perStage} |")
+      }
     }
     spark.stop()
   }

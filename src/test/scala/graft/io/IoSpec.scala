@@ -160,6 +160,16 @@ class IoSpec extends SparkSpecBase {
     val krow = keyed.head
     assert(krow.getString(0) === "in")
     assert(krow.getAs[Map[String, _]]("jumps").keySet === Set("Weta Digital", "Framestore"))
+
+    // flat directional envelope, grouping=none (dwwApi.js:157-175): one
+    // sorted jump list under the direction
+    val jumps = Seq(("Bob", "comp", "2019", "Framestore", "london", "europe"),
+      ("Alice", "anim", "2018", "Weta Digital", "wellington", "oceania"))
+      .toDF("person", "role", "date", "company", "location", "region")
+    val frow = Envelope.directionalFlat(jumps, "out").head
+    assert(frow.getString(0) === "out")
+    assert(frow.getAs[Seq[org.apache.spark.sql.Row]]("jumps").map(_.getString(0)) ===
+      Seq("Alice", "Bob"))
   }
 
   test("compact repacks fragments toward the target size, zero shuffle, data intact") {

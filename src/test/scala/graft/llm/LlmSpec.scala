@@ -1338,6 +1338,9 @@ class LlmSpec extends SparkSpecBase {
     // the rounds would need more of themselves for the longer chain
     val Seq(j8, j64) = Seq(8L, 64L).map(n => jobsOf(Dedup.connectedComponents(chain(n)).collect()))
     assert(j8 === j64, s"$j8 jobs on the 8-node chain, $j64 on the 64-node chain")
+    // the driver finish pays no rounds set-up: the distinct, its checkpoint
+    // and the signature aggregate once took 5 jobs here before the collect
+    assert(j8 < 5, s"$j8 jobs on the 8-node chain")
     assert(sc.getPersistentRDDs.keySet === persisted)
     // K6: 15 edges become a 5-edge star in one round, so a 14-edge budget
     // runs exactly one round before the driver finish, and -1 runs two

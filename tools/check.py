@@ -67,6 +67,14 @@ def canon(rows):
         return (nonf, coarse, fine)
     return sorted(out, key=key)
 
+def same(u, v):
+    """Exact cell equality as tuple comparison does it (identity first, so
+    the NaT singleton matches itself), plus NaN == NaN: a NULL double reads
+    as a fresh NaN float on each side, and NaN != NaN would count agreeing
+    rows as mismatched."""
+    return u is v or u == v or (isinstance(u, float) and isinstance(v, float)
+                                and math.isnan(u) and math.isnan(v))
+
 ok = fail = 0
 for name in sorted(oracle) if not ONLY else ONLY:
     sql = oracle.get(name)
@@ -87,7 +95,7 @@ for name in sorted(oracle) if not ONLY else ONLY:
     a, b = canon(mine[mc].itertuples(index=False)), canon(theirs[tc].itertuples(index=False))
     if len(a) != len(b):
         print(f"FAIL {name}: rows {len(a)} vs {len(b)}"); fail += 1; continue
-    bad = [(x, y) for x, y in zip(a, b) if x != y]
+    bad = [(x, y) for x, y in zip(a, b) if not all(map(same, x, y))]
     # allow tiny float wiggle before declaring failure
     really_bad = []
     for x, y in bad:
