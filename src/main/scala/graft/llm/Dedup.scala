@@ -113,6 +113,40 @@ object Dedup {
     df.join(keep, Seq(id), "left_semi")
   }
 
+  /** Rows of `df` that survive exact dedup and then pass the Gopher
+    * quality gate ([[TextAnalysis.gopherRules]]), with `df`'s columns,
+    * hash-partitioned on `id` over the shuffle partitions. The rows are
+    * those of exact dedup after the gate: the members of an md5 group
+    * share their text, so the gate passes all of them or none, and the
+    * group's minimum id survives either way (up to an md5 collision,
+    * which exact dedup already treats as equal text). Dedup first lets
+    * the gate run once: [[exactSurvivors]] reads its input twice (the md5
+    * aggregate and the semi-join's left side), so only the scan repeats.
+    *
+    * Two eager checkpoints. The survivors are [[spread]] because a
+    * broadcast semi-join keeps its input's partitioning, which for a
+    * single-row-group parquet file is one task; their checkpoint is the
+    * barrier that keeps the gate on those partitions (the optimizer
+    * pushes a filter below a repartition, back into the scan's task).
+    * The gated rows are checkpointed for the several stages that read
+    * them. */
+  def gatedSurvivors(df: DataFrame, id: String, text: String): DataFrame = {
+    val survivors = spread(exactSurvivors(df, id, text), col(id)).ckpt()
+    TextAnalysis.gopherRules(survivors, text)
+      .filter(col("gopher_pass")).select(df.columns.head, df.columns.tail: _*)
+      .ckpt()
+  }
+
+  /** `df` hash-partitioned on `key` into the session's shuffle partition
+    * count, for a CPU-bound per-row stage that follows. Unlike
+    * `repartition(key)`, a fixed count is never coalesced by AQE: a small
+    * input (a single-row-group scan, a candidate-sized semi-join) would
+    * otherwise merge into one task and run the stage on one core. Above a
+    * sort-merge join on the same key the exchange is already satisfied and
+    * EnsureRequirements removes it, so large inputs pay nothing. */
+  private[graft] def spread(df: DataFrame, key: Column): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, key)
+
   /** Banded-LSH candidate pairs: signature split into `bands` bands of
     * `rows` hashes; docs sharing any (band, band-hash) bucket become a
     * candidate pair (id1 < id2, distinct). Only (bucket, id) tuples are
@@ -863,10 +897,11 @@ object Dedup {
     // The token array is materialized through an exchange BEFORE the gram
     // transform: a projection-collapsed plan would inline the regex split
     // into every lambda reference, re-tokenizing the document once PER
-    // GRAM (O(tokens²) regex work), and the candidate semi-join output is
-    // small enough that AQE coalesces it to a single task. The repartition
-    // breaks both: split runs once per doc, gram building fans across the
-    // cluster.
+    // GRAM (O(tokens²) regex work). The exchange has a fixed partition
+    // count ([[spread]]): the candidate semi-join output is far below
+    // AQE's minimum partition size, and a `repartition(col)` there was
+    // coalesced into a single task. So the split runs once per doc, and
+    // gram building runs in one task per shuffle partition.
     // Verify cost must scale with the CANDIDATE volume, not the corpus:
     // gram arrays are built only for docs that appear in a pair (semi-join
     // on the distinct candidate ids), then checkpointed ONCE so both join
@@ -879,9 +914,8 @@ object Dedup {
     val p = pairs.ckpt()
     val candIds = p.select(col("id1").as(id))
       .union(p.select(col("id2").as(id))).distinct()
-    val gCp = df.join(candIds, id)
-      .select(col(id), wordTokens(col(text)).as("tk"))
-      .repartition(col(id))
+    val gCp = spread(df.join(candIds, id)
+      .select(col(id), wordTokens(col(text)).as("tk")), col(id))
       .select(col(id), wordGramsOfTk(col("tk"), n, hashGrams).as("g"))
       .ckpt()
     val small = gCp.count() <= 20000
@@ -1356,21 +1390,24 @@ object Dedup {
     val gramHash = (g: Column) => graft.functions.Md5Prefix(g, 7)
     val preCols = pre.map { case (nm, c) => c.as(nm) }
     val preRefs = pre.map { case (nm, _) => col(nm) }
-    // ONE checkpoint (r16; was two): with the sig computed by the
-    // one-pass native LCG fold (functions/MinHashExpr.scala) the gram
-    // column `h` is referenced three times in the outer projection
-    // (h, size(h), the kernel) — a non-cheap multi-referenced producer
-    // CollapseProject never inlines (SPARK-36718, the gopherRules
-    // barrier), so the md5 gram chain still runs once per row WITHOUT
-    // materializing an intermediate h table first. The pre-r16 hCp
-    // checkpoint existed because the OLD sig algebra was numHashes
-    // interpreted transform() lambdas, each of which projection collapse
-    // would have fed its own copy of the hex/conv chain (measured 5× the
-    // stage). Bit identity of the fold vs that algebra is pinned in
+    // The token array goes through an exchange before the gram chain, so
+    // the regex split runs once per doc rather than once per lambda
+    // reference (the ngramJaccard lesson). Its partition count is fixed
+    // ([[spread]]): AQE coalesced a `repartition(col)` into one task
+    // whenever the input fell under its 1 MB minimum partition size (a
+    // 3,000-document corpus does), and the gram and signature build, the
+    // stage's whole cost, then ran on one core.
+    // ONE checkpoint: the gram column `h` is referenced
+    // three times in the outer projection (h, size(h), the native LCG
+    // fold of functions/MinHashExpr.scala) — a non-cheap multi-referenced
+    // producer CollapseProject never inlines (SPARK-36718, the gopherRules
+    // barrier), so the md5 gram chain runs once per row without an
+    // intermediate h table. Bit identity of the fold vs the
+    // transform()-lambda algebra it replaced is pinned in
     // MinHashExprSpec; the DuckDB oracle replays the same (a_i, b_i)/P
     // family unchanged.
-    df.select(col(id).cast("long").as("doc") +: preCols :+ wordTokens(col(text)).as("tk"): _*)
-      .repartition(col("doc"))
+    spread(df.select(col(id).cast("long").as("doc") +: preCols :+
+        wordTokens(col(text)).as("tk"): _*), col("doc"))
       .select(col("doc") +: preRefs :+ transform(grams, gramHash).as("h"): _*)
       .select(col("doc") +: preRefs :+ col("h") :+ size(col("h")).as("n") :+
         graft.functions.PortableMinHashFromHashes(col("h"), numHashes).as("sig"): _*)

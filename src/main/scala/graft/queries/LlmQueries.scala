@@ -2283,8 +2283,8 @@ object LlmQueries {
              |ORDER BY doc_id""".stripMargin)),
 
     // ---- the composed LLM curation pipeline end-to-end, the production
-    // shape every stage above exists FOR: Gopher quality gate (ts16) →
-    // exact dedup survivors (dd2) → MinHash-LSH near-dup components, one
+    // shape every stage above exists FOR: exact dedup survivors (dd2) →
+    // Gopher quality gate (ts16) → MinHash-LSH near-dup components, one
     // survivor per cluster (dd3c/dd6b) → benchmark decontamination
     // (dd7, word 8-grams) → token counting (ts3) → token-budget packing
     // (cur3) → deterministic stratified split (cur7). One hash-green
@@ -2292,24 +2292,23 @@ object LlmQueries {
     // md5 groups, portable signatures + banding, recursive components,
     // gram overlap, running-sum pack, md5-fraction split), so stage
     // composition itself — lineage, checkpoints, column plumbing — is
-    // what the hash checks. Survivor frames are localCheckpoint'ed at
-    // the two points consumed by more than one downstream stage (the
-    // staged-table pattern a production pipeline would persist anyway),
-    // so no shared stage re-computes. ----
+    // what the hash checks (the oracle gates first, which gives the same
+    // rows). Survivor frames are localCheckpoint'ed at the points
+    // consumed by more than one downstream stage (the staged-table
+    // pattern a production pipeline would persist anyway), so no shared
+    // stage re-computes. ----
     QueryDef("e2e_llm_pipeline",
       (s, d) => {
         val docs = t(s, d, "documents")
         val train = docs.filter(col("doc_id") % 17 =!= 0)
           .select("doc_id", "source", "text")
         val bench = docs.filter(col("doc_id") % 17 === 0)
-        // 1. quality gate
-        val quality = TextAnalysis.gopherRules(train, "text")
-          .filter(col("gopher_pass")).select("doc_id", "source", "text")
-        // 2. exact dedup survivors — checkpointed: feeds the near-dup
+        // 1+2. exact dedup survivors, then the quality gate on them (the
+        // same rows as the gate then dedup; see gatedSurvivors), spread
+        // over the shuffle partitions and checkpointed: feeds the near-dup
         // candidate build, the component node list, and the survivor
-        // semi-join (three consumers; the gopher scan must run once)
-        val exact = Dedup.exactSurvivors(quality, "doc_id", "text")
-          .ckpt()
+        // join, and every later per-document stage runs on its partitions
+        val exact = Dedup.gatedSurvivors(train, "doc_id", "text")
         // 3. near-dup clusters over the exact survivors — MinHash-LSH
         // with a TWO-STAGE verify, all three stages reading ONE portable
         // 32-hash word-3-gram sketch (the dd21 md5-28/LCG family, so

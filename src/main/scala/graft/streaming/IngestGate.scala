@@ -80,13 +80,15 @@ object IngestGate {
   /** Batch twin: admitted documents (id, n_tokens) after all three
     * gates. Stream ≡ batch across id-ordered micro-batches is pinned in
     * IngestGateSpec; the registry entry (st12) runs this form and the
-    * DuckDB oracle replays the whole chain. */
+    * DuckDB oracle replays the whole chain.
+    *
+    * The batch form runs exact dedup before the quality gate
+    * ([[Dedup.gatedSurvivors]], the same rows; the stream gates first), so
+    * the gate runs once instead of under both reads of exactSurvivors and
+    * both reads of its result. */
   def admittedBatch(docs: DataFrame, id: String = "doc_id", text: String = "text",
                     k: Int = 5, threshold: Double = 0.5): DataFrame = {
-    val quality = TextAnalysis.gopherRules(docs, text)
-      .filter(col("gopher_pass"))
-      .select(col(id), col(text))
-    val exact = Dedup.exactSurvivors(quality, id, text)
+    val exact = Dedup.gatedSurvivors(docs.select(col(id), col(text)), id, text)
     val flags = StreamDedup.flaggedBatch(exact, id, text, k, threshold)
     exact.join(flags.select(col("doc").as(id)), Seq(id), "left_anti")
       .select(col(id), TextAnalysis.tokenEstimate(col(text)).as("n_tokens"))

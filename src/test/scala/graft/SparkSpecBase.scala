@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,22 +22,47 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  /** Spark jobs started by `body` on this thread, counted by a listener:
-    * a marker job in its own group runs after `body`, and since the
-    * listener bus delivers events in order, seeing the marker means every
-    * earlier job start has been counted. */
+  /** Spark jobs started by `body` on this thread, counted by a listener. */
   def jobsOf(body: => Unit): Int = {
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    observe(_ => counted.incrementAndGet(), _ => ())(body)
+    counted.get
+  }
+
+  /** The Spark jobs started by `body` on this thread, in start order, as
+    * (name of the job's result stage, i.e. its call site such as
+    * "localCheckpoint at Ckpt.scala:15"; tasks the job ran). A stage that
+    * several jobs list (an AQE query stage its parent job skips) counts
+    * for the first of them. */
+  def tasksOf(body: => Unit): Seq[(String, Int)] = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+    observe(jobs.add(_), t => tasks.merge(t.stageId, 1, _ + _))(body)
+    val seen = scala.collection.mutable.Set.empty[Int]
+    jobs.toArray(Array.empty[SparkListenerJobStart]).toSeq.map { j =>
+      val own = j.stageIds.filter(seen.add)
+      (j.stageInfos.maxBy(_.stageId).name, own.map(tasks.getOrDefault(_, 0)).sum)
+    }
+  }
+
+  /** Runs `body` in a job group with a listener that passes the group's
+    * job starts to `onJob` and every task end to `onTask`. A marker job in
+    * its own group runs after `body`, and since the listener bus delivers
+    * events in order, seeing the marker means every event of `body`'s jobs
+    * has been delivered. */
+  private def observe(onJob: SparkListenerJobStart => Unit,
+                      onTask: SparkListenerTaskEnd => Unit)(body: => Unit): Unit = {
     val sc = spark.sparkContext
     val (group, marker) = ("spec-jobs", "spec-marker")
-    val counted = new java.util.concurrent.atomic.AtomicInteger
     val done = new java.util.concurrent.CountDownLatch(1)
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => counted.incrementAndGet()
+          case Some(`group`) => onJob(e)
           case Some(`marker`) => done.countDown()
           case _ =>
         }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = onTask(e)
     }
     sc.addSparkListener(l)
     try {
@@ -46,7 +71,6 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
       sc.setJobGroup(marker, marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
-      counted.get
     } finally sc.removeSparkListener(l)
   }
 }

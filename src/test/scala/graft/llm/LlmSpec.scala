@@ -28,6 +28,30 @@ class LlmSpec extends SparkSpecBase {
     assert(survivors === Array(0L, 2L, 3L, 4L))
   }
 
+  test("gatedSurvivors: the quality gate after exact dedup keeps the rows of exact dedup after the gate") {
+    val s = spark; import s.implicits._
+    // 72 words that pass every gopher rule; `w` makes the texts distinct
+    def clean(w: String) = Array.fill(4)(
+      s"the quick brown $w jumps over a lazy dog and then sleeps in the warm sun of june"
+    ).mkString(" ")
+    val input = Seq(
+      (7L, clean("fox")), (3L, clean("fox")), (9L, clean("fox")), // passes; min id 3 not first
+      (5L, "### short junk"), (2L, "### short junk"),             // a duplicate group the gate drops
+      (4L, clean("cat")), (8L, "### other junk"), (1L, clean("owl")))
+      .toDF("doc_id", "text")
+    def gate(df: org.apache.spark.sql.DataFrame) = TextAnalysis.gopherRules(df, "text")
+      .filter(col("gopher_pass")).select("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val gateFirst = rows(Dedup.exactSurvivors(gate(input), "doc_id", "text"))
+    assert(gateFirst.map(_._1) === Seq(1L, 3L, 4L))
+    assert(rows(Dedup.exactSurvivors(input, "doc_id", "text")).map(_._1) === Seq(1L, 2L, 3L, 4L, 8L))
+    assert(rows(gate(Dedup.exactSurvivors(input, "doc_id", "text"))) === gateFirst)
+    val gated = Dedup.gatedSurvivors(input, "doc_id", "text")
+    assert(rows(gated) === gateFirst)
+    assert(gated.rdd.getNumPartitions === spark.sessionState.conf.numShufflePartitions)
+  }
+
   test("minhash LSH finds the planted near-dup pair without an all-pairs join") {
     val pairs = Dedup.minhashDedup(docs, "doc_id", "text", threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -60,6 +84,20 @@ class LlmSpec extends SparkSpecBase {
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(j((0L, 1L)) === 1.0)
     j.get((0L, 2L)).foreach(v => assert(v > 0.5 && v < 1.0))
+  }
+
+  test("gram checkpoints run one task per shuffle partition on a one-partition input") {
+    val s = spark; import s.implicits._
+    val n = spark.sessionState.conf.numShufflePartitions
+    assert(n > 1)
+    val one = docs.coalesce(1)
+    def ckptTasks(body: => Unit) =
+      tasksOf(body).collect { case (name, t) if name.startsWith("localCheckpoint") => t }
+    assert(ckptTasks(Dedup.estimateSigTable(one, "doc_id", "text")) === Seq(n))
+    val pairs = Seq((0L, 2L), (3L, 4L)).toDF("id1", "id2").coalesce(1)
+    // the candidate-pair checkpoint, then the gram table's
+    assert(ckptTasks(Dedup.ngramJaccard(one, "doc_id", "text", 3, pairs, hashGrams = false))
+      === Seq(1, n))
   }
 
   test("brute-force topK: self is rank 1 with sim 1; ranks are dense per query") {
