@@ -40,10 +40,11 @@ object SessionHygiene {
   /** Frees the block-manager storage behind a localCheckpoint-backed
     * frame NOW. `Dataset.unpersist` only unregisters CacheManager
     * entries — a no-op for checkpoint RDDs, which persist directly with
-    * the block manager — so iterative loops (pagerank, HITS, label
-    * propagation) call this on each retired per-round frame to keep
-    * intra-query storage O(1) in the round count instead of waiting for
-    * GC-driven ContextCleaner collection. Only call on frames whose
+    * the block manager — so `Dedup.connectedComponents` calls this on
+    * each retired per-round edge frame (keeping intra-query storage O(1)
+    * in the round count instead of waiting for GC-driven ContextCleaner
+    * collection), and `QueryMemo.clear` on every memoized frame it
+    * drops. Only call on frames whose
     * checkpoint is truly dead: the lineage is truncated, so freed blocks
     * cannot be recomputed.
     *

@@ -46,7 +46,10 @@ object Md5Kernel {
     * intrinsic (a hand-rolled RFC 1321 block transform measured 1.4×
     * SLOWER than the intrinsified MessageDigest — see OPTIMIZATION_r15),
     * with a thread-local digest and output buffer so the only per-call
-    * allocation anywhere in the fold is none. */
+    * allocation anywhere in the fold is none. THE portable base-hash fold:
+    * every md5 kernel (MinHash, shingle set, SimHash, CDC) shifts this
+    * value right to its prefix width, so they cannot drift from each other
+    * or from the DuckDB side's ('0x' || substr(md5(x), 1, n))::BIGINT. */
   def first8(bytes: Array[Byte], off: Int, len: Int): Long = {
     val sc = tl.get()
     val d = sc.md

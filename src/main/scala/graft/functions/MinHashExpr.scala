@@ -120,33 +120,6 @@ object MinHashKernel {
   def portableCoef(i: Int): (Long, Long) =
     ((2L * i + 3) * 12582917L % PORTABLE_P, (i + 1) * 15485863L % PORTABLE_P)
 
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** Thread-local MD5 instance shared by every portable kernel (CDC
-    * included) — one digest object per thread, zero per-row allocation. */
-  private[functions] def digest(): java.security.MessageDigest = md.get()
-
-  /** Top 28 bits of an MD5 digest = first 7 hex digits — THE portable
-    * base-hash fold, read off the digest bytes without a hex string.
-    * Canonical here so the MinHash, shingle-set, and CDC kernels cannot
-    * drift from each other or from the DuckDB side's
-    * ('0x' || substr(md5(x), 1, 7))::BIGINT. */
-  private[functions] def md5Top28(d: Array[Byte]): Long =
-    ((d(0) & 0xffL) << 20) | ((d(1) & 0xffL) << 12) |
-      ((d(2) & 0xffL) << 4) | ((d(3) & 0xffL) >>> 4)
-
-  /** Top 60 bits = first 15 hex digits — the portable wide-id fold
-    * (SimHash token hashes, CDC chunk ids); DuckDB twin:
-    * ('0x' || substr(md5(x), 1, 15))::BIGINT. */
-  private[functions] def md5Top60(d: Array[Byte]): Long =
-    ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) |
-      ((d(2) & 0xffL) << 36) | ((d(3) & 0xffL) << 28) |
-      ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
-      ((d(6) & 0xffL) << 4) | ((d(7) & 0xffL) >>> 4)
-
   def portableSignature(text: UTF8String, k: Int, numHashes: Int): ArrayData = {
     val t = text.toLowerCase
     val nChars = t.numChars()

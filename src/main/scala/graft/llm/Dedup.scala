@@ -1835,15 +1835,9 @@ object Dedup {
                                      threshold: Double, nCells: Int,
                                      rounds: Int, dim: Int): String = {
     val dot = Ivf.dotSql(dim) _
-    val d2 = Ivf.d2Sql(dim) _
     s"""WITH base AS MATERIALIZED ($fromSql),
        |${Ivf.lloydCtesSql("base", "", nCells, rounds, dim)},
-       |fin AS MATERIALIZED (
-       |  SELECT pid, pv, cell FROM (
-       |    SELECT b.pid, b.pv, c.cell,
-       |           row_number() OVER (PARTITION BY b.pid
-       |             ORDER BY ${d2("b.pv", "c.cv")}, c.cell) AS rn
-       |    FROM base b CROSS JOIN c$rounds c) WHERE rn = 1),
+       |fin AS MATERIALIZED (${Ivf.nearestCellSql("base", s"c$rounds", dim)}),
        |nrm AS MATERIALIZED (
        |  SELECT pid, pv, cell, sqrt(${dot("pv", "pv")}) AS n FROM fin),
        |dropped AS (

@@ -4,8 +4,7 @@ import graft.Ckpt._
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.linalg.{Vector => MlVector}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -60,54 +59,53 @@ object Ivf {
     * ([[portableOracleSql]]). An empty cell keeps its previous centroid.
     *
     * Scale shape: per round one literal-centroid argmin projection over
-    * the corpus scan (n×k SqDist evaluations inside one expression — no
-    * crossJoin rows, no per-id shuffle) + one (cell, dim)-sized mean
-    * aggregate — linear in the corpus, the same cost class as MLlib's
-    * own Lloyd's pass; lineage truncated per round. MLlib [[build]] stays the production path (sampling init,
-    * early convergence); this twin exists so the quantizer itself is
-    * oracle-checkable end-to-end.
+    * the checkpointed corpus scan (n×k SqDist evaluations inside one
+    * expression — no crossJoin rows, no per-id shuffle) + one
+    * (cell, dim)-sized mean aggregate — linear in the corpus, the same
+    * cost class as MLlib's own Lloyd's pass. Each round collects its
+    * k×dim means to the driver and re-injects them as literals, so no
+    * round carries lineage from the last. MLlib [[build]] stays the
+    * production path (sampling init, early convergence); this twin exists
+    * so the quantizer itself is oracle-checkable end-to-end.
     *
-    * Returns (centroids (cell, cv), assignments (pid, pv, cell)). */
+    * Returns (driver-held centroids (cell, cv) in cell order, checkpointed
+    * assignments (pid, pv, cell)). */
   def portableQuantizer(corpus: DataFrame, id: String, vec: String,
-                        k: Int, rounds: Int): (DataFrame, DataFrame) = {
-    val (cdf, assignF) = quantizerCore(corpus, id, vec, k, rounds)
+                        k: Int, rounds: Int): (IndexedSeq[(Int, Seq[Double])], DataFrame) = {
+    val base = portableRows(corpus, id, vec).ckpt()
+    val cents = lloyd(base, k, rounds)
     // checkpointed: callers reference the assignment table at least twice
     // (query slice + candidate cells)
-    (cdf, assignF().ckpt())
+    (cents, base.withColumn("cell", pqCodeFrozen(col("pv"), cents)).ckpt())
   }
 
-  private def quantizerCore(corpus: DataFrame, id: String, vec: String,
-                            k: Int, rounds: Int)
-      : (DataFrame, () => DataFrame) = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val base = corpus.select(col(id).cast("long").as("pid"),
-        transform(col(vec), _.cast("double")).as("pv"))
-      .ckpt()
-    // Centroids are MODEL state (k×dim doubles — the Bpe-merge pattern):
-    // collected per round and re-injected as a broadcast literal frame.
-    // Each Lloyd round is then ONE distributed job (assign + per-dim
-    // sorted-fold means) with no inter-round lineage — the previous
-    // DataFrame-resident loop needed a localCheckpoint per round because
-    // each round references its centroids twice (assign + empty-cell
-    // carry), which would otherwise re-evaluate exponentially.
+  /** [[portableQuantizer]]'s centroids WITHOUT the final assignment
+    * job — for callers that assign rows themselves via [[pqCodeFrozen]]
+    * (the PQ subspace fits, IVFADC's frozen coarse tier). Same training
+    * rounds, same centroids, bit for bit. */
+  def portableCentroids(corpus: DataFrame, id: String, vec: String,
+                        k: Int, rounds: Int): IndexedSeq[(Int, Seq[Double])] =
+    lloyd(portableRows(corpus, id, vec).ckpt(), k, rounds)
+
+  /** The row shape every portable stage reads: (pid long, pv
+    * array<double>), plus any `extra` columns (evaluated against the
+    * caller's columns). */
+  private[llm] def portableRows(corpus: DataFrame, id: String, vec: String,
+                               extra: Column*): DataFrame =
+    corpus.select(Seq(col(id).cast("long").as("pid"),
+      transform(col(vec), _.cast("double")).as("pv")) ++ extra: _*)
+
+  /** The md5 seeding and fixed Lloyd's rounds over checkpointed (pid, pv)
+    * rows. Centroids are MODEL state (k×dim doubles — the Bpe-merge
+    * pattern), so each round's assignment is a literal-centroid argmin
+    * PROJECTION ([[pqCodeFrozen]]: zero joins, zero shuffles) and one
+    * distributed job computes the per-dim means. */
+  private def lloyd(base: DataFrame, k: Int, rounds: Int): IndexedSeq[(Int, Seq[Double])] = {
     var cent: IndexedSeq[(Int, Seq[Double])] = base
       .withColumn("h", md5(col("pid").cast("string")))
       .orderBy("h", "pid").limit(k)
       .select("pv").collect()
       .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](0)) }.toIndexedSeq
-    def centDf(c: IndexedSeq[(Int, Seq[Double])]): DataFrame = c.toDF("cell", "cv")
-    // Assignment is a literal-centroid argmin PROJECTION over one scan
-    // (r16): the centroids are driver-resident model state every round,
-    // so [[pqCodeFrozen]] — already pinned bit-identical to the
-    // crossJoin + min(struct(d2, cell)) form it replaced in the PQ code
-    // path (same SqDist on the same doubles, same smaller-cell
-    // tie-break) — assigns cells with ZERO joins and ZERO shuffles,
-    // where the old crossJoin(broadcast) + groupBy(pid) materialized
-    // n×k rows and re-shuffled the corpus every round AND once more for
-    // the final index build.
-    def assign(c: IndexedSeq[(Int, Seq[Double])]): DataFrame =
-      base.select(col("pid"), col("pv"), pqCodeFrozen(col("pv"), c).as("cell"))
     // order-canonical mean: fold the cell's values SORTED, so the double
     // sum is bit-identical across partitionings AND engines (DuckDB twin:
     // list_sum(list_sort(list(x))), the same L2R fold) — without this the
@@ -115,7 +113,7 @@ object Ivf {
     // boundary under a different partition order
     val sortedSum = graft.functions.FoldSum(array_sort(collect_list(col("x"))))
     for (_ <- 1 to rounds) {
-      val means = assign(cent)
+      val means = base.withColumn("cell", pqCodeFrozen(col("pv"), cent))
         .select(col("cell"), posexplode(col("pv")).as(Seq("i", "x")))
         .groupBy("cell", "i")
         .agg((floor(sortedSum / count(lit(1)) * 1000000 + 0.5) / 1000000.0).as("mean"))
@@ -126,38 +124,16 @@ object Ivf {
         means.get(cell).fold((cell, cv))(ms => (cell, ms.sortBy(_._2).map(_._3).toSeq))
       }
     }
-    val cdf = centDf(cent)
-    val frozen = cent
-    (cdf, () => assign(frozen))
+    cent
   }
 
-  /** [[portableQuantizer]]'s centroids WITHOUT the eager final
-    * assignment job — for callers (the PQ subspace fits) that encode
-    * rows themselves via [[pqCodeFrozen]] and would otherwise pay one
-    * corpus-sized assignment materialization per subspace only to
-    * discard it. Same training rounds, same centroids, bit for bit. */
-  def portableCentroids(corpus: DataFrame, id: String, vec: String,
-                        k: Int, rounds: Int): DataFrame =
-    quantizerCore(corpus, id, vec, k, rounds)._1
-
-  /** A centroid table collected to the driver — MODEL state (k x subDim
-    * doubles, the Bpe-merge pattern), reinjectable as literals. */
-  def collectCentroids(cdf: DataFrame): IndexedSeq[(Int, Seq[Double])] =
-    cdf.select(col("cell").cast("int"), col("cv"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toIndexedSeq
-      .sortBy(_._1)
-
-  /** Frozen-codebook code assignment as ONE Column: argmin cell of the
-    * row's vector slice against the (model-sized, driver-resident)
-    * centroid list, ties to the smaller cell — the same
-    * min(struct(d2, cell)) the crossJoin+groupBy assign computes, as a
-    * literal-centroid expression. Replaces the per-subspace
-    * corpus-sized `codes.join(assigned, "pid")` chain (the registry's
-    * ONLY SortMergeJoins, exposed by the r14 shadow audit): m subspace
-    * codes become m projections over one scan — zero joins, zero
-    * shuffles — instead of m-1 corpus x corpus equi-joins. Codes are
-    * bit-identical (same SqDist on the same doubles, same tie-break),
-    * so every PQ oracle hash is unchanged. */
+  /** Frozen-codebook cell assignment as ONE Column: argmin cell of the
+    * row's vector (or slice) against the (model-sized, driver-resident)
+    * centroid list by squared L2, ties to the smaller cell. Every
+    * portable assignment in the ANN family is this column: each Lloyd's
+    * round, IVFADC's frozen coarse tier, the PQ subspace codes. m codes
+    * are m projections over one scan — zero joins, zero shuffles.
+    * DuckDB twin: [[nearestCellSql]]. */
   def pqCodeFrozen(sv: Column, cents: Seq[(Int, Seq[Double])]): Column = {
     val sorted = cents.sortBy(_._1)
     require(sorted.zipWithIndex.forall { case ((c, _), i) => c == i },
@@ -210,15 +186,84 @@ object Ivf {
     ).getField("cell")
   }
 
-  /** SQL fragments shared by the portable-quantizer oracles (sim5b's IVF,
-    * sim6b's per-subspace PQ codebooks): left-to-right list folds ≡
-    * Spark's aggregate fold. */
+  /** The `nProbes` cells whose centroids are nearest by COSINE to each
+    * query, ties → smaller cell: queries (qid, qv) × the broadcast k-row
+    * centroid table → (qid, qv, cell, cv). Cosine because it is the
+    * search metric: an L2 probe on unnormalized vectors picks cells the
+    * cosine top-k does not live in. DuckDB twin: [[probeSql]]. */
+  private[llm] def probeCells(q: DataFrame, cents: Seq[(Int, Seq[Double])],
+                              nProbes: Int): DataFrame = {
+    val spark = q.sparkSession
+    import spark.implicits._
+    q.crossJoin(broadcast(cents.toDF("cell", "cv")))
+      .withColumn("__rn", row_number().over(Window.partitionBy("qid")
+        .orderBy(Similarity.cosine(col("qv"), col("cv")).desc, col("cell"))))
+      .filter(col("__rn") <= nProbes).drop("__rn")
+  }
+
+  /** Exact cosine rank of candidate (qid, pid, pv, qv) pairs: the kTop
+    * best per query (ties → smaller pid), sims 4dp-rounded by the
+    * engine-identical floor fold → (query_id, id, rank, sim). DuckDB
+    * twin: [[cosineTopKSql]]. */
+  private[llm] def cosineTopK(pairs: DataFrame, kTop: Int): DataFrame =
+    pairs.withColumn("sc", Similarity.cosine(col("pv"), col("qv")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("qid").orderBy(desc("sc"), asc("pid"))))
+      .filter(col("rank") <= kTop)
+      .select(col("qid").as("query_id"), col("pid").as("id"), col("rank"),
+        (floor(col("sc") * 10000 + 0.5) / 10000.0).as("sim"))
+      .orderBy("query_id", "rank")
+
+  /** Portable IVF search (sim5b): [[portableQuantizer]], the cosine probe
+    * of `nProbes` cells for the queries pid < nQueries, and the exact
+    * in-cell cosine rank — every stage replayed by [[portableOracleSql]]. */
+  def portableTopK(corpus: DataFrame, id: String, vec: String, k: Int, rounds: Int,
+                   nQueries: Int, nProbes: Int, kTop: Int): DataFrame = {
+    val (cents, assigned) = portableQuantizer(corpus, id, vec, k, rounds)
+    val q = assigned.filter(col("pid") < nQueries)
+      .select(col("pid").as("qid"), col("pv").as("qv"))
+    val probed = probeCells(q, cents, nProbes).drop("cv")
+    cosineTopK(assigned.join(broadcast(probed), "cell"), kTop)
+  }
+
+  /** SQL fragments shared by the portable oracles (IVF, PQ, IVFADC,
+    * SemDeDup): left-to-right list folds ≡ Spark's aggregate fold. */
   private[llm] def d2Sql(dim: Int)(a: String, b: String): String =
     s"list_sum(list_transform(range(1, ${dim + 1}), i -> ($a[i] - $b[i]) * ($a[i] - $b[i])))"
   private[llm] def dotSql(dim: Int)(a: String, b: String): String =
     s"list_sum(list_transform(range(1, ${dim + 1}), i -> $a[i] * $b[i]))"
   private[llm] def cosSql(dim: Int)(a: String, b: String): String =
     s"(${dotSql(dim)(a, b)} / (sqrt(${dotSql(dim)(a, a)}) * sqrt(${dotSql(dim)(b, b)})))"
+  private[llm] def baseSql(table: String, id: String, vec: String): String =
+    s"base AS MATERIALIZED (\n  SELECT $id::BIGINT AS pid, $vec::DOUBLE[] AS pv FROM $table)"
+
+  /** [[pqCodeFrozen]]'s twin: `rows`(pid, pv, ...) × `cents`(cell, cv),
+    * squared-L2 argmin per pid, ties → smaller cell → (pid, pv, cell). */
+  private[llm] def nearestCellSql(rows: String, cents: String, dim: Int): String =
+    s"""SELECT pid, pv, cell FROM (
+       |    SELECT b.pid, b.pv, c.cell,
+       |           row_number() OVER (PARTITION BY b.pid
+       |             ORDER BY ${d2Sql(dim)("b.pv", "c.cv")}, c.cell) AS rn
+       |    FROM $rows b CROSS JOIN $cents c) WHERE rn = 1""".stripMargin
+
+  /** [[probeCells]]'s twin over a queries CTE `q`(qid, qv). */
+  private[llm] def probeSql(q: String, cents: String, dim: Int, nProbes: Int): String =
+    s"""SELECT qid, qv, cell, cv FROM (
+       |    SELECT q.qid, q.qv, c.cell, c.cv,
+       |           row_number() OVER (PARTITION BY q.qid
+       |             ORDER BY ${cosSql(dim)("q.qv", "c.cv")} DESC, c.cell) AS rn
+       |    FROM $q q CROSS JOIN $cents c) WHERE rn <= $nProbes""".stripMargin
+
+  /** [[cosineTopK]]'s twin: the final SELECT over `pairs`, a FROM clause
+    * that joins candidate rows `a`(pid, pv) to queries `p`(qid, qv). */
+  private[llm] def cosineTopKSql(pairs: String, dim: Int, kTop: Int): String =
+    s"""SELECT query_id, id,
+       |       row_number() OVER (PARTITION BY query_id ORDER BY sc DESC, id) AS rank,
+       |       floor(sc * 10000 + 0.5) / 10000.0 AS sim
+       |FROM (SELECT p.qid AS query_id, a.pid AS id, ${cosSql(dim)("a.pv", "p.qv")} AS sc
+       |      FROM $pairs)
+       |QUALIFY rank <= $kTop
+       |ORDER BY query_id, rank""".stripMargin
 
   /** The unrolled Lloyd's CTE chain over a base CTE `$base`(pid, pv):
     * seeds `${p}c0` (k smallest md5(pid)), then per round an assign CTE
@@ -228,7 +273,6 @@ object Ivf {
     * in `${p}c$rounds`. */
   private[llm] def lloydCtesSql(base: String, p: String, k: Int, rounds: Int,
                                 dim: Int): String = {
-    val d2 = d2Sql(dim) _
     val seed =
       s"""${p}c0 AS MATERIALIZED (
          |  SELECT cell, cv FROM (
@@ -237,12 +281,7 @@ object Ivf {
          |    FROM $base) WHERE cell < $k)""".stripMargin
     val roundCtes = (1 to rounds).map { rd =>
       val prev = s"${p}c${rd - 1}"
-      s"""${p}a$rd AS MATERIALIZED (
-         |  SELECT pid, pv, cell FROM (
-         |    SELECT b.pid, b.pv, c.cell,
-         |           row_number() OVER (PARTITION BY b.pid
-         |             ORDER BY ${d2("b.pv", "c.cv")}, c.cell) AS rn
-         |    FROM $base b CROSS JOIN $prev c) WHERE rn = 1),
+      s"""${p}a$rd AS MATERIALIZED (${nearestCellSql(base, prev, dim)}),
          |${p}c$rd AS MATERIALIZED (
          |  SELECT p.cell, coalesce(m.nv, p.cv) AS cv
          |  FROM $prev p LEFT JOIN (
@@ -256,63 +295,34 @@ object Ivf {
     seed + ",\n" + roundCtes
   }
 
-  /** DuckDB twin of [[portableQuantizer]] + the probe/rerank tail: seeds,
-    * every Lloyd's round (assign CTE + centroid CTE), the nProbes cell
-    * probe and the in-cell cosine rerank unrolled as MATERIALIZED CTEs —
-    * the pagerank/BPE oracle pattern. All dot/distance folds are
-    * left-to-right list_sum chains ≡ Spark's aggregate fold, so sims are
-    * bit-identical and (sim DESC, id) ranking cannot flip. */
+  /** DuckDB twin of [[portableTopK]]: seeds, every Lloyd's round, the
+    * final assignment, the nProbes cell probe and the in-cell cosine rank
+    * unrolled as MATERIALIZED CTEs — the pagerank/BPE oracle pattern.
+    * All dot/distance folds are left-to-right list_sum chains ≡ Spark's
+    * aggregate fold, so sims are bit-identical and (sim DESC, id)
+    * ranking cannot flip. `querySql` is a predicate over `pid`. */
   def portableOracleSql(table: String, id: String, vec: String,
                         k: Int, rounds: Int, dim: Int,
-                        querySql: String, nProbes: Int, kTop: Int): String = {
-    val d2 = d2Sql(dim) _
-    def cos(a: String, b: String) = cosSql(dim)(a, b)
-    s"""WITH base AS MATERIALIZED (
-       |  SELECT $id::BIGINT AS pid, $vec::DOUBLE[] AS pv FROM $table),
+                        querySql: String, nProbes: Int, kTop: Int): String =
+    s"""WITH ${baseSql(table, id, vec)},
        |${lloydCtesSql("base", "", k, rounds, dim)},
-       |fin AS MATERIALIZED (
-       |  SELECT pid, pv, cell FROM (
-       |    SELECT b.pid, b.pv, c.cell,
-       |           row_number() OVER (PARTITION BY b.pid
-       |             ORDER BY ${d2("b.pv", "c.cv")}, c.cell) AS rn
-       |    FROM base b CROSS JOIN c$rounds c) WHERE rn = 1),
-       |probe AS MATERIALIZED (
-       |  SELECT qid, qv, cell FROM (
-       |    SELECT q.pid AS qid, q.pv AS qv, c.cell,
-       |           row_number() OVER (PARTITION BY q.pid
-       |             ORDER BY ${cos("q.pv", "c.cv")} DESC, c.cell) AS rn
-       |    FROM (SELECT * FROM fin WHERE $querySql) q CROSS JOIN c$rounds c)
-       |  WHERE rn <= $nProbes),
-       |scored AS (
-       |  SELECT p.qid AS query_id, a.pid AS id, ${cos("a.pv", "p.qv")} AS s
-       |  FROM fin a JOIN probe p ON a.cell = p.cell)
-       |SELECT query_id, id,
-       |       row_number() OVER (PARTITION BY query_id ORDER BY s DESC, id) AS rank,
-       |       floor(s * 10000 + 0.5) / 10000.0 AS sim
-       |FROM scored QUALIFY rank <= $kTop
-       |ORDER BY query_id, rank""".stripMargin
-  }
+       |fin AS MATERIALIZED (${nearestCellSql("base", s"c$rounds", dim)}),
+       |q AS MATERIALIZED (SELECT pid AS qid, pv AS qv FROM fin WHERE $querySql),
+       |probe AS MATERIALIZED (${probeSql("q", s"c$rounds", dim, nProbes)})
+       |${cosineTopKSql("fin a JOIN probe p ON a.cell = p.cell", dim, kTop)}""".stripMargin
 
   /** Approximate top-k: probe the nProbes cells whose centroids are nearest
     * (by cosine) to each query, rerank exactly within them. */
   def topK(index: Index, id: String, vec: String,
            queries: DataFrame, qid: String, qvec: String,
            k: Int, nProbes: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centroidDf = index.centroids.toSeq.toDF("cell", "centroid")
-    // per query: cosine to every centroid (tiny, broadcast), keep nProbes
-    val probed = queries.crossJoin(broadcast(centroidDf))
-      .withColumn("csim", Similarity.cosine(col(qvec), col("centroid")))
-      .withColumn("__r", row_number().over(
-        Window.partitionBy(col(qid)).orderBy(desc("csim"), asc("cell"))))
-      .filter(col("__r") <= nProbes)
-      .select(col(qid), col(qvec), col("cell"))
+    val q = queries.select(col(qid).as("qid"), col(qvec).as("qv"))
+    val cents = index.centroids.toSeq.map { case (c, v) => (c, v.toSeq) }
     // equi-join on cell id: each query only touches its probed cells
     val topk = udaf(new TopKAgg(k))
-    index.assigned.join(broadcast(probed), "cell")
-      .select(col(qid).as("query_id"), col(id).cast("long").as("id"),
-              Similarity.cosine(col(vec), col(qvec)).as("sim"))
+    index.assigned.join(broadcast(probeCells(q, cents, nProbes).drop("cv")), "cell")
+      .select(col("qid").as("query_id"), col(id).cast("long").as("id"),
+              Similarity.cosine(col(vec), col("qv")).as("sim"))
       .groupBy("query_id")
       .agg(topk(col("sim"), col("id")).as("tk"))
       .select(col("query_id"), posexplode(col("tk")))

@@ -27,362 +27,111 @@ import org.apache.spark.sql.functions._
   * LUTs are m·k doubles). Per-query cost ≈ (nProbes/nLists)·corpus rows ×
   * m lookups — the two knobs a 100 TB deployment turns independently.
   *
-  * Three forms: [[topK]] is the production path (both quantizer tiers
+  * Two forms: [[topK]] is the production path (both quantizer tiers
   * trained by a driver-local seeded Lloyd's over one bounded id-sorted
   * hash sample — the FAISS train posture; deterministic for a fixed
   * corpus but model-shaped, so rows-only with recall +
   * partition-independence pins in LlmSpec); [[portableTopK]] fixes both
   * tiers to the md5-seeded fixed-round Lloyd's of
-  * [[Ivf.portableQuantizer]] so every stage — coarse rounds, residuals,
-  * subspace rounds, probe, ADC, rerank — replays bit-for-bit in DuckDB
-  * ([[portableOracleSql]]) and the whole IVFADC search is hash-checked
-  * end-to-end; [[portableTopKIncremental]] is the ingest split (frozen
-  * codebooks encode a new batch — FAISS add-after-train — with its own
-  * oracle).
+  * [[Ivf.portableQuantizer]], trained on the rows a `train` predicate
+  * selects, so every stage — coarse rounds, frozen assignment,
+  * residuals, subspace rounds, probe, ADC, rerank — replays bit-for-bit
+  * in DuckDB ([[portableOracleSql]]). A batch search is the ingest
+  * search whose every row is trained (sim8b); training on the held
+  * corpus only and querying the new batch is FAISS add-after-train
+  * (sim9).
   */
 object Ivfadc {
 
-  private def d2(a: Column, b: Column): Column = graft.functions.SqDist(a, b)
+  /** `v` minus the centroid of its `cell`, looked up in the driver-held
+    * centroid list — a plain IEEE subtraction, bit-identical across
+    * engines. */
+  private def residual(v: Column, cell: Column, cents: Seq[(Int, Seq[Double])]): Column =
+    zip_with(v, element_at(typedLit(cents.map(_._2)), cell + 1), (x, c) => x - c)
 
-  /** Portable IVFADC: coarse portable quantizer (kCoarse cells,
-    * coarseRounds Lloyd's), residual PQ (m subspaces × k codes, pqRounds
-    * each, concurrent seeded fits — bit-identical regardless of
-    * interleaving), cosine probe of nProbes cells (the search metric),
-    * squared-L2 residual-ADC shortlist of `rerank`, exact cosine rerank
-    * to kTop. Residuals are plain IEEE subtractions of
-    * (raw parquet doubles − 6dp-rounded centroids), so they are
-    * bit-identical across engines and the downstream Lloyd's chains stay
-    * engine-exact; the ADC distance is an explicit left-associative chain
-    * of per-subspace SqDist terms (no fold whose order could differ). */
+  /** Portable IVFADC (sim8b, sim9): coarse portable quantizer (kCoarse
+    * cells, coarseRounds Lloyd's) and residual PQ (m subspaces × k codes,
+    * pqRounds each, concurrent seeded fits — bit-identical regardless of
+    * interleaving), both trained ONLY on the `train` rows; every row is
+    * then encoded against the frozen codebooks — cell, residual and m
+    * codes, exactly as FAISS `add()` does after `train()` — and the
+    * `query` rows search the whole index: cosine probe of nProbes cells
+    * (the search metric), squared-L2 residual-ADC shortlist of `rerank`,
+    * exact cosine rerank to kTop. Residuals are plain IEEE subtractions
+    * of (raw parquet doubles − 6dp-rounded centroids), so the downstream
+    * Lloyd's chains stay engine-exact, and retraining on ingest would
+    * shift centroids and fail the oracle.
+    *
+    * `train` and `query` are evaluated against the CALLER's columns, so
+    * pass predicates over the `id`/`vec` names you passed in — never
+    * over the internal `pid`. */
   def portableTopK(corpus: DataFrame, id: String, vec: String,
+                   train: Column, query: Column,
                    kCoarse: Int, coarseRounds: Int,
                    m: Int, k: Int, pqRounds: Int, dim: Int,
-                   nQueries: Int, nProbes: Int, rerank: Int, kTop: Int): DataFrame = {
+                   nProbes: Int, rerank: Int, kTop: Int): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subDim = dim / m
-    val (coarse, assigned) =
-      Ivf.portableQuantizer(corpus, id, vec, kCoarse, coarseRounds)
-    // residuals: checkpointed — referenced by the m subspace fits, the
-    // codes join, and the rerank
-    val res = assigned.join(broadcast(coarse), "cell")
-      .select(col("pid"), col("pv"), col("cell"),
-        zip_with(col("pv"), col("cv"), (x, c) => x - c).as("rv"))
+    val coarse = Ivf.portableCentroids(corpus.filter(train), id, vec, kCoarse, coarseRounds)
+    // checkpointed: read by the m subspace fits, the codes and the rerank;
+    // the train/query flags ride on the rows
+    val res = Ivf.portableRows(corpus, id, vec, train.as("train"), query.as("query"))
+      .withColumn("cell", Ivf.pqCodeFrozen(col("pv"), coarse))
+      .withColumn("rv", residual(col("pv"), col("cell"), coarse))
       .ckpt()
-    val fits = Pq.fitConcurrently(m) { s0 =>
-      val sliced = res.select(col("pid"),
-        slice(col("rv"), s0 * subDim + 1, subDim).as("sv"))
-      Ivf.portableCentroids(sliced, "pid", "sv", k, pqRounds)
-    }
-    // codes as m literal-centroid argmin projections over the one res
-    // scan (Ivf.pqCodeFrozen — see Pq.portableTopK: the former join
-    // chain was the registry's only SortMergeJoins); column order stays
-    // 0..m-1 regardless of which concurrent fit finishes first
-    val cents = new Array[DataFrame](m)
-    val centSeqs = (0 until m).map(s0 => Ivf.collectCentroids(fits(s0)))
-    (0 until m).foreach { s0 =>
-      cents(s0) = fits(s0).select(col("cell").as(s"cell$s0"), col("cv").as(s"cv$s0"))
-    }
-    // checkpointed: the argmin projection must evaluate ONCE PER ROW --
-    // left lazy, the optimizer can float it above the probe join and
-    // recompute the m x k SqDist argmin per (row x probe) match
-    val codes = res.select(col("pid") +: col("cell") +: (0 until m).map(s0 =>
-      Ivf.pqCodeFrozen(slice(col("rv"), s0 * subDim + 1, subDim),
-        centSeqs(s0)).as(s"c$s0")): _*)
-      .ckpt()
-    val q = assigned.filter(col("pid") < nQueries)
-      .select(col("pid").as("qid"), col("pv").as("qv"))
-    // probe: nProbes best coarse cells by COSINE to the centroid (the
-    // search metric — probing by L2 on unnormalized vectors picks cells
-    // the cosine top-k doesn't live in; ties → smaller cell), query
-    // residual taken per probed cell. The in-cell shortlist is then the
-    // L2 residual ADC (sim6b's squared-L2 shortlist, cosine rerank).
-    val probed = q.crossJoin(broadcast(coarse))
-      .withColumn("cs", Similarity.cosine(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("cs"), asc("cell"))))
-      .filter(col("rn") <= nProbes)
-      .select(col("qid"), col("cell"),
-        zip_with(col("qv"), col("cv"), (x, c) => x - c).as("qr"))
-    // ADC within probed cells only: equi-join on the coarse cell — the
-    // inverted-file scan — then m broadcast codebook lookups
-    var scored = codes.join(broadcast(probed), "cell")
-    (0 until m).foreach { s0 =>
-      scored = scored.join(broadcast(cents(s0)), col(s"c$s0") === col(s"cell$s0"))
-    }
-    val adc = (0 until m).map(s0 =>
-      d2(slice(col("qr"), s0 * subDim + 1, subDim), col(s"cv$s0"))).reduce(_ + _)
-    val short = scored.withColumn("adc", adc)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc"), col("pid"))))
-      .filter(col("rn") <= rerank)
-      .select(col("qid"), col("pid"))
-    short.join(res.select("pid", "pv"), "pid")
-      .join(broadcast(q), "qid")
-      .withColumn("sc", Similarity.cosine(col("pv"), col("qv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("sc"), asc("pid"))))
-      .filter(col("rank") <= kTop)
-      .select(col("qid").as("query_id"), col("pid").as("id"), col("rank"),
-        (floor(col("sc") * 10000 + 0.5) / 10000.0).as("sim"))
-      .orderBy("query_id", "rank")
+    val (books, codes) =
+      Pq.portableCodes(res, "rv", col("train"), Seq("pid", "cell"), m, k, pqRounds, subDim)
+    val q = res.filter(col("query")).select(col("pid").as("qid"), col("pv").as("qv"))
+    // the query residual is taken per probed cell; the in-cell shortlist
+    // is the L2 residual ADC over the inverted-file equi-join on cell
+    val probed = Ivf.probeCells(q, coarse, nProbes)
+      .select(col("qid"), col("cell"), zip_with(col("qv"), col("cv"), (x, c) => x - c).as("qr"))
+    Pq.adcTopK(codes.join(broadcast(probed), "cell"), col("qr"), books, subDim, rerank, res, q, kTop)
   }
 
-  /** Frozen-quantizer assignment: nearest `cent` cell for EVERY row of
-    * `df` (ties → smaller cell) — [[Ivf.portableQuantizer]]'s own assign
-    * shape, applied to rows the quantizer was NOT trained on. This is
-    * the add-after-train half of the FAISS contract (IndexIVFPQ.add
-    * encodes new vectors against frozen codebooks; train is never
-    * re-run on ingest). */
-  private def assignFrozen(df: DataFrame, cent: DataFrame, vecCol: String): DataFrame =
-    df.crossJoin(broadcast(cent))
-      .withColumn("__d2", d2(col(vecCol), col("cv")))
-      .groupBy("pid")
-      .agg(min(struct(col("__d2"), col("cell"))).as("m"), first(col(vecCol)).as(vecCol))
-      .select(col("pid"), col(vecCol), col("m.cell").as("cell"))
-
-  /** Portable IVFADC in the INGEST split (dd20/dd22's posture lifted to
-    * ANN): both quantizer tiers train ONLY on the held corpus
-    * (`!isNew`), the NEW batch is encoded against the frozen codebooks —
-    * cell assignment, residual, and m codes exactly as FAISS `add()`
-    * does after `train()` — and queries drawn from the new batch search
-    * the UNION index. Every stage (train-slice Lloyd's chains, frozen
-    * assign of all rows, residuals, frozen subspace assigns, probe, ADC,
-    * rerank) replays in DuckDB ([[portableIncrementalOracleSql]]), so
-    * the add-after-train contract itself is hash-checked: retraining on
-    * ingest would shift centroids and fail the oracle.
-    *
-    * Both `isNew` and `queryFilter` are evaluated against the CALLER's
-    * original columns (they are resolved in the first select, before any
-    * internal rename), so pass predicates over the `id`/`vec` names you
-    * passed in — never over the internal `pid`. */
-  def portableTopKIncremental(corpus: DataFrame, id: String, vec: String,
-                              isNew: Column,
-                              kCoarse: Int, coarseRounds: Int,
-                              m: Int, k: Int, pqRounds: Int, dim: Int,
-                              queryFilter: Column, nProbes: Int,
-                              rerank: Int, kTop: Int): DataFrame = {
-    require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val subDim = dim / m
-    val base = corpus.select(col(id).cast("long").as("pid"),
-        transform(col(vec), _.cast("double")).as("pv"),
-        isNew.as("is_new"), queryFilter.as("is_query"))
-      .ckpt()
-    val trainBase = base.filter(!col("is_new"))
-    val (coarse, _) =
-      Ivf.portableQuantizer(trainBase, "pid", "pv", kCoarse, coarseRounds)
-    // frozen-coarse assignment of EVERYTHING (corpus rows re-derive their
-    // training assignment bit-identically; new rows get theirs for the
-    // first time), then residuals
-    val res = assignFrozen(base.select("pid", "pv"), coarse, "pv")
-      .join(broadcast(coarse), "cell")
-      .select(col("pid"), col("pv"), col("cell"),
-        zip_with(col("pv"), col("cv"), (x, c) => x - c).as("rv"))
-      .ckpt()
-    val trainIds = trainBase.select("pid")
-    val fits = Pq.fitConcurrently(m) { s0 =>
-      val slicedTrain = res.join(trainIds, "pid")
-        .select(col("pid"), slice(col("rv"), s0 * subDim + 1, subDim).as("sv"))
-      Ivf.portableCentroids(slicedTrain, "pid", "sv", k, pqRounds)
-    }
-    // frozen-codebook codes as literal-centroid argmin projections over
-    // the one res scan (Ivf.pqCodeFrozen ≡ assignFrozen's
-    // min(struct(d2, cell)), bit for bit) — replaces the per-subspace
-    // assignFrozen + corpus-sized pid join chain
-    val cents = new Array[DataFrame](m)
-    val centSeqs = (0 until m).map(s0 => Ivf.collectCentroids(fits(s0)))
-    (0 until m).foreach { s0 =>
-      cents(s0) = fits(s0).select(col("cell").as(s"cell$s0"), col("cv").as(s"cv$s0"))
-    }
-    // checkpointed: the argmin projection must evaluate ONCE PER ROW --
-    // left lazy, the optimizer can float it above the probe join and
-    // recompute the m x k SqDist argmin per (row x probe) match
-    val codes = res.select(col("pid") +: col("cell") +: (0 until m).map(s0 =>
-      Ivf.pqCodeFrozen(slice(col("rv"), s0 * subDim + 1, subDim),
-        centSeqs(s0)).as(s"c$s0")): _*)
-      .ckpt()
-    val q = base.filter(col("is_new") && col("is_query"))
-      .select(col("pid").as("qid"), col("pv").as("qv"))
-    val probed = q.crossJoin(broadcast(coarse))
-      .withColumn("cs", Similarity.cosine(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("cs"), asc("cell"))))
-      .filter(col("rn") <= nProbes)
-      .select(col("qid"), col("cell"),
-        zip_with(col("qv"), col("cv"), (x, c) => x - c).as("qr"))
-    var scored = codes.join(broadcast(probed), "cell")
-    (0 until m).foreach { s0 =>
-      scored = scored.join(broadcast(cents(s0)), col(s"c$s0") === col(s"cell$s0"))
-    }
-    val adc = (0 until m).map(s0 =>
-      d2(slice(col("qr"), s0 * subDim + 1, subDim), col(s"cv$s0"))).reduce(_ + _)
-    val short = scored.withColumn("adc", adc)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc"), col("pid"))))
-      .filter(col("rn") <= rerank)
-      .select(col("qid"), col("pid"))
-    short.join(res.select("pid", "pv"), "pid")
-      .join(broadcast(q), "qid")
-      .withColumn("sc", Similarity.cosine(col("pv"), col("qv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("sc"), asc("pid"))))
-      .filter(col("rank") <= kTop)
-      .select(col("qid").as("query_id"), col("pid").as("id"), col("rank"),
-        (floor(col("sc") * 10000 + 0.5) / 10000.0).as("sim"))
-      .orderBy("query_id", "rank")
-  }
-
-  /** DuckDB twin of [[portableTopKIncremental]]: Lloyd's chains over the
-    * TRAIN slice only, frozen argmin assignment of all rows, residuals,
-    * frozen subspace assigns, probe over new-batch queries, ADC chain,
-    * cosine rerank. `newSql` / `querySql` are predicates over `pid`. */
-  def portableIncrementalOracleSql(table: String, id: String, vec: String,
-                                   newSql: String,
-                                   kCoarse: Int, coarseRounds: Int,
-                                   m: Int, k: Int, pqRounds: Int, dim: Int,
-                                   querySql: String, nProbes: Int,
-                                   rerank: Int, kTop: Int): String = {
-    val subDim = dim / m
-    val gd2 = Ivf.d2Sql(dim) _
-    val resExpr = (a: String, b: String) =>
-      s"[$a[i] - $b[i] FOR i IN generate_series(1, $dim)]"
-    val subCtes = (0 until m).map { s0 =>
-      val lo = s0 * subDim + 1; val hi = (s0 + 1) * subDim
-      s"""resall$s0 AS MATERIALIZED (SELECT pid, rv[$lo:$hi] AS pv FROM res),
-         |res$s0 AS MATERIALIZED (
-         |  SELECT pid, pv FROM resall$s0 WHERE NOT ($newSql)),
-         |${Ivf.lloydCtesSql(s"res$s0", s"s$s0", k, pqRounds, subDim)},
-         |fin$s0 AS MATERIALIZED (
-         |  SELECT pid, cell FROM (
-         |    SELECT b.pid, c.cell,
-         |           row_number() OVER (PARTITION BY b.pid
-         |             ORDER BY ${Ivf.d2Sql(subDim)("b.pv", "c.cv")}, c.cell) AS rn
-         |    FROM resall$s0 b CROSS JOIN s${s0}c$pqRounds c) WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    val codeCols = (0 until m).map(s0 => s"f$s0.cell AS c$s0").mkString(", ")
-    val codeJoins = (0 until m).map(s0 => s"JOIN fin$s0 f$s0 USING (pid)").mkString(" ")
-    val qSubs = (0 until m).map { s0 =>
-      s"qr[${s0 * subDim + 1}:${(s0 + 1) * subDim}] AS qs$s0"
-    }.mkString(", ")
-    val cbJoins = (0 until m)
-      .map(s0 => s"JOIN s${s0}c$pqRounds cb$s0 ON c.c$s0 = cb$s0.cell").mkString("\n  ")
-    val adcChain = (0 until m)
-      .map(s0 => Ivf.d2Sql(subDim)(s"p.qs$s0", s"cb$s0.cv")).mkString(" + ")
-    s"""WITH base AS MATERIALIZED (
-       |  SELECT $id::BIGINT AS pid, $vec::DOUBLE[] AS pv FROM $table),
-       |train AS MATERIALIZED (SELECT * FROM base WHERE NOT ($newSql)),
-       |${Ivf.lloydCtesSql("train", "g", kCoarse, coarseRounds, dim)},
-       |fin AS MATERIALIZED (
-       |  SELECT pid, pv, cell FROM (
-       |    SELECT b.pid, b.pv, c.cell,
-       |           row_number() OVER (PARTITION BY b.pid
-       |             ORDER BY ${gd2("b.pv", "c.cv")}, c.cell) AS rn
-       |    FROM base b CROSS JOIN gc$coarseRounds c) WHERE rn = 1),
-       |res AS MATERIALIZED (
-       |  SELECT f.pid, f.pv, f.cell, ${resExpr("f.pv", "c.cv")} AS rv
-       |  FROM fin f JOIN gc$coarseRounds c USING (cell)),
-       |$subCtes,
-       |codes AS MATERIALIZED (
-       |  SELECT r.pid, r.cell, $codeCols FROM res r $codeJoins),
-       |q AS MATERIALIZED (
-       |  SELECT pid AS qid, pv AS qv FROM base WHERE ($newSql) AND ($querySql)),
-       |probe AS MATERIALIZED (
-       |  SELECT qid, cell, $qSubs FROM (
-       |    SELECT q.qid, c.cell, ${resExpr("q.qv", "c.cv")} AS qr,
-       |           row_number() OVER (PARTITION BY q.qid
-       |             ORDER BY ${Ivf.cosSql(dim)("q.qv", "c.cv")} DESC, c.cell) AS rn
-       |    FROM q CROSS JOIN gc$coarseRounds c) WHERE rn <= $nProbes),
-       |scored AS MATERIALIZED (
-       |  SELECT p.qid, c.pid, ($adcChain) AS adc
-       |  FROM codes c JOIN probe p ON c.cell = p.cell
-       |  $cbJoins),
-       |short AS MATERIALIZED (
-       |  SELECT qid, pid FROM (
-       |    SELECT qid, pid,
-       |           row_number() OVER (PARTITION BY qid ORDER BY adc, pid) AS rn
-       |    FROM scored) WHERE rn <= $rerank),
-       |rer AS (
-       |  SELECT s.qid AS query_id, s.pid AS id, ${Ivf.cosSql(dim)("b.pv", "q.qv")} AS sc
-       |  FROM short s JOIN base b ON s.pid = b.pid JOIN q ON s.qid = q.qid)
-       |SELECT query_id, id,
-       |       row_number() OVER (PARTITION BY query_id ORDER BY sc DESC, id) AS rank,
-       |       floor(sc * 10000 + 0.5) / 10000.0 AS sim
-       |FROM rer QUALIFY rank <= $kTop
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** DuckDB twin of [[portableTopK]]: the coarse Lloyd's chain
-    * ([[Ivf.lloydCtesSql]], prefix `g`), the residual projection, m
-    * unrolled per-subspace chains over residual slices, the L2 probe, the
-    * explicit left-associative ADC chain, shortlist and cosine rerank —
-    * the whole IVFADC search replayed as one CTE pipeline. */
+  /** DuckDB twin of [[portableTopK]]: the coarse Lloyd's chain over the
+    * `trainSql` rows ([[Ivf.lloydCtesSql]], prefix `g`), the frozen
+    * nearest-cell assignment of every row, residuals, the subspace codes
+    * ([[Pq.codesSql]]), the cosine probe of the `querySql` rows, and the
+    * ADC shortlist + cosine rerank ([[Pq.adcTopKSql]]) — the whole
+    * IVFADC search as one CTE pipeline. Both predicates are over `pid`. */
   def portableOracleSql(table: String, id: String, vec: String,
+                        trainSql: String, querySql: String,
                         kCoarse: Int, coarseRounds: Int,
                         m: Int, k: Int, pqRounds: Int, dim: Int,
-                        nQueries: Int, nProbes: Int, rerank: Int, kTop: Int): String = {
+                        nProbes: Int, rerank: Int, kTop: Int): String = {
     val subDim = dim / m
-    val gd2 = Ivf.d2Sql(dim) _
-    val resExpr = (a: String, b: String) =>
-      s"[$a[i] - $b[i] FOR i IN generate_series(1, $dim)]"
-    val subCtes = (0 until m).map { s0 =>
-      val lo = s0 * subDim + 1; val hi = (s0 + 1) * subDim
-      s"""res$s0 AS MATERIALIZED (SELECT pid, rv[$lo:$hi] AS pv FROM res),
-         |${Ivf.lloydCtesSql(s"res$s0", s"s$s0", k, pqRounds, subDim)},
-         |fin$s0 AS MATERIALIZED (
-         |  SELECT pid, cell FROM (
-         |    SELECT b.pid, c.cell,
-         |           row_number() OVER (PARTITION BY b.pid
-         |             ORDER BY ${Ivf.d2Sql(subDim)("b.pv", "c.cv")}, c.cell) AS rn
-         |    FROM res$s0 b CROSS JOIN s${s0}c$pqRounds c) WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    val codeCols = (0 until m).map(s0 => s"f$s0.cell AS c$s0").mkString(", ")
-    val codeJoins = (0 until m).map(s0 => s"JOIN fin$s0 f$s0 USING (pid)").mkString(" ")
-    val qSubs = (0 until m).map { s0 =>
-      s"qr[${s0 * subDim + 1}:${(s0 + 1) * subDim}] AS qs$s0"
-    }.mkString(", ")
-    val cbJoins = (0 until m)
-      .map(s0 => s"JOIN s${s0}c$pqRounds cb$s0 ON c.c$s0 = cb$s0.cell").mkString("\n  ")
-    val adcChain = (0 until m)
-      .map(s0 => Ivf.d2Sql(subDim)(s"p.qs$s0", s"cb$s0.cv")).mkString(" + ")
-    s"""WITH base AS MATERIALIZED (
-       |  SELECT $id::BIGINT AS pid, $vec::DOUBLE[] AS pv FROM $table),
-       |${Ivf.lloydCtesSql("base", "g", kCoarse, coarseRounds, dim)},
-       |fin AS MATERIALIZED (
-       |  SELECT pid, pv, cell FROM (
-       |    SELECT b.pid, b.pv, c.cell,
-       |           row_number() OVER (PARTITION BY b.pid
-       |             ORDER BY ${gd2("b.pv", "c.cv")}, c.cell) AS rn
-       |    FROM base b CROSS JOIN gc$coarseRounds c) WHERE rn = 1),
+    val gc = s"gc$coarseRounds"
+    def resid(a: String, b: String) = s"[$a[i] - $b[i] FOR i IN generate_series(1, $dim)]"
+    s"""WITH ${Ivf.baseSql(table, id, vec)},
+       |train AS MATERIALIZED (SELECT * FROM base WHERE ($trainSql)),
+       |${Ivf.lloydCtesSql("train", "g", kCoarse, coarseRounds, dim)},
+       |fin AS MATERIALIZED (${Ivf.nearestCellSql("base", gc, dim)}),
        |res AS MATERIALIZED (
-       |  SELECT f.pid, f.pv, f.cell, ${resExpr("f.pv", "c.cv")} AS rv
-       |  FROM fin f JOIN gc$coarseRounds c USING (cell)),
-       |$subCtes,
-       |codes AS MATERIALIZED (
-       |  SELECT r.pid, r.cell, $codeCols FROM res r $codeJoins),
-       |q AS MATERIALIZED (
-       |  SELECT pid AS qid, pv AS qv FROM base WHERE pid < $nQueries),
+       |  SELECT f.pid, f.pv, f.cell, ${resid("f.pv", "c.cv")} AS rv
+       |  FROM fin f JOIN $gc c USING (cell)),
+       |${Pq.codesSql("res", "rv", trainSql, m, k, pqRounds, subDim)},
+       |q AS MATERIALIZED (SELECT pid AS qid, pv AS qv FROM base WHERE ($querySql)),
        |probe AS MATERIALIZED (
-       |  SELECT qid, cell, $qSubs FROM (
-       |    SELECT q.qid, c.cell, ${resExpr("q.qv", "c.cv")} AS qr,
-       |           row_number() OVER (PARTITION BY q.qid
-       |             ORDER BY ${Ivf.cosSql(dim)("q.qv", "c.cv")} DESC, c.cell) AS rn
-       |    FROM q CROSS JOIN gc$coarseRounds c) WHERE rn <= $nProbes),
-       |scored AS MATERIALIZED (
-       |  SELECT p.qid, c.pid, ($adcChain) AS adc
-       |  FROM codes c JOIN probe p ON c.cell = p.cell
-       |  $cbJoins),
-       |short AS MATERIALIZED (
-       |  SELECT qid, pid FROM (
-       |    SELECT qid, pid,
-       |           row_number() OVER (PARTITION BY qid ORDER BY adc, pid) AS rn
-       |    FROM scored) WHERE rn <= $rerank),
-       |rer AS (
-       |  SELECT s.qid AS query_id, s.pid AS id, ${Ivf.cosSql(dim)("b.pv", "q.qv")} AS sc
-       |  FROM short s JOIN base b ON s.pid = b.pid JOIN q ON s.qid = q.qid)
-       |SELECT query_id, id,
-       |       row_number() OVER (PARTITION BY query_id ORDER BY sc DESC, id) AS rank,
-       |       floor(sc * 10000 + 0.5) / 10000.0 AS sim
-       |FROM rer QUALIFY rank <= $kTop
-       |ORDER BY query_id, rank""".stripMargin
+       |  SELECT qid, cell, ${Pq.slicesSql("qr", m, subDim)} FROM (
+       |    SELECT qid, cell, ${resid("qv", "cv")} AS qr
+       |    FROM (${Ivf.probeSql("q", gc, dim, nProbes)}))),
+       |${Pq.adcTopKSql("codes c JOIN probe p ON c.cell = p.cell", m, pqRounds, subDim, rerank, dim, kTop)}""".stripMargin
+  }
+
+  /** Squared-L2 argmin over driver-held centroids, first minimum wins
+    * (ties → smaller cell, as [[Ivf.pqCodeFrozen]]). */
+  private def nearest(pt: Array[Double], cents: Array[Array[Double]]): Int = {
+    var best = 0; var bestD = Double.MaxValue
+    var c = 0
+    while (c < cents.length) {
+      var d = 0.0; var j = 0
+      val cv = cents(c)
+      while (j < pt.length) { val x = pt(j) - cv(j); d += x * x; j += 1 }
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
   }
 
   /** Driver-local seeded Lloyd's over a bounded in-memory sample — the
@@ -415,15 +164,7 @@ object Ivfadc {
       var p = 0
       while (p < points.length) {
         val pt = points(p)
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var d = 0.0; var j = 0
-          val cv = cents(c)
-          while (j < dim) { val x = pt(j) - cv(j); d += x * x; j += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
+        val best = nearest(pt, cents)
         val s = sums(best); var j = 0
         while (j < dim) { s(j) += pt(j); j += 1 }
         counts(best) += 1
@@ -436,21 +177,6 @@ object Ivfadc {
       it += 1
     }
     cents
-  }
-
-  /** Literal k×dim centroid matrix and the codegen'd nearest-centroid
-    * assignment over it: k SqDist kernels + first-min array_position —
-    * one projection, no join, no shuffle, no UDF. Right for quantizer
-    * tiers that fit in an expression (k·dim up to a few hundred K —
-    * both tiers here); a 64k-cell coarse tier would instead broadcast
-    * the centroid matrix as data (the [[Ivf.topK]] centDf shape) or a
-    * broadcast-var native expression, trading one projection for a
-    * broadcast join — same shuffle count, different k ceiling. */
-  private def centArrLit(cs: Array[Array[Double]]): Column =
-    array(cs.map(c => array(c.map(lit): _*)): _*)
-  private def argminCell(v: Column, cs: Array[Array[Double]]): Column = {
-    val ds = transform(centArrLit(cs), c => d2(v, c))
-    (array_position(ds, array_min(ds)) - 1).cast("int")
   }
 
   /** Production IVFADC: both quantizer tiers trained by [[localLloyd]] on
@@ -510,56 +236,37 @@ object Ivfadc {
       .sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
     val coarseCents = localLloyd(sample, nLists, iters = 10, seed)
     // sample residuals computed locally (no second corpus pass)
-    def nearest(pt: Array[Double]): Int = {
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < nLists) {
-        var d = 0.0; var j = 0
-        val cv = coarseCents(c)
-        while (j < dim) { val x = pt(j) - cv(j); d += x * x; j += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
     val sampleRes = sample.map { pt =>
-      val cv = coarseCents(nearest(pt))
+      val cv = coarseCents(nearest(pt, coarseCents))
       Array.tabulate(dim)(j => pt(j) - cv(j))
     }
     val pqCents: Array[Array[Array[Double]]] = Array.tabulate(m) { s =>
       localLloyd(sampleRes.map(r => java.util.Arrays.copyOfRange(r, s * subDim, (s + 1) * subDim)),
         k, iters = 10, seed + 1 + s)
     }
+    def cells(cs: Array[Array[Double]]) = cs.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+    val coarse = cells(coarseCents)
     // ---- index (one distributed projection: cell + residual + m codes) ----
-    val coarseArr = centArrLit(coarseCents)
     val codes = base
-      .withColumn("cell", argminCell(col("pv"), coarseCents))
-      .withColumn("rv", zip_with(col("pv"), element_at(coarseArr, col("cell") + 1),
-        (x, c) => x - c))
+      .withColumn("cell", Ivf.pqCodeFrozen(col("pv"), coarse))
+      .withColumn("rv", residual(col("pv"), col("cell"), coarse))
       .select(col("id"), col("cell"),
         array((0 until m).map(s =>
-          argminCell(slice(col("rv"), s * subDim + 1, subDim), pqCents(s))): _*).as("codes"))
-    val centDf = coarseCents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toSeq.toDF("cell", "__cc")
+          Ivf.pqCodeFrozen(slice(col("rv"), s * subDim + 1, subDim), cells(pqCents(s)))): _*)
+          .as("codes"))
     val codebook = (for {
       s <- 0 until m
       (cent, code) <- pqCents(s).zipWithIndex
     } yield (s, code, cent.toSeq)).toDF("s", "code", "cent")
-    // probe nProbes cells per query (cosine — the search metric; ties →
-    // smaller cell); the query residual is per probed cell
-    val probed = queries
-      .select(col(qid).cast("long").as("query_id"), col(qvec).as("__qv"))
-      .crossJoin(broadcast(centDf))
-      .withColumn("cs", Similarity.cosine(col("__qv").cast("array<double>"), col("__cc")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cs"), asc("cell"))))
-      .filter(col("rn") <= nProbes)
-      .select(col("query_id"), col("cell"),
-        zip_with(col("__qv").cast("array<double>"), col("__cc"), (x, c) => x - c).as("qr"))
+    // probe nProbes cells per query; the query residual is per probed cell
+    val q = queries.select(col(qid).cast("long").as("qid"), col(qvec).cast("array<double>").as("qv"))
+    val probed = Ivf.probeCells(q, coarse, nProbes)
+      .select(col("qid").as("query_id"), col("cell"),
+        zip_with(col("qv"), col("cv"), (x, c) => x - c).as("qr"))
     // per-(query, cell) LUT: m·k partial squared distances — tiny,
     // broadcast; the big side touches only the codes
     val luts = probed.crossJoin(broadcast(codebook))
-      .withColumn("pd", d2(
+      .withColumn("pd", graft.functions.SqDist(
         slice(col("qr"), col("s") * subDim + 1, lit(subDim)), col("cent")))
       .groupBy("query_id", "cell")
       .agg(map_from_entries(collect_list(struct(

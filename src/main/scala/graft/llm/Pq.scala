@@ -5,6 +5,7 @@ import graft.Ckpt._
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) approximate nearest neighbor — the memory
@@ -132,8 +133,7 @@ object Pq {
       .select(col("query_id"), explode(col("tk")).as("c"))
       .select(col("query_id"), col("c.id").as("id"))
     // exact rerank of the shortlist only
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("sim"), asc("id"))
+    val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("id"))
     cands
       .join(corpus.select(col(id).cast("long").as("id"), col(vec).as("__cv")), "id")
       .join(broadcast(queries.select(col(qid).cast("long").as("query_id"),
@@ -145,122 +145,123 @@ object Pq {
   }
 
   /** Portable PQ twin (sim6b): per-subspace md5-seeded fixed-round
-    * Lloyd's codebooks ([[Ivf.portableQuantizer]] over each slice),
-    * squared-L2 ADC shortlist, exact cosine rerank. The codes ride WIDE
-    * (c0..c{m-1} columns), so the ADC distance is an explicit
-    * left-to-right `+` chain of per-subspace d² terms — no aggregation
-    * whose fold order could differ between engines — and every stage
-    * replays in DuckDB ([[portableOracleSql]]). MLlib [[build]]/[[topK]]
-    * stay the production path. */
+    * Lloyd's codebooks ([[portableCodes]]), squared-L2 ADC shortlist and
+    * exact cosine rerank ([[adcTopK]]) for the queries pid < nQueries.
+    * Every stage replays in DuckDB ([[portableOracleSql]]). MLlib
+    * [[build]]/[[topK]] stay the production path. */
   def portableTopK(corpus: DataFrame, id: String, vec: String,
                    m: Int, k: Int, rounds: Int, dim: Int,
                    nQueries: Int, rerank: Int, kTop: Int): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val subDim = dim / m
-    val base = corpus.select(col(id).cast("long").as("pid"),
-      transform(col(vec), _.cast("double")).as("pv")).ckpt()
-    // column order below stays 0..m-1 for a stable plan regardless of
-    // which concurrent fit finishes first
-    val fits = fitConcurrently(m) { s0 =>
-      val sliced = base.select(col("pid"),
-        slice(col("pv"), s0 * subDim + 1, subDim).as("sv"))
-      Ivf.portableCentroids(sliced, "pid", "sv", k, rounds)
-    }
-    // codes as m literal-centroid argmin PROJECTIONS over one base scan
-    // (Ivf.pqCodeFrozen) — the former per-subspace assignment join chain
-    // was the registry's only SortMergeJoins (m-1 corpus x corpus joins
-    // on pid, exposed by the r14 shadow audit); codes are bit-identical
-    val cents = new Array[DataFrame](m)
-    val centSeqs = (0 until m).map(s0 => Ivf.collectCentroids(fits(s0)))
-    (0 until m).foreach { s0 =>
-      cents(s0) = fits(s0).select(col("cell").as(s"cell$s0"), col("cv").as(s"cv$s0"))
-    }
-    // checkpointed: the argmin projection must evaluate ONCE PER ROW —
-    // left lazy, the optimizer can float it above the query crossJoin
-    // and recompute the m x k SqDist argmin per (row x query) match
-    val codes = base.select(col("pid") +: (0 until m).map(s0 =>
-      Ivf.pqCodeFrozen(slice(col("pv"), s0 * subDim + 1, subDim),
-        centSeqs(s0)).as(s"c$s0")): _*)
-      .ckpt()
-    val q = base.filter(col("pid") < nQueries)
-      .select(col("pid").as("qid"), col("pv").as("qv"))
-    def d2(a: Column, b: Column): Column =
-      graft.functions.SqDist(a, b)
-    var withCb = codes.crossJoin(broadcast(q))
-    (0 until m).foreach { s0 =>
-      withCb = withCb.join(broadcast(cents(s0)), col(s"c$s0") === col(s"cell$s0"))
-    }
-    val adc = (0 until m).map(s0 =>
-      d2(slice(col("qv"), s0 * subDim + 1, subDim), col(s"cv$s0"))).reduce(_ + _)
-    val w = org.apache.spark.sql.expressions.Window
-    val short = withCb.withColumn("adc", adc)
-      .withColumn("rn", row_number().over(
-        w.partitionBy("qid").orderBy(col("adc"), col("pid"))))
-      .filter(col("rn") <= rerank)
-      .select(col("qid"), col("pid"))
-    short.join(base, "pid")
-      .join(broadcast(q), "qid")
-      .withColumn("sc", Similarity.cosine(col("pv"), col("qv")))
-      .withColumn("rank", row_number().over(
-        w.partitionBy("qid").orderBy(desc("sc"), asc("pid"))))
-      .filter(col("rank") <= kTop)
-      .select(col("qid").as("query_id"), col("pid").as("id"), col("rank"),
-        (floor(col("sc") * 10000 + 0.5) / 10000.0).as("sim"))
-      .orderBy("query_id", "rank")
+    val rows = Ivf.portableRows(corpus, id, vec).ckpt()
+    val (books, codes) = portableCodes(rows, "pv", lit(true), Seq("pid"), m, k, rounds, dim / m)
+    val q = rows.filter(col("pid") < nQueries).select(col("pid").as("qid"), col("pv").as("qv"))
+    adcTopK(codes.crossJoin(broadcast(q)), col("qv"), books, dim / m, rerank, rows, q, kTop)
   }
 
-  /** DuckDB twin of [[portableTopK]]: m unrolled per-subspace Lloyd's
-    * chains ([[Ivf.lloydCtesSql]]), the wide codes join, the explicit
-    * left-associative ADC chain, shortlist and cosine rerank — the whole
-    * PQ search replayed as one CTE pipeline. */
+  /** The subspace stage of both portable PQ searches: one md5-seeded
+    * fixed-round Lloyd's codebook per subspace of `vec`, fit concurrently
+    * on the `train` rows ([[Ivf.portableCentroids]]), then the WIDE codes
+    * c0..c{m-1} of every row as m literal-centroid argmin projections
+    * ([[Ivf.pqCodeFrozen]]) next to its `keep` columns. Returns (the
+    * driver-held codebooks in subspace order, the coded rows). DuckDB
+    * twin: [[codesSql]]. */
+  private[llm] def portableCodes(rows: DataFrame, vec: String, train: Column,
+                                 keep: Seq[String], m: Int, k: Int, rounds: Int,
+                                 subDim: Int): (IndexedSeq[IndexedSeq[(Int, Seq[Double])]], DataFrame) = {
+    def sub(s: Int): Column = slice(col(vec), s * subDim + 1, subDim)
+    val books = fitConcurrently(m) { s =>
+      Ivf.portableCentroids(rows.filter(train).select(col("pid"), sub(s).as("sv")),
+        "pid", "sv", k, rounds)
+    }
+    // checkpointed: the argmin projection must evaluate ONCE PER ROW —
+    // left lazy, the optimizer can float it above the query join and
+    // recompute the m x k SqDist argmin per (row x query) match
+    val codes = rows.select(keep.map(col) ++
+      (0 until m).map(s => Ivf.pqCodeFrozen(sub(s), books(s)).as(s"c$s")): _*).ckpt()
+    (books, codes)
+  }
+
+  /** ADC shortlist + exact cosine rerank over (query, coded row) `pairs`:
+    * the ADC distance of `qVec` is an explicit left-to-right `+` chain of
+    * per-subspace SqDist terms against each code's centroid, looked up in
+    * the codebook literal (no aggregation whose fold order could differ
+    * between engines, no codebook join); the `rerank` smallest per query
+    * (ties → smaller pid) are reranked by exact cosine of their `rows`
+    * vectors against the queries `q` (qid, qv) ([[Ivf.cosineTopK]]).
+    * DuckDB twin: [[adcTopKSql]]. */
+  private[llm] def adcTopK(pairs: DataFrame, qVec: Column,
+                           books: IndexedSeq[IndexedSeq[(Int, Seq[Double])]], subDim: Int,
+                           rerank: Int, rows: DataFrame, q: DataFrame, kTop: Int): DataFrame = {
+    val adc = books.indices.map { s =>
+      graft.functions.SqDist(slice(qVec, s * subDim + 1, subDim),
+        element_at(typedLit(books(s).map(_._2)), col(s"c$s") + 1))
+    }.reduce(_ + _)
+    val short = pairs
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("qid").orderBy(adc, col("pid"))))
+      .filter(col("rn") <= rerank)
+      .select(col("qid"), col("pid"))
+    Ivf.cosineTopK(short.join(rows.select("pid", "pv"), "pid").join(broadcast(q), "qid"), kTop)
+  }
+
+  /** DuckDB twin of [[portableTopK]]: [[codesSql]] over the base rows,
+    * the query slices, and [[adcTopKSql]] over every (code row, query)
+    * pair — the whole PQ search replayed as one CTE pipeline. */
   def portableOracleSql(table: String, id: String, vec: String,
                         m: Int, k: Int, rounds: Int, dim: Int,
                         nQueries: Int, rerank: Int, kTop: Int): String = {
     val subDim = dim / m
-    val subCtes = (0 until m).map { s0 =>
-      val lo = s0 * subDim + 1; val hi = (s0 + 1) * subDim
-      s"""base$s0 AS MATERIALIZED (SELECT pid, pv[$lo:$hi] AS pv FROM base),
-         |${Ivf.lloydCtesSql(s"base$s0", s"s$s0", k, rounds, subDim)},
-         |fin$s0 AS MATERIALIZED (
-         |  SELECT pid, cell FROM (
-         |    SELECT b.pid, c.cell,
-         |           row_number() OVER (PARTITION BY b.pid
-         |             ORDER BY ${Ivf.d2Sql(subDim)("b.pv", "c.cv")}, c.cell) AS rn
-         |    FROM base$s0 b CROSS JOIN s${s0}c$rounds c) WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    val codeCols = (0 until m).map(s0 => s"f$s0.cell AS c$s0").mkString(", ")
-    val codeJoins = (1 until m).map(s0 => s"JOIN fin$s0 f$s0 USING (pid)").mkString(" ")
-    val qSubs = (0 until m).map { s0 =>
-      s"pv[${s0 * subDim + 1}:${(s0 + 1) * subDim}] AS qs$s0"
-    }.mkString(", ")
-    val cbJoins = (0 until m)
-      .map(s0 => s"JOIN s${s0}c$rounds cb$s0 ON c.c$s0 = cb$s0.cell").mkString("\n  ")
-    val adcChain = (0 until m)
-      .map(s0 => Ivf.d2Sql(subDim)(s"q.qs$s0", s"cb$s0.cv")).mkString("\n     + ")
-    s"""WITH base AS MATERIALIZED (
-       |  SELECT $id::BIGINT AS pid, $vec::DOUBLE[] AS pv FROM $table),
-       |$subCtes,
-       |codes AS MATERIALIZED (
-       |  SELECT pid, $codeCols FROM fin0 f0 $codeJoins),
+    s"""WITH ${Ivf.baseSql(table, id, vec)},
+       |${codesSql("base", "pv", "true", m, k, rounds, subDim)},
        |q AS MATERIALIZED (
-       |  SELECT pid AS qid, pv AS qv, $qSubs FROM base WHERE pid < $nQueries),
-       |scored AS MATERIALIZED (
-       |  SELECT q.qid, c.pid,
-       |    (${adcChain.linesIterator.mkString(" ")}) AS adc
-       |  FROM codes c CROSS JOIN q
+       |  SELECT pid AS qid, pv AS qv, ${slicesSql("pv", m, subDim)} FROM base WHERE pid < $nQueries),
+       |${adcTopKSql("codes c CROSS JOIN q p", m, rounds, subDim, rerank, dim, kTop)}""".stripMargin
+  }
+
+  /** `v`'s m subspace slices as columns qs0..qs{m-1}. */
+  private[llm] def slicesSql(v: String, m: Int, subDim: Int): String =
+    (0 until m).map(s => s"$v[${s * subDim + 1}:${(s + 1) * subDim}] AS qs$s").mkString(", ")
+
+  /** [[portableCodes]]'s twin over a CTE `rows`(pid, `vec`, ...): per
+    * subspace s the slices `sub$s` of every row, the unrolled Lloyd's
+    * chain ([[Ivf.lloydCtesSql]], prefix `s$s`) over the rows passing
+    * `trainSql` (a predicate over pid), and their nearest cells; then
+    * `codes` = the rows plus c0..c{m-1}. */
+  private[llm] def codesSql(rows: String, vec: String, trainSql: String,
+                            m: Int, k: Int, rounds: Int, subDim: Int): String = {
+    val subCtes = (0 until m).map { s =>
+      s"""sub$s AS MATERIALIZED (
+         |  SELECT pid, $vec[${s * subDim + 1}:${(s + 1) * subDim}] AS pv FROM $rows),
+         |trn$s AS MATERIALIZED (SELECT pid, pv FROM sub$s WHERE ($trainSql)),
+         |${Ivf.lloydCtesSql(s"trn$s", s"s$s", k, rounds, subDim)},
+         |fin$s AS MATERIALIZED (${Ivf.nearestCellSql(s"sub$s", s"s${s}c$rounds", subDim)})""".stripMargin
+    }
+    val codeCols = (0 until m).map(s => s"f$s.cell AS c$s").mkString(", ")
+    val joins = (0 until m).map(s => s"JOIN fin$s f$s USING (pid)").mkString(" ")
+    (subCtes :+ s"codes AS MATERIALIZED (\n  SELECT r.*, $codeCols FROM $rows r $joins)")
+      .mkString(",\n")
+  }
+
+  /** [[adcTopK]]'s twin: over `pairs`, a FROM clause that yields code
+    * rows `c` and queries `p` carrying slices qs0..qs{m-1}, the explicit
+    * left-associative ADC chain against the `s{s}c$rounds` codebooks, the
+    * (adc, pid) shortlist, and [[Ivf.cosineTopKSql]] over the `base` and
+    * `q` CTEs. */
+  private[llm] def adcTopKSql(pairs: String, m: Int, rounds: Int, subDim: Int,
+                              rerank: Int, dim: Int, kTop: Int): String = {
+    val cbJoins = (0 until m)
+      .map(s => s"JOIN s${s}c$rounds cb$s ON c.c$s = cb$s.cell").mkString("\n  ")
+    val adc = (0 until m).map(s => Ivf.d2Sql(subDim)(s"p.qs$s", s"cb$s.cv")).mkString(" + ")
+    s"""scored AS MATERIALIZED (
+       |  SELECT p.qid, c.pid, ($adc) AS adc
+       |  FROM $pairs
        |  $cbJoins),
        |short AS MATERIALIZED (
        |  SELECT qid, pid FROM (
        |    SELECT qid, pid,
        |           row_number() OVER (PARTITION BY qid ORDER BY adc, pid) AS rn
-       |    FROM scored) WHERE rn <= $rerank),
-       |rer AS (
-       |  SELECT s.qid AS query_id, s.pid AS id, ${Ivf.cosSql(dim)("b.pv", "q.qv")} AS sc
-       |  FROM short s JOIN base b ON s.pid = b.pid JOIN q ON s.qid = q.qid)
-       |SELECT query_id, id,
-       |       row_number() OVER (PARTITION BY query_id ORDER BY sc DESC, id) AS rank,
-       |       floor(sc * 10000 + 0.5) / 10000.0 AS sim
-       |FROM rer QUALIFY rank <= $kTop
-       |ORDER BY query_id, rank""".stripMargin
+       |    FROM scored) WHERE rn <= $rerank)
+       |${Ivf.cosineTopKSql("short s JOIN base a ON s.pid = a.pid JOIN q p ON s.qid = p.qid", dim, kTop)}""".stripMargin
   }
 }

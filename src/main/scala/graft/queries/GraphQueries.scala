@@ -85,7 +85,10 @@ object GraphQueries {
     // the supplier-sized edge set fits the broadcast budget, so a driver
     // union-find finishes it; above the budget, O(log n) large-star/
     // small-star rounds); oracle = the dd6-style recursive-CTE transitive
-    // closure over the same edges ----
+    // closure over the same edges. At the sf0.1 bench scale no edge
+    // reaches p >= 0.05 (every supplier is its own component), so the
+    // query's bench time there is `transitionMatrix` alone and measures
+    // nothing of the components code ----
     QueryDef("g3_strong_components",
       (s, d) => {
         val edges = Graph.transitionMatrix(edgesMemo(s, d))

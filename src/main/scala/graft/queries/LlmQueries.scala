@@ -83,26 +83,9 @@ object LlmQueries {
     * per pass, whichever rider comes first). */
   private def ivfPortableTopK(s: SparkSession, d: String): DataFrame =
     QueryMemo.frame(s, d, "sim_ivf_topk") {
-    val (cent, assigned) = Ivf.portableQuantizer(
-      t(s, d, "embeddings"), "vec_id", "embedding", k = 8, rounds = 4)
-    val w = org.apache.spark.sql.expressions.Window
-    val q = assigned.filter(col("pid") < 3)
-      .select(col("pid").as("qid"), col("pv").as("qv"))
-    val probed = q.crossJoin(broadcast(cent))
-      .withColumn("csim", Similarity.cosine(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(
-        w.partitionBy("qid").orderBy(desc("csim"), asc("cell"))))
-      .filter(col("rn") <= 2)
-      .select(col("qid"), col("qv"), col("cell"))
-    assigned.join(broadcast(probed), "cell")
-      .withColumn("s", Similarity.cosine(col("pv"), col("qv")))
-      .withColumn("rank", row_number().over(
-        w.partitionBy("qid").orderBy(desc("s"), asc("pid"))))
-      .filter(col("rank") <= 10)
-      .select(col("qid").as("query_id"), col("pid").as("id"), col("rank"),
-        (floor(col("s") * 10000 + 0.5) / 10000.0).as("sim"))
-      .orderBy("query_id", "rank")
-  }
+      Ivf.portableTopK(t(s, d, "embeddings"), "vec_id", "embedding",
+        k = 8, rounds = 4, nQueries = 3, nProbes = 2, kTop = 10)
+    }
 
   private val sim5bOracleSql: String =
     Ivf.portableOracleSql("embeddings", "vec_id", "embedding",
@@ -1697,11 +1680,13 @@ object LlmQueries {
     // oracles. sim8 keeps the MLlib production path. ----
     QueryDef("sim8b_ivfadc_portable",
       (s, d) => Ivfadc.portableTopK(t(s, d, "embeddings"), "vec_id", "embedding",
+        train = lit(true), query = col("vec_id") < 3,
         kCoarse = 8, coarseRounds = 3, m = 4, k = 16, pqRounds = 3, dim = 64,
-        nQueries = 3, nProbes = 3, rerank = 50, kTop = 10),
+        nProbes = 3, rerank = 50, kTop = 10),
       Some(Ivfadc.portableOracleSql("embeddings", "vec_id", "embedding",
+        trainSql = "true", querySql = "pid < 3",
         kCoarse = 8, coarseRounds = 3, m = 4, k = 16, pqRounds = 3, dim = 64,
-        nQueries = 3, nProbes = 3, rerank = 50, kTop = 10))),
+        nProbes = 3, rerank = 50, kTop = 10))),
 
     // ---- incremental ANN ingest (dd20/dd22's posture lifted to the ANN
     // family): quantizers train ONLY on the held corpus, the new batch
@@ -1711,14 +1696,17 @@ object LlmQueries {
     // retraining on ingest would shift centroids and fail the oracle,
     // so the add-after-train contract itself is what the hash pins. ----
     QueryDef("sim9_incremental_ann",
-      (s, d) => Ivfadc.portableTopKIncremental(t(s, d, "embeddings"),
-        "vec_id", "embedding", isNew = col("vec_id") % 11 === 3,
+      (s, d) => {
+        val isNew = col("vec_id") % 11 === 3
+        Ivfadc.portableTopK(t(s, d, "embeddings"), "vec_id", "embedding",
+          train = !isNew, query = isNew && col("vec_id") % 55 === 3,
+          kCoarse = 8, coarseRounds = 3, m = 4, k = 16, pqRounds = 3, dim = 64,
+          nProbes = 3, rerank = 50, kTop = 10)
+      },
+      Some(Ivfadc.portableOracleSql("embeddings", "vec_id", "embedding",
+        trainSql = "NOT (pid % 11 = 3)", querySql = "pid % 11 = 3 AND pid % 55 = 3",
         kCoarse = 8, coarseRounds = 3, m = 4, k = 16, pqRounds = 3, dim = 64,
-        queryFilter = col("vec_id") % 55 === 3, nProbes = 3, rerank = 50, kTop = 10),
-      Some(Ivfadc.portableIncrementalOracleSql("embeddings", "vec_id", "embedding",
-        newSql = "pid % 11 = 3", kCoarse = 8, coarseRounds = 3, m = 4, k = 16,
-        pqRounds = 3, dim = 64, querySql = "pid % 55 = 3", nProbes = 3,
-        rerank = 50, kTop = 10))),
+        nProbes = 3, rerank = 50, kTop = 10))),
 
     // ---- similarity: embedding cosine near-dup pairs (rows-only).
     // Threshold 0.4: this corpus's max pairwise cosine is ~0.51, so higher

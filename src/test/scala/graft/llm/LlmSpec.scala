@@ -180,12 +180,12 @@ class LlmSpec extends SparkSpecBase {
   test("portable IVF quantizer: deterministic across partitionings, balanced, usable recall") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val k = 8
-    val (cent, assigned) = Ivf.portableQuantizer(emb, "vec_id", "embedding", k, rounds = 4)
+    val (_, assigned) = Ivf.portableQuantizer(emb, "vec_id", "embedding", k, rounds = 4)
     val a1 = assigned.select("pid", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     // partition-independence: the exact same assignment from a reshuffled
     // input (the property the 6dp centroid rounding exists to guarantee)
-    val (c2, assigned2) = Ivf.portableQuantizer(
+    val (_, assigned2) = Ivf.portableQuantizer(
       emb.repartition(7, col("vec_id")), "vec_id", "embedding", k, rounds = 4)
     val a2 = assigned2.select("pid", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -197,23 +197,14 @@ class LlmSpec extends SparkSpecBase {
     assert(sizes.values.max < a1.size, "degenerate single-cell clustering")
     // probing 2/8 cells finds the query itself and a usable share of the
     // true neighbors (the quantizer is a real quantizer, not a hash)
-    val q = assigned.filter(col("pid") < 5)
-      .select(col("pid").as("qid"), col("pv").as("qvec"))
+    val q = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
         q, "qid", "qvec", 5)
       .select("query_id", "id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val w = org.apache.spark.sql.expressions.Window
-    val probed = q.crossJoin(broadcast(cent))
-      .withColumn("csim", Similarity.cosine(col("qvec"), col("cv")))
-      .withColumn("rn", row_number().over(
-        w.partitionBy("qid").orderBy(desc("csim"), asc("cell"))))
-      .filter(col("rn") <= 2).select(col("qid"), col("qvec"), col("cell"))
-    val approx = assigned.join(broadcast(probed), "cell")
-      .withColumn("s", Similarity.cosine(col("pv"), col("qvec")))
-      .withColumn("rank", row_number().over(
-        w.partitionBy("qid").orderBy(desc("s"), asc("pid"))))
-      .filter(col("rank") <= 5)
-      .select(col("qid"), col("pid")).collect()
+    val approx = Ivf.portableTopK(emb, "vec_id", "embedding", k, rounds = 4,
+        nQueries = 5, nProbes = 2, kTop = 5)
+      .select("query_id", "id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert((0L until 5L).forall(i => approx.contains((i, i))), "query must find itself")
     val recall = (exact intersect approx).size.toDouble / exact.size
@@ -262,8 +253,9 @@ class LlmSpec extends SparkSpecBase {
       .select("query_id", "id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def run(corpus: org.apache.spark.sql.DataFrame) =
       Ivfadc.portableTopK(corpus, "vec_id", "embedding",
+        train = lit(true), query = col("vec_id") < 3,
         kCoarse = 8, coarseRounds = 3, m = 4, k = 16, pqRounds = 3, dim = 64,
-        nQueries = 3, nProbes = 3, rerank = 50, kTop = 5)
+        nProbes = 3, rerank = 50, kTop = 5)
     val out = run(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
     val approx = out.map(t => (t._1, t._2)).toSet
@@ -376,10 +368,10 @@ class LlmSpec extends SparkSpecBase {
       .select((col("vec_id") + 1000).as("vec_id"), col("embedding"))
     val df = emb.unionByName(newDocs)
     def run(input: org.apache.spark.sql.DataFrame) =
-      Ivfadc.portableTopKIncremental(input, "vec_id", "embedding",
-        isNew = col("vec_id") >= 1000,
+      Ivfadc.portableTopK(input, "vec_id", "embedding",
+        train = col("vec_id") < 1000, query = col("vec_id") >= 1000,
         kCoarse = 8, coarseRounds = 3, m = 4, k = 16, pqRounds = 3, dim = 64,
-        queryFilter = lit(true), nProbes = 3, rerank = 50, kTop = 5)
+        nProbes = 3, rerank = 50, kTop = 5)
     val out = run(df).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
     for (i <- 0L until 3L) {
@@ -1853,8 +1845,7 @@ class LlmSpec extends SparkSpecBase {
     val subDim = 16
     val sliced = emb.select(col("vec_id").cast("long").as("pid"),
       transform(slice(col("embedding"), 1, subDim), _.cast("double")).as("sv"))
-    val cents = Ivf.collectCentroids(
-      Ivf.portableCentroids(sliced, "pid", "sv", k = 16, rounds = 2))
+    val cents = Ivf.portableCentroids(sliced, "pid", "sv", k = 16, rounds = 2)
     // routing: the registry codebook (16x16 = 256 literals) stays inline;
     // a FAISS-typical 256x17 (4352 > budget) must take the folded path
     assert(16L * subDim <= Ivf.pqInlineLiteralBudget)

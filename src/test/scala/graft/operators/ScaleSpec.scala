@@ -338,14 +338,21 @@ class ScaleSpec extends SparkSpecBase {
       // broadcast centroid literals — no assignment join), BNLJ ×2 = the
       // k-row centroid/codebook broadcasts, BHJ = LUT/rerank joins
       "sim8_ivfadc_ann" -> "3/3/0/2/p",
-      // sim8b: both portable Lloyd's tiers + probe + ADC + rerank; the
-      // exchanges are the per-round argmin aggregates, every join a
-      // broadcast of model-sized state
-      "sim8b_ivfadc_portable" -> "4/7/0/1/-", // r14 join-free PQ codes
-      // sim9 (incremental IVFADC, r12): train-slice Lloyd's + FROZEN
-      // argmin assigns of all rows (the extra BNLJs are the k-row
-      // centroid broadcasts of the frozen-assign crossJoins — bounded)
-      "sim9_incremental_ann" -> "4/7/0/1/-", // r14 join-free PQ codes
+      // sim8b and sim9 run one body (Ivfadc.portableTopK; sim8b trains
+      // on every row, sim9 on the held corpus): the Lloyd's rounds, the
+      // frozen coarse and subspace assignments are checkpointed literal-
+      // centroid projections, so the tail is the probe (BNLJ against the
+      // k-row centroid table, its qid window exchange), the probed-cell
+      // BHJ, the ADC shortlist window, the two rerank BHJs back to the
+      // vectors and the queries, and the output sort. ADC reads each
+      // code's centroid from the codebook literal, so there are no
+      // codebook joins (4 BHJs fewer). The row checkpoint is projected
+      // straight from the parquet scan, whose size estimate lets the
+      // planner broadcast it to the rerank join; the former estimate,
+      // taken through a join, planned a sort-merge join that AQE turned
+      // into a broadcast, leaving its pid shuffle behind (1 exchange fewer)
+      "sim8b_ivfadc_portable" -> "3/3/0/1/-",
+      "sim9_incremental_ann" -> "3/3/0/1/-",
       // sim7 (ADC, r11): codes-table scan + the 3-row broadcast query
       // BNLJ; the BHJs are the rerank id-joins back to the float vectors
       "sim7_sq_ann" -> "2/2/0/1/p",
